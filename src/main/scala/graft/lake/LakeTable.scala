@@ -508,50 +508,45 @@ class LakeTable private (spark: SparkSession, val path: String) {
     * rewrite set is still bounded by the source's key range, so the
     * stats pruning is identical to the plain upsert — at 100 TB a
     * mixed merge touches the overlapping files, not the table.
+    * Every key-range candidate is rewritten WITHOUT a hit probe: the
+    * probe would cost a Spark job to spare only the candidates that
+    * hold no source key.
     */
   def merge(updates: DataFrame, keyCol: String,
       deleteWhen: Option[Column]): Int = {
     val v = currentVersion
     val base = manifest(v)
     requireSameSchema(updates.schema, base)
-    val schema = base.schema
-    val inKeyRange = mergeKeyRange(updates, keyCol, base)
-    val (candidates, untouched) = base.files.partition(inKeyRange)
-    val cols = schema.fieldNames.map(col).toSeq
-    val candData = readEntries(candidates, base)
-    // surviving source rows: everything (upsert), or minus the MATCHED
-    // delete-arm rows (their targets vanish via the anti-join below).
-    // SQL MERGE scopes the delete arm to matched rows — an unmatched
-    // delete-arm row falls through to the insert clause — and treats a
-    // NULL `WHEN MATCHED AND cond` as NOT matching the arm, so a
-    // NULL-condition row must survive (= be updated/inserted), not be
-    // silently deleted — hence the coalesce to false before negating.
-    // Matched ⊆ candidates by construction (a file holding a source key
-    // overlaps the source key range), so the match probe anti-joins the
-    // delete-arm subset against the candidate data only.
-    val surviving = deleteWhen match {
-      case Some(cond) =>
-        val delArm = updates.filter(coalesce(cond, lit(false)))
-        val unmatchedDelArm = delArm.join(
-          candData.select(col(keyCol).as("_tgt_key")),
-          col(keyCol) === col("_tgt_key"), "left_anti")
-        updates.filter(!coalesce(cond, lit(false)))
-          .unionByName(unmatchedDelArm.select(cols: _*))
-      case None => updates
-    }
-    val merged = candData
-      .join(updates.select(col(keyCol).as("_upd_key")),
-        col(keyCol) === col("_upd_key"), "left_anti")
-      .select(cols: _*)
-      .unionByName(surviving.select(cols: _*))
-    val staged = stageFiles(merged, base)
-    // constraints gate the staged OUTPUT (rewritten survivors were
-    // proven at their own write time, so this stays delta-bounded);
-    // commitMutation conflicts outright if checks change concurrently
-    enforceChecks(staged, base)
-    // optimistic rebase: a concurrent append/mutation lands too unless
-    // its files could contain keys in this merge's key range
-    commitMutation(v, base, "merge", candidates, staged, inKeyRange)
+    val cols = base.schema.fieldNames.map(col).toSeq
+    changeRows("merge", v, base, mergeKeyRange(updates, keyCol, base),
+      mor = false, hits = None, always = true, output = { candidates =>
+        val candData = readEntries(candidates, base)
+        // surviving source rows: everything (upsert), or minus the MATCHED
+        // delete-arm rows (their targets vanish via the anti-join below).
+        // SQL MERGE scopes the delete arm to matched rows — an unmatched
+        // delete-arm row falls through to the insert clause — and treats a
+        // NULL `WHEN MATCHED AND cond` as NOT matching the arm, so a
+        // NULL-condition row must survive (= be updated/inserted), not be
+        // silently deleted — hence the coalesce to false before negating.
+        // Matched ⊆ candidates by construction (a file holding a source key
+        // overlaps the source key range), so the match probe anti-joins the
+        // delete-arm subset against the candidate data only.
+        val surviving = deleteWhen match {
+          case Some(cond) =>
+            val delArm = updates.filter(coalesce(cond, lit(false)))
+            val unmatchedDelArm = delArm.join(
+              candData.select(col(keyCol).as("_tgt_key")),
+              col(keyCol) === col("_tgt_key"), "left_anti")
+            updates.filter(!coalesce(cond, lit(false)))
+              .unionByName(unmatchedDelArm.select(cols: _*))
+          case None => updates
+        }
+        Some(candData
+          .join(updates.select(col(keyCol).as("_upd_key")),
+            col(keyCol) === col("_upd_key"), "left_anti")
+          .select(cols: _*)
+          .unionByName(surviving.select(cols: _*)))
+      })
   }
 
   /** Fully general SQL MERGE semantics over the lake table — the shape
@@ -694,9 +689,8 @@ class LakeTable private (spark: SparkSession, val path: String) {
           }.as(c)
         }: _*)
 
-      val staged = stageFiles(replaced.unionByName(inserts), base)
-      enforceChecks(staged, base)
-      commitMutation(v, base, "merge", consumed, staged, _ => true)
+      commitChange("merge", v, base, _ => true, consumed,
+        rows = Some(replaced.unionByName(inserts)))
     } finally {
       j.unpersist(blocking = false)
       // src is localCheckpoint'ed, not cached: its blocks are reclaimed
@@ -725,49 +719,22 @@ class LakeTable private (spark: SparkSession, val path: String) {
     else renamed.toDF((m.schema.fieldNames :+ "_gfile" :+ "_gpos").toIndexedSeq: _*)
   }
 
-  /** Delete the rows matching `cond`, rewriting ONLY the files that
-    * contain at least one matching row. The match probe (a single
-    * `input_file_name()` aggregation) scans only CANDIDATE files —
-    * when `cond`'s conjuncts bound a stats column
-    * ([[LakeFileIndex.boundsOf]], the same translation the Catalyst
-    * scan path uses), files whose [min,max] cannot overlap are skipped
-    * without being read, so a point delete probes the touched handful,
-    * not the snapshot. Unsupported predicate shapes fall back to
-    * probing everything (conservative). A touched file whose rows all
-    * match is dropped without a rewrite.
+  /** DELETE the rows matching `cond`, copy-on-write: every file holding
+    * a matching row is rewritten with its surviving rows only (a NULL
+    * condition keeps the row, per SQL DELETE), and a touched file whose
+    * rows all match drops out without a rewrite. A point delete probes
+    * and rewrites the touched handful of files, not the snapshot.
     */
-  def deleteWhere(cond: Column): Int = {
-    val v = currentVersion
-    val base = manifest(v)
-    if (base.files.isEmpty) return v
-    val bounds = deleteBounds(base, cond, base.schema)
-    val candidates = statsCandidates(base, bounds)
-    if (candidates.isEmpty) return v
-    val touchedNames = liveRows(candidates, base).filter(cond)
-      .select(col("_gf_file")).distinct()
-      .collect().map(_.getString(0)).toSet
-    if (touchedNames.isEmpty) return v
-    val (touched, untouched) = base.files.partition(f => touchedNames(f.name))
-    // NULL conditions keep the row (SQL DELETE removes cond=TRUE only)
-    val kept = readEntries(touched, base).filter(!coalesce(cond, lit(false)))
-    val staged = if (kept.isEmpty) Seq.empty else stageFiles(kept, base)
-    // rebase over concurrent writes whose files cannot match `cond`
-    commitMutation(v, base, "delete", touched, staged,
-      f => bounds.forall { case (c, (lo, hi)) =>
-        f.overlaps(base.physOf(c), lo, hi) })
-  }
+  def deleteWhere(cond: Column): Int =
+    changeWhere("delete", mor = false, cond, None)
 
   /** Atomic filtered overwrite (replaceWhere — the semantics of
     * `df.writeTo(t).overwrite(cond)` / INSERT OVERWRITE with a
     * predicate): ONE commit that removes every row matching `cond` and
-    * adds `df`. Sharing [[deleteWhere]]'s stats-pruned candidate probe
-    * keeps the rewrite set bounded to files that actually contain a
-    * matching row; surviving rows of touched files are re-staged
-    * together with the new data, untouched files carry by reference.
-    * Two separate delete+append commits would expose a window where the
-    * partition is empty — this is the atomic form a partition-overwrite
-    * ETL needs. Rebase rule matches deleteWhere: a concurrent append
-    * whose stats cannot overlap `cond` lands without conflict.
+    * adds `df` — [[deleteWhere]]'s copy-on-write rewrite with `df`
+    * staged alongside the survivors. Two separate delete+append commits
+    * would expose a window where the partition is empty — this is the
+    * atomic form a partition-overwrite ETL needs.
     */
   def replaceWhere(cond: Column, df: DataFrame): Int = {
     val v = currentVersion
@@ -777,24 +744,10 @@ class LakeTable private (spark: SparkSession, val path: String) {
       s"replaceWhere data must carry the table schema " +
         s"(${base.schema.fieldNames.mkString(", ")})")
     val newData = df.select(base.schema.fieldNames.toIndexedSeq.map(col): _*)
-    val bounds = deleteBounds(base, cond, base.schema)
-    val candidates = statsCandidates(base, bounds)
-    val touchedNames =
-      if (candidates.isEmpty) Set.empty[String]
-      else liveRows(candidates, base).filter(cond)
-        .select(col("_gf_file")).distinct()
-        .collect().map(_.getString(0)).toSet
-    val touched = base.files.filter(f => touchedNames(f.name))
-    // NULL conditions keep the row, like deleteWhere
-    val kept =
-      if (touched.isEmpty) newData
-      else readEntries(touched, base).filter(!coalesce(cond, lit(false)))
-        .unionByName(newData)
-    val staged = stageFiles(kept, base)
-    enforceChecks(staged, base)
-    commitMutation(v, base, "replaceWhere", touched, staged,
-      f => bounds.forall { case (c, (lo, hi)) =>
-        f.overlaps(base.physOf(c), lo, hi) })
+    changeRows("replaceWhere", v, base, condScope(base, cond), mor = false,
+      Some(_.filter(cond)), always = true, output = touched => Some(
+        if (touched.isEmpty) newData
+        else survivors(touched, base, cond).unionByName(newData)))
   }
 
   /** Dynamic partition overwrite (`df.writeTo(t).overwritePartitions()`,
@@ -811,16 +764,20 @@ class LakeTable private (spark: SparkSession, val path: String) {
     val parts = manifest(currentVersion).partitionBy
     if (parts.isEmpty) return overwrite(df)
     val data = df.cache()
-    try {
-      val tuples = data.select(parts.map(col): _*).distinct().collect()
-      val cond = tuples.map { r =>
-        parts.zipWithIndex.map { case (p, i) =>
-          if (r.isNullAt(i)) col(p).isNull else col(p) === lit(r.get(i))
-        }.reduce(_ && _)
-      }.reduceOption(_ || _).getOrElse(lit(false))
-      replaceWhere(cond, data)
-    } finally data.unpersist(blocking = false)
+    try replaceWhere(partitionsCond(parts,
+      data.select(parts.map(col): _*).distinct().collect()), data)
+    finally data.unpersist(blocking = false)
   }
+
+  /** The condition matching exactly the given partition-column tuples
+    * (a NULL tuple value matches NULL); no tuples match nothing.
+    */
+  private def partitionsCond(parts: Seq[String], tuples: Array[Row]): Column =
+    tuples.map { r =>
+      parts.zipWithIndex.map { case (p, i) =>
+        if (r.isNullAt(i)) col(p).isNull else col(p) === lit(r.get(i))
+      }.reduce(_ && _)
+    }.reduceOption(_ || _).getOrElse(lit(false))
 
   /** Native v2 BatchWrite landing for dynamic partition overwrite:
     * adopt files the executor-side DataWriters already wrote into
@@ -850,204 +807,195 @@ class LakeTable private (spark: SparkSession, val path: String) {
     LakeTable.deleteRecursively(Paths.get(stagingDir))
     val staged = LakeTable.entriesFor(spark, path, named, base.statsCols)
     enforceChecks(staged, base)
-    if (base.partitionBy.isEmpty)
-      // unpartitioned: dynamic degrades to a full overwrite, matching
-      // Spark's session-config dynamic semantics (and overwrite())
-      return commitMutation(v, base, "overwrite-dynamic", base.files,
-        staged, _ => true)
     val parts = base.partitionBy
     val tuples =
-      if (named.isEmpty) Array.empty[Row]
+      if (parts.isEmpty || named.isEmpty) Array.empty[Row]
       else spark.read.parquet(named.map(n => s"$path/$n"): _*)
         .select(parts.map(col): _*).distinct().collect()
-    val cond = tuples.map { r =>
-      parts.zipWithIndex.map { case (p, i) =>
-        if (r.isNullAt(i)) col(p).isNull else col(p) === lit(r.get(i))
-      }.reduce(_ && _)
-    }.reduceOption(_ || _).getOrElse(lit(false))
-    val bounds = deleteBounds(base, cond, base.schema)
-    val candidates = statsCandidates(base, bounds)
-    val touchedNames =
-      if (candidates.isEmpty || tuples.isEmpty) Set.empty[String]
-      else liveRows(candidates, base).filter(cond)
-        .select(col("_gf_file")).distinct()
-        .collect().map(_.getString(0)).toSet
-    val touched = base.files.filter(f => touchedNames(f.name))
-    val kept =
-      if (touched.isEmpty) Seq.empty
-      else {
-        val k = readEntries(touched, base).filter(!coalesce(cond, lit(false)))
-        if (k.isEmpty) Seq.empty else stageFiles(k, base)
-      }
-    commitMutation(v, base, "overwrite-dynamic", touched, staged ++ kept,
-      f => bounds.forall { case (c, (lo, hi)) =>
-        f.overlaps(base.physOf(c), lo, hi) })
+    val cond = partitionsCond(parts, tuples)
+    // unpartitioned: dynamic degrades to a full overwrite (every file
+    // consumed unprobed), matching Spark's session-config dynamic
+    // semantics and overwrite(); no data tuples replace no partition
+    val scope: FileEntry => Boolean =
+      if (parts.isEmpty) _ => true
+      else if (tuples.isEmpty) _ => false
+      else condScope(base, cond)
+    changeRows("overwrite-dynamic", v, base, scope, mor = false,
+      if (parts.isEmpty) None else Some(_.filter(cond)),
+      adopted = staged, checkOutput = false, always = true,
+      output = touched =>
+        if (parts.isEmpty || touched.isEmpty) None
+        else Some(survivors(touched, base, cond)))
   }
 
-  /** UPDATE ... SET ... WHERE: copy-on-write rewrite of ONLY the files
-    * that contain at least one matching row, sharing [[deleteWhere]]'s
-    * stats-pruned candidate probe. Matching rows get each `set` column
-    * replaced (cast to the column's type); NULL conditions leave the
-    * row unchanged, per SQL UPDATE semantics. CHECK constraints gate
-    * the rewritten output. At 100 TB a point update rewrites the
-    * touched handful of files, not the table.
+  /** UPDATE ... SET ... WHERE, copy-on-write: every file holding a
+    * matching row is rewritten with each `set` column replaced (cast to
+    * the column's type) on the matching rows; a NULL condition leaves
+    * the row unchanged, per SQL UPDATE. CHECK constraints gate the
+    * rewritten output.
     */
   def updateWhere(cond: Column, set: Map[String, Column]): Int = {
     require(set.nonEmpty, "updateWhere needs at least one SET column")
-    val v = currentVersion
-    val base = manifest(v)
-    if (base.files.isEmpty) return v
-    val schema = base.schema
-    set.keys.foreach(c => require(schema.fieldNames.contains(c),
-      s"no such column: $c"))
-    val bounds = deleteBounds(base, cond, schema)
-    val candidates = statsCandidates(base, bounds)
-    if (candidates.isEmpty) return v
-    val touchedNames = liveRows(candidates, base).filter(cond)
-      .select(col("_gf_file")).distinct()
-      .collect().map(_.getString(0)).toSet
-    if (touchedNames.isEmpty) return v
-    val touched = base.files.filter(f => touchedNames(f.name))
-    // when() treats a NULL condition as its otherwise branch — exactly
-    // the keep-the-row semantics SQL UPDATE wants
-    val rewritten = readEntries(touched, base).select(schema.fields.map { f =>
-      set.get(f.name)
-        .map(e => when(cond, e.cast(f.dataType)).otherwise(col(f.name)).as(f.name))
-        .getOrElse(col(f.name))
-    }.toIndexedSeq: _*)
-    val staged = stageFiles(rewritten, base)
-    enforceChecks(staged, base)
-    commitMutation(v, base, "update", touched, staged,
-      f => bounds.forall { case (c, (lo, hi)) =>
-        f.overlaps(base.physOf(c), lo, hi) })
+    changeWhere("update", mor = false, cond, Some(set))
   }
 
-  /** Merge-on-read DELETE: instead of copy-on-write rewriting every
-    * file that contains a matching row ([[deleteWhere]]), record the
-    * matching ROW POSITIONS in a deletion-vector sidecar and commit a
-    * manifest whose touched entries reference it — the Delta
-    * deletion-vectors trade. No data file is rewritten; every read path
-    * (read / scan / prunedRead / merge / changesBetween / compact)
-    * masks the recorded positions via an anti-join on
-    * (file, `_metadata.row_index`). At 100 TB this turns a point delete
-    * from rewriting N×1 GB files into writing one KB-scale sidecar; the
-    * read-side cost is a broadcast anti-join against the (small) live
-    * DV set, reclaimed the next time compaction rewrites the file.
-    * Candidate files are stats-pruned exactly like the CoW delete; a
-    * file whose every row ends up masked is dropped from the manifest
-    * outright.
+  /** Merge-on-read DELETE: the matching ROW POSITIONS are recorded in a
+    * deletion-vector sidecar and no data file is rewritten; every read
+    * path (read / scan / prunedRead / merge / changesBetween / compact)
+    * masks them via an anti-join on (file, `_metadata.row_index`). At
+    * 100 TB this turns a point delete from rewriting N×1 GB files into
+    * writing one KB-scale sidecar; reads pay a broadcast anti-join
+    * against the (small) live DV set until [[purgeDeletes]] or
+    * compaction rewrites the file.
     */
-  def deleteWhereMoR(cond: Column): Int = {
-    val v = currentVersion
-    val base = manifest(v)
-    if (base.files.isEmpty) return v
-    val bounds = deleteBounds(base, cond, base.schema)
-    val candidates = statsCandidates(base, bounds)
-    if (candidates.isEmpty) return v
-    val hits = liveRows(candidates, base).filter(cond)
-      .select(col("_gf_file"), col("_gf_pos"))
-    writeDvSidecar(hits) match {
-      case None => v
-      case Some((sidecar, perFile)) =>
-        val (touched, masked) = maskEntries(base.files, sidecar, perFile)
-        // rebase over concurrent writes whose files cannot match `cond`
-        commitMutation(v, base, "delete-mor", touched, masked,
-          f => bounds.forall { case (c, (lo, hi)) =>
-            f.overlaps(base.physOf(c), lo, hi) })
-    }
-  }
+  def deleteWhereMoR(cond: Column): Int =
+    changeWhere("delete-mor", mor = true, cond, None)
 
-  /** Merge-on-read UPDATE: the deletion-vector twin of [[updateWhere]].
-    * The matching rows are DV-masked IN PLACE and their rewritten
-    * versions appended as a delta file — one atomic commit, ZERO data
-    * files rewritten (the post-update manifest references every
-    * pre-update file, DV sidecars aside). At 100 TB a point UPDATE then
-    * costs one KB-scale sidecar plus a delta file the size of the
-    * touched rows, instead of rewriting each touched GB-scale file;
-    * reads pay the same broadcast anti-join the MoR delete already
-    * costs, repaid when [[purgeDeletes]] or compaction retires the
-    * sidecars. Candidate stats-probing, NULL-condition semantics (the
-    * row is untouched), CHECK gating of the rewritten output and the
-    * optimistic append rebase are identical to the copy-on-write
-    * [[updateWhere]].
+  /** Merge-on-read UPDATE: the matching rows are DV-masked IN PLACE and
+    * only their updated versions are appended as a delta file — ZERO
+    * data files rewritten. A point UPDATE costs one KB-scale sidecar
+    * plus a delta the size of the touched rows, instead of rewriting
+    * each touched GB-scale file.
     */
   def updateWhereMoR(cond: Column, set: Map[String, Column]): Int = {
     require(set.nonEmpty, "updateWhereMoR needs at least one SET column")
-    val v = currentVersion
-    val base = manifest(v)
-    if (base.files.isEmpty) return v
-    val schema = base.schema
-    set.keys.foreach(c => require(schema.fieldNames.contains(c),
-      s"no such column: $c"))
-    val bounds = deleteBounds(base, cond, schema)
-    val candidates = statsCandidates(base, bounds)
-    if (candidates.isEmpty) return v
-    val hits = liveRows(candidates, base).filter(cond)
-      .select(col("_gf_file"), col("_gf_pos"))
-    writeDvSidecar(hits) match {
-      case None => v
-      case Some((sidecar, perFile)) =>
-        try {
-          val (touched, masked) = maskEntries(base.files, sidecar, perFile)
-          // the delta rewrites ONLY the matching rows — every selected
-          // row satisfies `cond` by construction, so SET applies
-          // unconditionally; only the touched files are re-scanned
-          val rewritten = liveRows(touched, base).filter(cond)
-            .select(schema.fields.map { f =>
-              set.get(f.name).map(e => e.cast(f.dataType).as(f.name))
-                .getOrElse(col(f.name))
-            }.toIndexedSeq: _*)
-          val staged = stageFiles(rewritten, base)
-          enforceChecks(staged, base)
-          commitMutation(v, base, "update-mor", touched, masked ++ staged,
-            f => bounds.forall { case (c, (lo, hi)) =>
-              f.overlaps(base.physOf(c), lo, hi) })
-        } catch { case NonFatal(e) =>
-          // a rejected update must not leave the sidecar orphaned until
-          // vacuum (enforceChecks already cleans the staged delta)
-          Files.deleteIfExists(Paths.get(path, sidecar))
-          throw e
-        }
-    }
+    changeWhere("update-mor", mor = true, cond, Some(set))
   }
 
-  /** Merge-on-read MERGE (upsert by `keyCol`): the deletion-vector twin
-    * of [[merge]]. Matched target rows are DV-masked; the ENTIRE source
-    * frame — updated and inserted rows alike — is appended as delta
-    * files, one atomic commit, zero files rewritten. The copy-on-write
-    * merge rewrites every file overlapping the source key range
-    * INCLUDING its unmatched rows; this variant writes O(|source|)
-    * bytes instead — the CDC-ingest shape a 100 TB table wants for
-    * frequent small upserts. Same stats-pruned candidate set, unique-key
-    * source contract, CHECK gating and append-rebase conflict rule as
-    * the CoW merge; the DV read tax is repaid by [[purgeDeletes]].
+  /** Merge-on-read MERGE (upsert by `keyCol`): matched target rows are
+    * DV-masked and the ENTIRE source frame — updated and inserted rows
+    * alike — is appended as delta files, zero files rewritten. The
+    * copy-on-write [[merge]] rewrites every file overlapping the source
+    * key range INCLUDING its unmatched rows; this variant writes
+    * O(|source|) bytes instead — the CDC-ingest shape a 100 TB table
+    * wants for frequent small upserts.
     */
   def mergeMoR(updates: DataFrame, keyCol: String): Int = {
     val v = currentVersion
     val base = manifest(v)
     requireSameSchema(updates.schema, base)
-    val inKeyRange = mergeKeyRange(updates, keyCol, base)
-    val candidates = base.files.filter(inKeyRange)
-    val hits = liveRows(candidates, base)
-      .join(updates.select(col(keyCol).as("_upd_key")),
-        col(keyCol) === col("_upd_key"), "left_semi")
-      .select(col("_gf_file"), col("_gf_pos"))
-    val sidecarOpt = writeDvSidecar(hits)
-    try {
-      val staged = stageFiles(updates, base)
-      enforceChecks(staged, base)
-      sidecarOpt match {
-        case None => // pure insert: nothing matched, nothing masked
-          commitMutation(v, base, "merge-mor", Nil, staged, inKeyRange)
-        case Some((sidecar, perFile)) =>
-          val (touched, masked) = maskEntries(base.files, sidecar, perFile)
-          commitMutation(v, base, "merge-mor", touched, masked ++ staged,
-            inKeyRange)
+    changeRows("merge-mor", v, base, mergeKeyRange(updates, keyCol, base),
+      mor = true, always = true, output = _ => Some(updates),
+      hits = Some(_.join(updates.select(col(keyCol).as("_upd_key")),
+        col(keyCol) === col("_upd_key"), "left_semi")))
+  }
+
+  /** DELETE (`set` None) or UPDATE of the rows where `cond` is TRUE, in
+    * either mode: `cond`'s stats bounds scope the change and `cond`
+    * picks the hit rows. A NULL condition keeps the row unchanged, per
+    * SQL.
+    */
+  private def changeWhere(op: String, mor: Boolean, cond: Column,
+      set: Option[Map[String, Column]]): Int = {
+    val v = currentVersion
+    val base = manifest(v)
+    val schema = base.schema
+    set.foreach(_.keys.foreach(c =>
+      require(schema.fieldNames.contains(c), s"no such column: $c")))
+    // when() sends a NULL condition to its otherwise branch: the row stays
+    def updated(rows: DataFrame): DataFrame = rows.select(schema.fields.map { f =>
+      set.flatMap(_.get(f.name))
+        .map(e => when(cond, e.cast(f.dataType)).otherwise(col(f.name)).as(f.name))
+        .getOrElse(col(f.name))
+    }.toIndexedSeq: _*)
+    changeRows(op, v, base, condScope(base, cond), mor, Some(_.filter(cond)),
+      checkOutput = set.isDefined, output = touched =>
+        if (set.isEmpty) { if (mor) None else Some(survivors(touched, base, cond)) }
+        // MoR appends the matching rows only, CoW rewrites whole files
+        else Some(updated(
+          if (mor) liveRows(touched, base).filter(cond) else readEntries(touched, base))))
+  }
+
+  /** The row-level change core: DELETE, UPDATE, MERGE and the filtered
+    * overwrites, copy-on-write (CoW) and merge-on-read (MoR) alike, run
+    * the Delta Lake sequence here.
+    *
+    *  1. '''Scope.''' `scope` — a condition's stats bounds
+    *     ([[condScope]]) or a merge's key range ([[mergeKeyRange]]) —
+    *     selects the candidate files from manifest stats, reading no
+    *     data. It is also the rebase conflict predicate handed to
+    *     [[commitMutation]]: a file outside the scope can neither hold a
+    *     hit row nor invalidate the change.
+    *  2. '''Locate.''' `hits` picks the hit rows out of the candidates'
+    *     live rows ([[liveRows]]). CoW collects the names of the files
+    *     holding them; MoR writes their (file, position) pairs as ONE
+    *     deletion-vector sidecar ([[writeDvSidecar]], [[maskEntries]]).
+    *     `hits = None` touches every candidate unprobed (CoW only).
+    *  3. '''Apply.''' `output(touched)` is the rows to stage. CoW: the
+    *     touched files' new contents, replacing them. MoR: the appended
+    *     delta; the touched files stay, masked by the sidecar.
+    *  4. '''Stage, check, commit, clean up:''' [[commitChange]].
+    *
+    * A change that touches no file is a no-op returning `v`, unless it
+    * adds rows regardless (`always`: merge, replaceWhere, dynamic
+    * overwrite). `adopted` are data files the caller already wrote and
+    * CHECK-gated; they commit with the change. `checkOutput = false`
+    * skips the CHECK gate for an output of already-proven rows (a
+    * delete's survivors).
+    */
+  private def changeRows(op: String, v: Int, base: Manifest,
+      scope: FileEntry => Boolean, mor: Boolean,
+      hits: Option[DataFrame => DataFrame],
+      output: Seq[FileEntry] => Option[DataFrame],
+      adopted: Seq[FileEntry] = Nil, checkOutput: Boolean = true,
+      always: Boolean = false): Int = {
+    val candidates = base.files.filter(scope)
+    val hitRows = if (candidates.isEmpty) None
+      else hits.map(_(liveRows(candidates, base)))
+    val (touched, masked, sidecar) =
+      if (!mor) {
+        val names = hitRows.fold(Set.empty[String])(
+          _.select(col("_gf_file")).distinct().collect().map(_.getString(0)).toSet)
+        (if (hits.isEmpty) candidates else candidates.filter(f => names(f.name)),
+          Nil, None)
+      } else hitRows.flatMap(h =>
+          writeDvSidecar(h.select(col("_gf_file"), col("_gf_pos")))) match {
+        case Some((sc, perFile)) =>
+          val (t, m) = maskEntries(candidates, sc, perFile)
+          (t, m, Some(sc))
+        case None => (Nil, Nil, None)
       }
-    } catch { case NonFatal(e) =>
-      sidecarOpt.foreach { case (sc, _) =>
-        Files.deleteIfExists(Paths.get(path, sc)) }
-      throw e
+    if (touched.isEmpty && !always) v
+    else commitChange(op, v, base, scope, touched, masked ++ adopted,
+      output(touched), checkOutput, adopted.map(_.name) ++ sidecar)
+  }
+
+  /** The tail of [[changeRows]], shared with [[mergeGeneral]]: stage
+    * `rows`, gate them against the CHECK constraints (when `checkRows`),
+    * and commit `consumed` → `kept ++ staged` through [[commitMutation]]
+    * with `scope` as its conflict predicate. A zero-row staged file is
+    * deleted instead of committed, so no caller spends a job probing its
+    * output for emptiness first.
+    *
+    * Cleanup: every file the change wrote — `written` (a DV sidecar,
+    * adopted files) plus the staged ones — is deleted on a failure
+    * known to precede the publish: anything thrown before
+    * [[commitMutation]] is entered (a [[CheckViolationException]]
+    * included), a [[ConcurrentWriteConflictException]] or a
+    * [[ConcurrentCommitException]]. Any other failure inside the commit
+    * may follow the publish, so those files stay for vacuum rather than
+    * risk deleting what a committed manifest references.
+    */
+  private def commitChange(op: String, v: Int, base: Manifest,
+      scope: FileEntry => Boolean, consumed: Seq[FileEntry],
+      kept: Seq[FileEntry] = Nil, rows: => Option[DataFrame] = None,
+      checkRows: Boolean = true, written: Seq[String] = Nil): Int = {
+    var files = written
+    var publishing = false
+    try {
+      val (empty, staged) = rows.fold(Seq.empty[FileEntry])(stageFiles(_, base))
+        .partition(_.rows == 0L)
+      files ++= (empty ++ staged).map(_.name)
+      empty.foreach(f => Files.deleteIfExists(Paths.get(path, f.name)))
+      if (checkRows) enforceChecks(staged, base)
+      publishing = true
+      commitMutation(v, base, op, consumed, kept ++ staged, scope)
+    } catch {
+      case NonFatal(e) if !publishing ||
+          e.isInstanceOf[ConcurrentWriteConflictException] ||
+          e.isInstanceOf[ConcurrentCommitException] =>
+        files.foreach(n => Files.deleteIfExists(Paths.get(path, n)))
+        throw e
     }
   }
 
@@ -1055,35 +1003,35 @@ class LakeTable private (spark: SparkSession, val path: String) {
     * sidecar parquet in the table root (positions are small next to
     * data; a mask wide enough to make this big belongs in the
     * copy-on-write path). Returns the sidecar name and its per-file
-    * masked-row counts; None when nothing matched. The sidecar is dead
-    * data until a manifest references it — a crash here leaves an
-    * orphan for the next vacuum, never a corrupt snapshot.
+    * masked-row counts; None when nothing matched. The counts are read
+    * from the scratch copy, so the sidecar enters the table root only
+    * as the last step. It is dead data until a manifest references
+    * it — a crash here leaves an orphan for the next vacuum, never a
+    * corrupt snapshot.
     */
   private def writeDvSidecar(hits: DataFrame)
       : Option[(String, Map[String, Long])] = {
     val job = UUID.randomUUID().toString.replace("-", "").take(12)
     val scratch = Paths.get(path, s"_staging_dv_$job")
-    hits.coalesce(1).write.mode("overwrite").parquet(scratch.toString)
-    val part = Option(scratch.toFile.list((_, n) =>
-        n.startsWith("part-") && n.endsWith(".parquet")))
-      .getOrElse(Array.empty[String]).sorted.headOption
-    val sidecar = part.map { p =>
-      val target = s"dv-$job.parquet"
-      Files.move(scratch.resolve(p), Paths.get(path, target),
-        StandardCopyOption.ATOMIC_MOVE)
-      target
-    }
-    LakeTable.deleteRecursively(scratch)
-    sidecar.flatMap { sc =>
-      val perFile = spark.read.schema(LakeTable.dvSidecarSchema)
-        .parquet(s"$path/$sc")
-        .groupBy(col("_gf_file")).count()
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      if (perFile.isEmpty) {
-        Files.deleteIfExists(Paths.get(path, sc))
-        None
-      } else Some((sc, perFile))
-    }
+    try {
+      hits.coalesce(1).write.mode("overwrite").parquet(scratch.toString)
+      val part = Option(scratch.toFile.list((_, n) =>
+          n.startsWith("part-") && n.endsWith(".parquet")))
+        .getOrElse(Array.empty[String]).sorted.headOption
+      part.flatMap { p =>
+        val perFile = spark.read.schema(LakeTable.dvSidecarSchema)
+          .parquet(scratch.resolve(p).toString)
+          .groupBy(col("_gf_file")).count()
+          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+        if (perFile.isEmpty) None
+        else {
+          val sidecar = s"dv-$job.parquet"
+          Files.move(scratch.resolve(p), Paths.get(path, sidecar),
+            StandardCopyOption.ATOMIC_MOVE)
+          Some((sidecar, perFile))
+        }
+      }
+    } finally LakeTable.deleteRecursively(scratch)
   }
 
   /** Split `files` into (touched, masked): entries the sidecar masks
@@ -1101,15 +1049,12 @@ class LakeTable private (spark: SparkSession, val path: String) {
     (touched, masked)
   }
 
-  /** The source key range as a manifest-stats overlap predicate, in the
-    * SAME encoding the stats use (micros for timestamp keys, days for
-    * dates, truncated UTF-8 for strings — a bare cast("long") would give
-    * seconds for timestamps and silently mis-prune; stats are keyed by
-    * PHYSICAL name). Shared by the CoW and MoR merges: the same test
-    * serves candidate pruning AND the optimistic rebase conflict check —
-    * a file outside the update key range can neither hold a matched row
-    * nor invalidate the merge. Validates a non-empty, not-all-NULL-key
-    * source up front.
+  /** The scope of a merge: the source key range as a manifest-stats
+    * overlap predicate, in the SAME encoding the stats use (micros for
+    * timestamp keys, days for dates, truncated UTF-8 for strings — a
+    * bare cast("long") would give seconds for timestamps and silently
+    * mis-prune; stats are keyed by PHYSICAL name). Validates a
+    * non-empty, not-all-NULL-key source up front.
     */
   private def mergeKeyRange(updates: DataFrame, keyCol: String,
       base: Manifest): FileEntry => Boolean = {
@@ -1132,36 +1077,33 @@ class LakeTable private (spark: SparkSession, val path: String) {
     }
   }
 
-  /** Manifest entries whose stats could overlap `cond` (the shared
-    * candidate pruning of both delete flavors): integral-comparison
-    * conjuncts become per-column bounds, anything else keeps the file.
+  /** The scope of a condition: a file can hold a row matching `cond`
+    * only if its stats overlap every per-column bound `cond`'s
+    * conjuncts imply ([[LakeFileIndex.boundsOf]], the translation the
+    * Catalyst scan path uses). No derivable bound = every file is in
+    * scope, conservatively.
     */
-  private def statsCandidates(base: Manifest,
-      bounds: Map[String, (Long, Long)]): Seq[FileEntry] =
-    base.files.filter { f =>
-      bounds.forall { case (c, (lo, hi)) =>
-        f.overlaps(base.physOf(c), lo, hi) }
-    }
-
-  /** The per-column bounds `cond` implies over the stats columns —
-    * shared by the delete candidate pruning and the rebase conflict
-    * check (a file outside the bounds can neither match the delete nor
-    * invalidate it). Empty map = no derivable bound = everything
-    * overlaps, conservatively.
-    */
-  private def deleteBounds(base: Manifest, cond: Column,
-      schema: StructType): Map[String, (Long, Long)] = {
+  private def condScope(base: Manifest, cond: Column): FileEntry => Boolean = {
     // analysis-only: an empty frame with the manifest schema resolves
     // the Column without touching data or sidecar footers
-    val probe = spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
-    LakeFileIndex.resolvedCondition(probe, cond)
+    val probe = spark.createDataFrame(spark.sparkContext.emptyRDD[Row], base.schema)
+    val bounds = LakeFileIndex.resolvedCondition(probe, cond)
       .map(e => LakeFileIndex.boundsOf(Seq(e), base.statsCols.toSet))
       .getOrElse(Map.empty)
+    f => bounds.forall { case (c, (lo, hi)) =>
+      f.overlaps(base.physOf(c), lo, hi) }
   }
 
+  /** The rows of `touched` a delete keeps: those where `cond` is not
+    * TRUE (a NULL condition keeps the row, per SQL DELETE).
+    */
+  private def survivors(touched: Seq[FileEntry], base: Manifest,
+      cond: Column): DataFrame =
+    readEntries(touched, base).filter(!coalesce(cond, lit(false)))
+
   /** The LIVE rows of `entries` (deletion vectors applied) with their
-    * physical provenance exposed as `_gf_file` / `_gf_pos` — the probe
-    * both delete flavors share.
+    * physical provenance exposed as `_gf_file` / `_gf_pos` — what
+    * [[changeRows]] probes for hit rows.
     */
   private def liveRows(entries: Seq[FileEntry],
       m: Manifest): DataFrame = {
@@ -1846,8 +1788,9 @@ class LakeTable private (spark: SparkSession, val path: String) {
     -1 // unreachable
   }
 
-  /** Commit a copy-on-write mutation with OPTIMISTIC APPEND REBASE —
-    * the Delta conflict-resolution model. The mutation planned against
+  /** Commit a mutation — a copy-on-write rewrite, a merge-on-read DV
+    * attach, or a layout move — with OPTIMISTIC APPEND REBASE, the Delta
+    * conflict-resolution model. The mutation planned against
     * `base` (read at `vRead`), consumed `consumed` (entries it rewrote
     * or masked) and produced `output`. On losing the version race it
     * does NOT fail outright: if the new head still carries every
@@ -2042,7 +1985,7 @@ object MergeArm {
 class ConcurrentCommitException(version: Int)
   extends RuntimeException(s"version $version was committed concurrently")
 
-/** A copy-on-write mutation lost its commit race to a concurrent write
+/** A mutation lost its commit race to a concurrent write
   * it could not rebase over (overlapping scope, rewritten read-set, or
   * changed schema/constraints). The table is untouched; re-run the
   * mutation against the new snapshot.

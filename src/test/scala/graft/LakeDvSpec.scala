@@ -6,7 +6,38 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.lake.{CheckViolationException, LakeTable}
+import graft.lake.{CheckViolationException, ConcurrentWriteConflictException,
+  LakeTable}
+
+/** A gate the first caller of [[DmlGate.pass]] blocks at until the test
+  * opens it — orders a concurrent commit INSIDE a running lake write
+  * without sleeps. A Scala object, so the executor-side UDF and the
+  * test thread share it in local mode. Only the first caller blocks, so
+  * the other task slots stay free for the interleaved commit's jobs.
+  */
+object DmlGate {
+  @volatile private var entered = new java.util.concurrent.CountDownLatch(1)
+  @volatile private var gate = new java.util.concurrent.CountDownLatch(1)
+  private val first = new java.util.concurrent.atomic.AtomicBoolean(false)
+
+  def arm(): Unit = {
+    entered = new java.util.concurrent.CountDownLatch(1)
+    gate = new java.util.concurrent.CountDownLatch(1)
+    first.set(false)
+  }
+
+  def pass(): Unit =
+    if (first.compareAndSet(false, true)) {
+      entered.countDown()
+      gate.await(120, java.util.concurrent.TimeUnit.SECONDS)
+    }
+
+  /** Wait until a caller is blocked at the gate (or `done` holds). */
+  def awaitEntered(done: => Boolean): Unit =
+    while (!entered.await(50, java.util.concurrent.TimeUnit.MILLISECONDS) && !done) ()
+
+  def open(): Unit = gate.countDown()
+}
 
 /** Round-9 lake surface: merge-on-read DELETE via deletion-vector
   * sidecars (no data file rewritten; every read path masks the
@@ -36,6 +67,9 @@ class LakeDvSpec extends AnyFunSuite {
   private def dataFiles(t: LakeTable): Set[String] =
     new File(t.path).list((_, n) =>
       n.startsWith("part-") && n.endsWith(".parquet")).toSet
+
+  private def dvFiles(t: LakeTable): Set[String] =
+    new File(t.path).list((_, n) => n.startsWith("dv-")).toSet
 
   test("MoR delete rewrites NO data file; all read paths mask the rows") {
     val t = table("mor")
@@ -607,6 +641,98 @@ class LakeDvSpec extends AnyFunSuite {
     }
     assert(dataFiles(t) == physAfter5, "schema-rejected append left orphans")
     assert(physBefore.subsetOf(physAfter5))
+    // a row-level change whose commit conflicts with an overlapping
+    // append deletes its staged files and its DV sidecar: the gated UDF
+    // holds the change inside its first Spark job while the append
+    // (k = 5, inside every scope below) commits
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration._
+    import scala.concurrent.ExecutionContext.Implicits.global
+    val gated = udf { (k: Long) => DmlGate.pass(); k }
+    val src = kv(1 to 10).select(gated(col("k")).as("k"), col("v"))
+    // the orphans each change left behind, by entry point
+    def orphans(change: => Int): Set[String] = {
+      val (data0, dv0) = (dataFiles(t), dvFiles(t))
+      DmlGate.arm()
+      val f = Future(change)
+      DmlGate.awaitEntered(f.isCompleted)
+      val appended = try t.append(kv(5 to 5).coalesce(1)) finally DmlGate.open()
+      intercept[ConcurrentWriteConflictException](Await.result(f, 120.seconds))
+      (dataFiles(t) -- data0 -- t.fileNames(appended)) ++ (dvFiles(t) -- dv0)
+    }
+    // every touched file keeps survivors, so even a CoW delete stages
+    val hit = gated(col("k")) % 10L === 0L
+    val left = Map(
+      "deleteWhere" -> orphans(t.deleteWhere(hit)),
+      "deleteWhereMoR" -> orphans(t.deleteWhereMoR(hit)),
+      "updateWhere" -> orphans(t.updateWhere(hit, Map("v" -> lit(0L)))),
+      "updateWhereMoR" -> orphans(t.updateWhereMoR(hit, Map("v" -> lit(0L)))),
+      "merge" -> orphans(t.merge(src, "k")),
+      "mergeMoR" -> orphans(t.mergeMoR(src, "k")),
+      "replaceWhere" -> orphans(t.replaceWhere(hit, kv(1 to 3))))
+    assert(left.filter(_._2.nonEmpty).isEmpty, "conflicting changes left orphans")
+  }
+
+  test("copy-on-write and merge-on-read DML agree row for row") {
+    // one random delete/update/merge sequence applied through the CoW
+    // methods on table A and through their MoR twins on table B: a
+    // partitioned table with a renamed column (physical names differ),
+    // a nullable `x` (NULL conditions keep their rows) and a string key
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(_.toString).sorted.toSeq
+    def seed0 = (1 to 48).toDF("k").select(
+      col("k").cast("long").as("k"),
+      format_string("id%03d", col("k")).as("s"),
+      (col("k") % 3).cast("int").as("p"),
+      when(col("k") % 4 =!= 0, (col("k") % 5).cast("long")).as("x"),
+      (col("k") * 10).cast("long").as("v0"))
+    def sourceOf(ks: Seq[Long], delta: Long) = ks.toDF("k").select(
+      col("k"), format_string("id%03d", col("k")).as("s"),
+      (col("k") % 3).cast("int").as("p"),
+      when(col("k") % 2 === 0, col("k") % 5).as("x"),
+      (col("k") * 10 + delta).as("v"))
+    Seq(11L, 12L).foreach { seed =>
+      val rnd = new scala.util.Random(seed)
+      def fresh(tag: String): LakeTable = {
+        val t = LakeTable.create(spark, freshDir(s"eq$tag$seed"),
+          seed0.repartition(2), Seq("k", "s"), Seq("p"))
+        t.renameColumn("v0", "v")
+        t
+      }
+      val (a, b) = (fresh("cow"), fresh("mor"))
+      // every op kind once, in random order, plus one more
+      val ops = rnd.shuffle((0 to 4).toList :+ rnd.nextInt(5))
+      ops.zipWithIndex.foreach { case (op, step) =>
+        val keys = a.read().select("k").as[Long].collect().toSeq
+        val lo = keys(rnd.nextInt(keys.size))
+        val r = rnd.nextInt(5).toLong
+        val label = s"seed $seed step $step"
+        op match {
+          case 0 => // NULL x keeps the row
+            a.deleteWhere(col("x") === r); b.deleteWhereMoR(col("x") === r)
+          case 1 => // stats-pruned range
+            val c = col("k").between(lo, lo + 6)
+            a.deleteWhere(c); b.deleteWhereMoR(c)
+          case 2 =>
+            val set = Map("v" -> (col("v") + 1000), "x" -> lit(null).cast("long"))
+            a.updateWhere(col("x") > r, set); b.updateWhereMoR(col("x") > r, set)
+          case key =>
+            val ks = (rnd.shuffle(keys).take(3) :+ (100L + step)).sorted
+            val keyCol = if (key == 3) "k" else "s"
+            a.merge(sourceOf(ks, step.toLong), keyCol)
+            b.mergeMoR(sourceOf(ks, step.toLong), keyCol)
+        }
+        assert(a.currentVersion == b.currentVersion, label)
+        assert(rows(a.read()) == rows(b.read()), s"$label: read()")
+        assert(rows(a.scan()) == rows(b.scan()), s"$label: scan()")
+        val v = rnd.nextInt(a.currentVersion) + 1
+        assert(rows(a.readVersion(v)) == rows(b.readVersion(v)),
+          s"$label: readVersion($v)")
+      }
+      b.purgeDeletes(0.0)
+      assert(b.dvDebt == 0.0)
+      assert(rows(b.read()) == rows(a.read()), s"seed $seed: after purge")
+    }
   }
 
   test("overwrite rejects a schema that invalidates a CHECK, before staging") {
