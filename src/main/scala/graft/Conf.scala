@@ -18,7 +18,7 @@ object Conf {
       // AQE: runtime coalescing, skew-join splitting, runtime replans.
       // Load-bearing for the pair-scan joins (measured 9x on the dedup
       // BNLJ self-joins) — keep ON for batch. Streaming jobs pin it off
-      // per microbatch run themselves (StreamingJobs.withStatePartitions):
+      // per microbatch run themselves (StreamingJobs.run):
       // stateful ops disable it anyway and stateless stages would pay a
       // full replan every microbatch (measured 3-4x).
       .config("spark.sql.adaptive.enabled", "true")

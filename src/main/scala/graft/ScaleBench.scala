@@ -397,13 +397,7 @@ object ScaleBench {
     def dvProbe(): String = {
       import org.apache.spark.sql.functions._
       val path = s"$root/dv_overhead"
-      val pd = java.nio.file.Paths.get(path)
-      if (java.nio.file.Files.exists(pd)) {
-        val walk = java.nio.file.Files.walk(pd)
-        try walk.sorted(java.util.Comparator.reverseOrder())
-          .forEach(q => java.nio.file.Files.deleteIfExists(q))
-        finally walk.close()
-      }
+      graft.deleteRecursively(java.nio.file.Paths.get(path))
       val b = spark.read.parquet(s"$baseDir/orders.parquet").select(
         col("o_orderkey").cast("long").as("k"), col("o_totalprice").as("price"))
       val t = graft.lake.LakeTable.create(spark, path,

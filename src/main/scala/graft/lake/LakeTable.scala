@@ -804,7 +804,7 @@ class LakeTable private (spark: SparkSession, val path: String) {
         StandardCopyOption.ATOMIC_MOVE)
       target
     }
-    LakeTable.deleteRecursively(Paths.get(stagingDir))
+    graft.deleteRecursively(Paths.get(stagingDir))
     val staged = LakeTable.entriesFor(spark, path, named, base.statsCols)
     enforceChecks(staged, base)
     val parts = base.partitionBy
@@ -1031,7 +1031,7 @@ class LakeTable private (spark: SparkSession, val path: String) {
           Some((sidecar, perFile))
         }
       }
-    } finally LakeTable.deleteRecursively(scratch)
+    } finally graft.deleteRecursively(scratch)
   }
 
   /** Split `files` into (touched, masked): entries the sidecar masks
@@ -1354,7 +1354,7 @@ class LakeTable private (spark: SparkSession, val path: String) {
     val stagingDead = Option(new File(path).list((_, n) => n.startsWith("_staging_v2_")))
       .getOrElse(Array.empty[String]).toSeq
       .filter(n => now - new File(path, n).lastModified() >= orphanGraceMs)
-    stagingDead.foreach(n => LakeTable.deleteRecursively(Paths.get(path, n)))
+    stagingDead.foreach(n => graft.deleteRecursively(Paths.get(path, n)))
     // the oldest retained version must reconstruct standalone once the
     // older log entries are gone: if it exists only as a delta,
     // checkpoint it (atomically; a racing vacuum's EEXIST is success)
@@ -2283,7 +2283,7 @@ object LakeTable {
       Files.move(p, Paths.get(path, target), StandardCopyOption.ATOMIC_MOVE)
       target
     }
-    deleteRecursively(scratch)
+    graft.deleteRecursively(scratch)
     if (observed != null && named.size == 1 &&
         observed("_rows").asInstanceOf[Long] > 0L) {
       val (strCols, longCols) = statsCols.partition(c =>
@@ -2501,14 +2501,6 @@ object LakeTable {
       m
     })
   }
-
-  private def deleteRecursively(p: java.nio.file.Path): Unit =
-    if (Files.exists(p)) {
-      val walk = Files.walk(p)
-      try walk.sorted(java.util.Comparator.reverseOrder())
-        .forEach(q => Files.deleteIfExists(q))
-      finally walk.close()
-    }
 }
 
 private[lake] object Manifest {

@@ -212,12 +212,7 @@ object Ext10Queries {
     "lake_catalog_ctas_partitioned" -> ((s, dir) => {
       val wh = s"${System.getProperty("java.io.tmpdir")}/graft_rt/catalog_wh2"
       val p = java.nio.file.Paths.get(wh)
-      if (java.nio.file.Files.exists(p)) {
-        val walk = java.nio.file.Files.walk(p)
-        try walk.sorted(java.util.Comparator.reverseOrder())
-          .forEach(q => java.nio.file.Files.deleteIfExists(q))
-        finally walk.close()
-      }
+      graft.deleteRecursively(p)
       java.nio.file.Files.createDirectories(p)
       s.conf.set("spark.sql.catalog.graft_rt_cat2", "graft.lake.GraftCatalog")
       s.conf.set("spark.sql.catalog.graft_rt_cat2.warehouse", wh)

@@ -1439,12 +1439,7 @@ object Ext7Queries {
       // enough across sessions)
       s.sql(s"DROP TABLE IF EXISTS $tbl")
       val wh = new java.net.URI(s.conf.get("spark.sql.warehouse.dir")).getPath
-      val loc = java.nio.file.Paths.get(wh, tbl)
-      if (java.nio.file.Files.exists(loc)) {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(loc).iterator().asScala.toSeq.reverse
-          .foreach(java.nio.file.Files.deleteIfExists(_))
-      }
+      graft.deleteRecursively(java.nio.file.Paths.get(wh, tbl))
       Tables.orders(s, dir)
         .groupBy(col("o_orderstatus")).agg(count(lit(1)).as("n"))
         .write.mode("overwrite").saveAsTable(tbl)

@@ -23,15 +23,8 @@ object LakeQueries {
   private def tablePath(name: String): String =
     s"${System.getProperty("java.io.tmpdir")}/graft_rt/$name"
 
-  private def wipe(path: String): Unit = {
-    val p = java.nio.file.Paths.get(path)
-    if (java.nio.file.Files.exists(p)) {
-      val walk = java.nio.file.Files.walk(p)
-      try walk.sorted(java.util.Comparator.reverseOrder())
-        .forEach(q => java.nio.file.Files.deleteIfExists(q))
-      finally walk.close()
-    }
-  }
+  private def wipe(path: String): Unit =
+    graft.deleteRecursively(java.nio.file.Paths.get(path))
 
   /** (k, status, price) view of orders — the lake tables' content. */
   private def base(s: SparkSession, dir: String): DataFrame =

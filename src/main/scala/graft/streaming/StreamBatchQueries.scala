@@ -11,13 +11,9 @@ import org.apache.spark.sql.functions._
 object StreamBatchQueries {
 
   val queries: Map[String, Q] = Map(
-    "stream_tumbling_batch" -> ((s, dir) => {
-      Tables.events(s, dir)
-        .groupBy(col("user_id"), window(col("ts"), "1 hour"))
-        .agg(count(lit(1)).as("n"), round(sum(col("value")), 6).as("sum_value"))
-        .select(col("user_id"), col("window.start").as("win_start"), col("n"), col("sum_value"))
-        .orderBy(col("user_id"), col("win_start"))
-    }),
+    "stream_tumbling_batch" -> ((s, dir) =>
+      StreamingJobs.hourlyUserTotals(Tables.events(s, dir))
+        .orderBy(col("user_id"), col("win_start"))),
 
     "stream_sliding_batch" -> ((s, dir) => {
       Tables.events(s, dir)

@@ -1,13 +1,17 @@
 package graft.streaming
 
 import graft.Q
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, Trigger}
+import org.apache.spark.sql.streaming.OutputMode
 
 /** §2.9 streaming jobs as declared queries: each stages the events file
   * into a directory, runs the REAL streaming engine (FileStreamSource →
-  * state store → memory sink, Trigger.AvailableNow) and returns the sink
-  * table. A single-file AvailableNow run is ONE deterministic microbatch,
+  * state store → sink) through StreamingJobs' run path and returns the
+  * sink table or its read-back. Memory sinks and output directories are
+  * fixed per key, so a repeated call replaces its previous results
+  * instead of accumulating them. A single-file AvailableNow run is ONE
+  * deterministic microbatch,
   * so every job whose final sink state equals a batch query over the same
   * file is oracle-checked with that batch SQL (tumbling/session/dedup/
   * watermark/static-join/stream-join/rate). Only the per-batch-emission
@@ -27,91 +31,84 @@ object StreamingDeclared {
     s"${java.nio.file.Files.size(p)}_${java.nio.file.Files.getLastModifiedTime(p).toMillis}"
   }
 
-  /** Stage the single events parquet file into a directory (file stream
-    * sources list directories) — done once per (jvm, sfDir, source
-    * fingerprint); restaged if the source file was regenerated.
+  /** The staging directory `<tmpdir>/<prefix>_<sfDir hash>`, filled by
+    * `build` once per (jvm, sfDir, source fingerprint): a `_READY_`
+    * marker names the fingerprint it was built from, and a regenerated
+    * source file rebuilds it. (File stream sources skip `_` files.)
     */
-  private def stagedEventsDir(sfDir: String): String = synchronized {
-    val hash = Integer.toHexString(sfDir.hashCode)
-    val dir = java.nio.file.Paths.get(
-      System.getProperty("java.io.tmpdir"), s"graft_stream_src_$hash")
-    java.nio.file.Files.createDirectories(dir)
-    val dst = dir.resolve("events.parquet")
-    val marker = dir.resolve(s"_SRC_${sourceFingerprint(sfDir)}")
-    if (!java.nio.file.Files.exists(marker)) {
-      java.nio.file.Files.copy(java.nio.file.Paths.get(sfDir, "events.parquet"), dst,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      dir.toFile.listFiles().filter(_.getName.startsWith("_SRC_")).foreach(_.delete())
-      java.nio.file.Files.createFile(marker)
-    }
-    dir.toString
-  }
-
-  /** Stage the events table as TWO parquet files with distinct mod times
-    * (split by event_id parity) — the input for the multi-microbatch runs:
-    * with maxFilesPerTrigger=1 each file becomes its own microbatch.
-    * Files are rewritten through Spark with whatever `ts` type the source
-    * carries (raw long under nanosAsLong, or timestamp[us]) so the
-    * streaming schema inferred from these files matches the source's
-    * encoding; restaged if the source file was regenerated.
-    */
-  private[graft] def stagedEventsSplitDir(s: org.apache.spark.sql.SparkSession,
-      sfDir: String): String = synchronized {
-    val hash = Integer.toHexString(sfDir.hashCode)
-    val dir = java.nio.file.Paths.get(
-      System.getProperty("java.io.tmpdir"), s"graft_stream_src2_$hash")
+  private def staged(sfDir: String, prefix: String)(
+      build: java.nio.file.Path => Unit): String = synchronized {
+    val dir = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
+      s"${prefix}_${Integer.toHexString(sfDir.hashCode)}")
     val ready = dir.resolve(s"_READY_${sourceFingerprint(sfDir)}")
     if (!java.nio.file.Files.exists(ready)) {
       java.nio.file.Files.createDirectories(dir)
-      dir.toFile.listFiles().filter(f => f.getName.startsWith("_READY"))
-        .foreach(_.delete())
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val raw = s.read.parquet(s"$sfDir/events.parquet")
-      (0 to 1).foreach { half =>
-        val stage = dir.resolve(s"stage_$half")
-        raw.filter(pmod(col("event_id"), lit(2)) === half)
-          .coalesce(1).write.mode("overwrite").parquet(stage.toString)
-        val src = stage.toFile.listFiles()
-          .find(_.getName.endsWith(".parquet"))
-          .getOrElse(sys.error(s"no parquet part written under $stage"))
-        val dst = dir.resolve(s"events_$half.parquet")
-        java.nio.file.Files.move(src.toPath, dst,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        // distinct, ordered mod times so the file source sees two
-        // separately-arrived files
-        java.nio.file.Files.setLastModifiedTime(dst,
-          java.nio.file.attribute.FileTime.fromMillis(1700000000000L + half * 60000L))
-        stage.toFile.listFiles().foreach(_.delete())
-        java.nio.file.Files.deleteIfExists(stage)
-      }
+      dir.toFile.listFiles().filter(_.getName.startsWith("_READY")).foreach(_.delete())
+      build(dir)
       java.nio.file.Files.createFile(ready)
     }
     dir.toString
   }
 
+  /** Stage the single events parquet file into a directory (file stream
+    * sources list directories).
+    */
+  private def stagedEventsDir(sfDir: String): String =
+    staged(sfDir, "graft_stream_src") { dir =>
+      java.nio.file.Files.copy(java.nio.file.Paths.get(sfDir, "events.parquet"),
+        dir.resolve("events.parquet"), java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    }
+
+  /** Stage the events table as the files `events_<i>.parquet`, one per
+    * frame `parts` derives from the raw table, with distinct ascending
+    * mod times so the file source sees separately-arrived files: read
+    * one file per trigger, each becomes its own microbatch, in order.
+    * Files are rewritten through Spark with whatever `ts` type the source
+    * carries (raw long for NANOS, or timestamp[us]) so the streaming
+    * schema inferred from these files matches the source's encoding.
+    */
+  private def stagedEventsParts(s: SparkSession, sfDir: String,
+      prefix: String)(parts: DataFrame => Seq[DataFrame]): String =
+    staged(sfDir, prefix) { dir =>
+      val raw = StreamingJobs.rawEventsReader(s).parquet(s"$sfDir/events.parquet")
+      parts(raw).zipWithIndex.foreach { case (df, i) =>
+        val stage = dir.resolve(s"stage_$i")
+        df.coalesce(1).write.mode("overwrite").parquet(stage.toString)
+        val src = stage.toFile.listFiles()
+          .find(_.getName.endsWith(".parquet"))
+          .getOrElse(sys.error(s"no parquet part written under $stage"))
+        val dst = dir.resolve(s"events_$i.parquet")
+        java.nio.file.Files.move(src.toPath, dst,
+          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+        java.nio.file.Files.setLastModifiedTime(dst,
+          java.nio.file.attribute.FileTime.fromMillis(1700000000000L + i * 60000L))
+        graft.deleteRecursively(stage)
+      }
+    }
+
+  /** Stage the events table as TWO files split by event_id parity — the
+    * input for the multi-microbatch runs.
+    */
+  private[graft] def stagedEventsSplitDir(s: SparkSession,
+      sfDir: String): String =
+    stagedEventsParts(s, sfDir, "graft_stream_src2") { raw =>
+      (0 to 1).map(half => raw.filter(pmod(col("event_id"), lit(2)) === half))
+    }
+
   /** Stage the events table as FOUR time-ordered files: first half by
     * event time, second half, then two far-future sentinel clicks
-    * (event_id = user_id = −1/−2, ts = max + 30/60 days). With
-    * maxFilesPerTrigger=1 the sentinel batch advances the watermark past
-    * every real event, which is what lets watermark-gated emissions
+    * (event_id = user_id = −1/−2, ts = max + 30/60 days). Read one file
+    * per trigger, the sentinel batch advances the watermark past every
+    * real event, which is what lets watermark-gated emissions
     * (stream-stream OUTER join nulls) flush deterministically before the
     * AvailableNow run terminates — the file-staged equivalent of the
     * punctuation/heartbeat events a production topic carries. The time
     * split (not parity) keeps event time monotone across batches, so no
     * real row is ever late.
     */
-  private[graft] def stagedEventsSentinelDir(s: org.apache.spark.sql.SparkSession,
-      sfDir: String): String = synchronized {
-    val hash = Integer.toHexString(sfDir.hashCode)
-    val dir = java.nio.file.Paths.get(
-      System.getProperty("java.io.tmpdir"), s"graft_stream_src3b_$hash")
-    val ready = dir.resolve(s"_READY_${sourceFingerprint(sfDir)}")
-    if (!java.nio.file.Files.exists(ready)) {
-      java.nio.file.Files.createDirectories(dir)
-      dir.toFile.listFiles().filter(f => f.getName.startsWith("_READY"))
-        .foreach(_.delete())
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val raw = s.read.parquet(s"$sfDir/events.parquet")
+  private[graft] def stagedEventsSentinelDir(s: SparkSession,
+      sfDir: String): String =
+    stagedEventsParts(s, sfDir, "graft_stream_src3b") { raw =>
       val tsIsLong = raw.schema("ts").dataType ==
         org.apache.spark.sql.types.LongType
       // a NTZ/timestamp ts cannot cast straight to bigint under ANSI —
@@ -143,79 +140,57 @@ object StreamingDeclared {
           .withColumn("event_type", lit(typ))
           .withColumn("ts", plusDays(days))
           .select(cols.head, cols.tail: _*)
-      val parts: Seq[org.apache.spark.sql.DataFrame] = Seq(
+      Seq(
         raw.filter(tsLong <= mid),
         raw.filter(tsLong > mid),
         sentinel(-1L, "click", 30).unionAll(sentinel(-3L, "purchase", 30)),
         sentinel(-2L, "click", 60).unionAll(sentinel(-4L, "purchase", 60)))
-      parts.zipWithIndex.foreach { case (df, i) =>
-        val stage = dir.resolve(s"stage_$i")
-        df.coalesce(1).write.mode("overwrite").parquet(stage.toString)
-        val src = stage.toFile.listFiles()
-          .find(_.getName.endsWith(".parquet"))
-          .getOrElse(sys.error(s"no parquet part written under $stage"))
-        val dst = dir.resolve(s"events_$i.parquet")
-        java.nio.file.Files.move(src.toPath, dst,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        java.nio.file.Files.setLastModifiedTime(dst,
-          java.nio.file.attribute.FileTime.fromMillis(1700000000000L + i * 60000L))
-        stage.toFile.listFiles().foreach(_.delete())
-        java.nio.file.Files.deleteIfExists(stage)
-      }
-      java.nio.file.Files.createFile(ready)
     }
-    dir.toString
-  }
 
   /** Pre-build every staged source directory (single-file, split,
     * sentinel) outside a bench's timed region — same contract as
     * LlmQueries.warmStaging: staging is shared infrastructure, its
     * one-time build cost is not any single query's steady-state cost.
     */
-  def warmStaging(s: org.apache.spark.sql.SparkSession, sfDir: String): Unit = {
+  def warmStaging(s: SparkSession, sfDir: String): Unit = {
     stagedEventsDir(sfDir)
     stagedEventsSplitDir(s, sfDir)
     stagedEventsSentinelDir(s, sfDir)
   }
 
-  private var sinkCounter = 0
-  private def sinkName(base: String): String = synchronized {
-    sinkCounter += 1; s"${base}_$sinkCounter"
-  }
-
   val queries: Map[String, Q] = Map(
     "stream_tumbling" -> ((s, dir) =>
-      StreamingJobs.tumbling(s, stagedEventsDir(dir), sinkName("q_stream_tumbling"))
+      StreamingJobs.tumbling(s, stagedEventsDir(dir), "q_stream_tumbling")
         .orderBy(col("user_id"), col("win_start"))),
 
     // the same tumbling agg driven through TWO real microbatches (two
-    // staged files, maxFilesPerTrigger=1): incremental state across
+    // staged files, one file per trigger): incremental state across
     // batches, final complete-mode state oracle-checked against the
     // batch SQL over the whole table; the ≥2-batch execution is pinned
     // from query progress in StreamingSpec
     "stream_tumbling_2batch" -> ((s, dir) =>
       StreamingJobs.tumblingMultiBatch(s, stagedEventsSplitDir(s, dir),
-          sinkName("q_stream_tumbling_2b"))._1
+          "q_stream_tumbling_2b")._1
         .orderBy(col("user_id"), col("win_start"))),
 
     // real streaming sliding window (1h size, 30min slide): every event
     // lands in exactly 2 windows; complete-mode single-batch run equals
     // the union of the two tumbling grids the oracle reproduces
     "stream_sliding" -> ((s, dir) =>
-      StreamingJobs.sliding(s, stagedEventsDir(dir), sinkName("q_stream_sliding"))
+      StreamingJobs.sliding(s, stagedEventsDir(dir), "q_stream_sliding")
         .orderBy(col("user_id"), col("win_start"))),
 
     // stream-static enrichment join; single-microbatch AvailableNow run
     // makes the result deterministic → oracle-checked directly
     "stream_static_join" -> ((s, dir) =>
       StreamingJobs.streamStaticJoin(s, stagedEventsDir(dir),
-          s"$dir/customer.parquet", sinkName("q_stream_static_join"))
+          s"$dir/customer.parquet", "q_stream_static_join")
         .orderBy(col("c_mktsegment"))),
 
     // stream-stream watermarked inner join with a time-bounded condition
     "stream_stream_join" -> ((s, dir) =>
       StreamingJobs.streamStreamJoin(s, stagedEventsDir(dir),
-          sinkName("q_stream_stream_join"))
+          "q_stream_stream_join")
         .orderBy(col("click_id"), col("purchase_id"))),
 
     // durable parquet file sink (exactly-once commit log) + read-back
@@ -225,7 +200,7 @@ object StreamingDeclared {
 
     // global no-key streaming aggregate (one state row, complete mode)
     "stream_global_agg" -> ((s, dir) =>
-      StreamingJobs.globalAgg(s, stagedEventsDir(dir), sinkName("q_stream_gagg"))),
+      StreamingJobs.globalAgg(s, stagedEventsDir(dir), "q_stream_gagg")),
 
     // per-window leaderboard over the streaming aggregation's final
     // state: complete-mode tumbling counts ranked to top-3 users per
@@ -233,7 +208,7 @@ object StreamingDeclared {
     "stream_window_topk" -> ((s, dir) => {
       import org.apache.spark.sql.expressions.Window
       val sink = StreamingJobs.tumbling(s, stagedEventsDir(dir),
-        sinkName("q_stream_wtopk"))
+        "q_stream_wtopk")
       val w = Window.partitionBy(col("win_start"))
         .orderBy(desc("n"), col("user_id"))
       sink.withColumn("rk", row_number().over(w)).filter(col("rk") <= 3)
@@ -250,7 +225,7 @@ object StreamingDeclared {
     // as a sorted histogram csv; monotone total collapses the changelog
     "stream_map_state" -> ((s, dir) =>
       StreamingJobs.typeHistogramTws(s, stagedEventsSplitDir(s, dir),
-          sinkName("q_stream_mapstate"))
+          "q_stream_mapstate")
         .orderBy(col("user_id"))),
 
     // event-time TIMER surface of transformWithState: inactivity-flush
@@ -260,7 +235,7 @@ object StreamingDeclared {
     // sessionization in SQL.
     "stream_timer_sessions" -> ((s, dir) =>
       StreamingJobs.sessionFlushTws(s, stagedEventsSentinelDir(s, dir),
-          sinkName("q_stream_timer_sess"))
+          "q_stream_timer_sess")
         .orderBy(col("user_id"), col("sess_start_s"))),
 
     // ListState surface of transformWithState: capped last-3 recent
@@ -269,19 +244,19 @@ object StreamingDeclared {
     // seen counter
     "stream_last_n_state" -> ((s, dir) =>
       StreamingJobs.lastNTypesTws(s, stagedEventsSplitDir(s, dir),
-          sinkName("q_stream_lastn"))
+          "q_stream_lastn")
         .orderBy(col("user_id"))),
 
     "stream_update_mode" -> ((s, dir) =>
       StreamingJobs.tumblingUpdateMode(s, stagedEventsSplitDir(s, dir),
-          sinkName("q_stream_update"))._1
+          "q_stream_update")._1
         .orderBy(col("user_id"), col("win_start"))),
 
     // full-outer twin: unmatched purchases surface too (watermark-gated
     // on both sides, same sentinel flush)
     "stream_stream_full_outer" -> ((s, dir) =>
       StreamingJobs.streamStreamFullOuter(s, stagedEventsSentinelDir(s, dir),
-          sinkName("q_stream_stream_fouter"))
+          "q_stream_stream_fouter")
         .orderBy(col("click_id"), col("purchase_id"))),
 
     // left-outer stream-stream join over the sentinel-staged 3-file
@@ -290,15 +265,15 @@ object StreamingDeclared {
     // streamStreamLeftOuter / stagedEventsSentinelDir docs)
     "stream_stream_outer" -> ((s, dir) =>
       StreamingJobs.streamStreamLeftOuter(s, stagedEventsSentinelDir(s, dir),
-          sinkName("q_stream_stream_outer"))
+          "q_stream_stream_outer")
         .orderBy(col("click_id"), col("purchase_id"))),
 
     "stream_session" -> ((s, dir) =>
-      StreamingJobs.sessionWindows(s, stagedEventsDir(dir), sinkName("q_stream_session"))
+      StreamingJobs.sessionWindows(s, stagedEventsDir(dir), "q_stream_session")
         .orderBy(col("user_id"), col("sess_start"))),
 
     "stream_stateful" -> ((s, dir) =>
-      StreamingJobs.statefulRunningCount(s, stagedEventsDir(dir), sinkName("q_stream_stateful"))
+      StreamingJobs.statefulRunningCount(s, stagedEventsDir(dir), "q_stream_stateful")
         .orderBy(col("user_id"))),
 
     "stream_watermark_late" -> ((s, dir) => {
@@ -307,50 +282,44 @@ object StreamingDeclared {
       // only windows closed under the final watermark (max ts − 10 min)
       // are emitted, which the oracle reproduces; late-drop behavior
       // itself is spec-tested batch-by-batch
-      val name = sinkName("q_stream_watermark")
-      StreamingJobs.withStatePartitions(s, 8) {
-        val q = StreamingJobs.watermarkedTumblingQuery(
-          StreamingJobs.readEventsStream(s, stagedEventsDir(dir))
-            .withColumn("ts", col("ts")), name)
-        try q.processAllAvailable() finally q.stop()
-      }
-      s.table(name).orderBy(col("user_id"), col("win_start"))
+      StreamingJobs.toMemory(
+          StreamingJobs.watermarkedHourlyCounts(
+            StreamingJobs.readEventsStream(s, stagedEventsDir(dir))),
+          "q_stream_watermark", OutputMode.Append(), StreamingJobs.Drain)
+        .orderBy(col("user_id"), col("win_start"))
     }),
 
     "stream_stateful_tws" -> ((s, dir) =>
       StreamingJobs.statefulRunningCountTws(s, stagedEventsDir(dir),
-          sinkName("q_stream_stateful_tws"))
+          "q_stream_stateful_tws")
         .orderBy(col("user_id"))),
 
     // deterministic unbounded source (rate-micro-batch batch 0) — the
     // one streaming query DuckDB can oracle: values are 0..9999 exactly
     "stream_rate" -> ((s, dir) =>
-      StreamingJobs.rateDemo(s, 10000, sinkName("q_stream_rate"))
+      StreamingJobs.rateDemo(s, 10000, "q_stream_rate")
         .orderBy(col("bucket"))),
 
     // foreachBatch sink: complete-mode totals snapshotted via idempotent
     // overwrite (format-free MERGE INTO); declared result is the
     // read-back of the landed table, so sink + read path are both checked
-    "stream_foreachbatch" -> ((s, dir) => {
-      val out = java.nio.file.Paths.get(
-        System.getProperty("java.io.tmpdir"), "graft_rt",
-        sinkName("stream_feb")).toString
-      StreamingJobs.foreachBatchUpsert(s, stagedEventsDir(dir), out)
-        .orderBy(col("user_id"))
-    }),
+    "stream_foreachbatch" -> ((s, dir) =>
+      StreamingJobs.foreachBatchUpsert(s, stagedEventsDir(dir),
+          s"${System.getProperty("java.io.tmpdir")}/graft_rt/stream_feb")
+        .orderBy(col("user_id"))),
 
     // state-store reader: the streaming query's STATE read back as a
     // batch frame from the checkpoint (Spark 4 statestore source)
     "stream_state_reader" -> ((s, dir) =>
       StreamingJobs.stateReaderCounts(s, stagedEventsDir(dir),
-          sinkName("q_stream_state_rd"))
+          "q_stream_state_rd")
         .orderBy(col("user_id"))),
 
     // chained stateful aggregations: 15-min tumbling → 1h roll-up in ONE
     // streaming query (window_time() as downstream event time)
     "stream_chained_agg" -> ((s, dir) =>
       StreamingJobs.chainedWindowAgg(s, stagedEventsDir(dir),
-          sinkName("q_stream_chained"))
+          "q_stream_chained")
         .orderBy(col("user_id"), col("win_start"))),
 
     // dropDuplicatesWithinWatermark — the Spark 3.5+ dedup API whose
@@ -361,38 +330,21 @@ object StreamingDeclared {
     // within one microbatch and the operator provably drops the twin;
     // state size is bounded by the 10-minute horizon at any scale.
     "stream_dedup_within_wm" -> ((s, dir) => {
-      val name = sinkName("q_stream_dedup_wm")
-      StreamingJobs.withStatePartitions(s, 8) {
-        val ev = StreamingJobs.readEventsStream(s, stagedEventsDir(dir))
-          .select(col("event_id"), col("user_id"), col("ts"))
-        val q = ev.union(ev)
-          .withWatermark("ts", "10 minutes")
-          .dropDuplicatesWithinWatermark(Seq("event_id"))
-          .writeStream.format("memory").queryName(name)
-          .outputMode(OutputMode.Append())
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
-      s.table(name).orderBy(col("event_id"))
+      val ev = StreamingJobs.readEventsStream(s, stagedEventsDir(dir))
+        .select(col("event_id"), col("user_id"), col("ts"))
+      val dedup = ev.union(ev)
+        .withWatermark("ts", "10 minutes")
+        .dropDuplicatesWithinWatermark(Seq("event_id"))
+      StreamingJobs.toMemory(dedup, "q_stream_dedup_wm", OutputMode.Append())
+        .orderBy(col("event_id"))
     }),
 
-    "stream_dedup" -> ((s, dir) => {
-      val name = sinkName("q_stream_dedup")
-      StreamingJobs.withStatePartitions(s, 8) {
-        val events = StreamingJobs.readEventsStream(s, stagedEventsDir(dir))
-        val q = events
-          .withWatermark("ts", "10 minutes")
-          .dropDuplicates(Seq("event_id"))
-          .select(col("event_id"), col("user_id"), col("ts"))
-          .writeStream.format("memory").queryName(name)
-          .outputMode(OutputMode.Append())
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
-      s.table(name).orderBy(col("event_id"))
-    })
+    "stream_dedup" -> ((s, dir) =>
+      StreamingJobs.toMemory(
+          StreamingJobs.watermarkedDedup(StreamingJobs.readEventsStream(s, stagedEventsDir(dir)))
+            .select(col("event_id"), col("user_id"), col("ts")),
+          "q_stream_dedup", OutputMode.Append())
+        .orderBy(col("event_id")))
   )
 
   val oracle: Map[String, String] = Map(

@@ -1,15 +1,28 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameReader, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout,
+  OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
 /** §2.9 Structured Streaming jobs.
   *
-  * Each job builds a readStream → transform → memory-sink pipeline and
-  * runs it to completion with Trigger.AvailableNow (batch-like semantics
-  * over whatever data is present — the idiom for testable streaming).
+  * A job is a batch-shaped plan over a streaming source plus a trigger,
+  * an output mode and a sink, and every job runs through [[run]]. The run
+  * pins the microbatch session settings ([[StatePartitions]] shuffle
+  * partitions, AQE off), scopes the RocksDB state-store provider when the
+  * job asks for it, starts the query, waits for it and restores the
+  * session values. The trigger is one of three:
+  *  - AvailableNow (the default): batch-like semantics over whatever data
+  *    is present, one microbatch per staged file under the
+  *    one-file-per-trigger throttle of [[readEventsStream]] — the idiom
+  *    for testable streaming;
+  *  - Once, for the unbounded rate source (exactly one microbatch);
+  *  - [[Drain]]: start, processAllAvailable, stop — this also runs the
+  *    trailing no-data microbatch that AvailableNow skips, so windows
+  *    closed under the final watermark are emitted.
+  * Memory-sink jobs go through [[toMemory]] and return the sink table.
   * The aggregation expressions are shared shapes with the oracle-checked
   * batch twins in StreamBatchQueries; specs assert stream == batch.
   *
@@ -18,6 +31,69 @@ import org.apache.spark.sql.types._
   * watermarks bound state size, and AvailableNow becomes a real trigger.
   */
 object StreamingJobs {
+
+  /** Shuffle partitions of every run, which is the state-store partition
+    * count. Stateful streaming creates one state-store instance per
+    * shuffle partition per microbatch; at test scale 32 of them is pure
+    * file/maintenance overhead. A real deployment sizes this to cluster
+    * cores (Conf.recommended) — the value is pinned into the checkpoint
+    * at first start, which is why [[run]] sets it before starting.
+    */
+  private val StatePartitions = 8
+
+  /** The default trigger; [[run]] drives it as start → processAllAvailable
+    * → stop.
+    */
+  private[streaming] val Drain: Trigger = Trigger.ProcessingTime(0L)
+
+  /** Run `df` into the sink `sink` configures, under the pinned
+    * microbatch settings (see the object doc), and return the finished
+    * query.
+    */
+  private[streaming] def run(df: DataFrame, trigger: Trigger = Trigger.AvailableNow(),
+      rocksDb: Boolean = false)(
+      sink: DataStreamWriter[Row] => DataStreamWriter[Row]): StreamingQuery = {
+    val conf = df.sparkSession.conf
+    val pinned = Seq(
+      "spark.sql.shuffle.partitions" -> StatePartitions.toString,
+      // AQE off for microbatch jobs: stateful operators disable it anyway,
+      // and stateless stages pay a full AQE replan per microbatch (extra
+      // stage barriers + plan serialization) — measured 3-4x slower
+      // across this suite's AvailableNow jobs.
+      "spark.sql.adaptive.enabled" -> "false") ++
+      // transformWithState requires the RocksDB state store
+      (if (rocksDb) Seq("spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+      else Nil)
+    val saved = pinned.map { case (k, _) => k -> conf.getOption(k) }
+    pinned.foreach { case (k, v) => conf.set(k, v) }
+    try {
+      val q = sink(df.writeStream.trigger(trigger)).start()
+      if (trigger == Drain) try q.processAllAvailable() finally q.stop()
+      else q.awaitTermination()
+      q
+    } finally saved.foreach {
+      case (k, Some(v)) => conf.set(k, v)
+      case (k, None) => conf.unset(k)
+    }
+  }
+
+  /** [[run]] into the memory sink `name`; returns the sink table. */
+  private[streaming] def toMemory(df: DataFrame, name: String, mode: OutputMode,
+      trigger: Trigger = Trigger.AvailableNow(), rocksDb: Boolean = false): DataFrame = {
+    run(df, trigger, rocksDb)(_.format("memory").queryName(name).outputMode(mode))
+    df.sparkSession.table(name)
+  }
+
+  /** Batch reader for raw events parquet: `ts` keeps its on-disk
+    * encoding, parquet NANOS timestamps read as raw longs that
+    * Tables.normalizeEventsTs converts. The conf is set on the session
+    * because the streams' own scans read under it too.
+    */
+  private[streaming] def rawEventsReader(spark: SparkSession): DataFrameReader = {
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    spark.read
+  }
 
   /** File streams need an explicit schema. Hardcoding one is how round 4
     * silently corrupted timestamps when the testdata re-encoded `ts`
@@ -38,83 +114,61 @@ object StreamingJobs {
     new java.util.concurrent.ConcurrentHashMap[String, StructType]()
 
   def eventsRawSchema(spark: SparkSession, dir: String): StructType = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val reader = rawEventsReader(spark)
     val files = Option(new java.io.File(dir).listFiles())
       .getOrElse(Array.empty[java.io.File])
       .filter(_.getName.endsWith(".parquet"))
       .map(f => s"${f.getName}:${f.length}:${f.lastModified}")
       .sorted.mkString(",")
-    schemaCache.computeIfAbsent(s"$dir|$files",
-      _ => spark.read.parquet(dir).schema)
+    schemaCache.computeIfAbsent(s"$dir|$files", _ => reader.parquet(dir).schema)
   }
 
   /** Streaming scan of an events parquet directory, ts normalized to a
-    * µs TimestampType regardless of the on-disk encoding.
+    * µs TimestampType regardless of the on-disk encoding. With
+    * `oneFilePerTrigger` each file of a multi-file staging is its own
+    * microbatch.
     */
-  def readEventsStream(spark: SparkSession, dir: String): DataFrame = {
-    val schema = eventsRawSchema(spark, dir)
+  def readEventsStream(spark: SparkSession, dir: String,
+      oneFilePerTrigger: Boolean = false): DataFrame = {
+    val reader = spark.readStream.schema(eventsRawSchema(spark, dir))
     graft.Tables.normalizeEventsTs(
-      spark.readStream.schema(schema).parquet(dir))
+      (if (oneFilePerTrigger) reader.option("maxFilesPerTrigger", "1") else reader)
+        .parquet(dir))
   }
 
-  /** Run `body` with spark.sql.shuffle.partitions temporarily set to `n`.
-    * Stateful streaming creates one state-store instance per shuffle
-    * partition per microbatch; at test scale 32 of them is pure
-    * file/maintenance overhead. A real deployment sizes this to cluster
-    * cores (Conf.recommended) — the value is pinned into the checkpoint
-    * at first start, which is why it must be set before `.start()`.
+  /** Hourly per-user event count and 6-dp value sum — the tumbling
+    * aggregate of the streaming jobs and of their batch twin
+    * stream_tumbling_batch.
     */
-  def withStatePartitions[T](spark: SparkSession, n: Int)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val prev = spark.conf.get(key)
-    val prevAqe = spark.conf.get(aqeKey)
-    spark.conf.set(key, n.toString)
-    // AQE off for microbatch jobs: stateful operators disable it anyway,
-    // and stateless stages pay a full AQE replan per microbatch (extra
-    // stage barriers + plan serialization) — measured 3-4x slower
-    // across this suite's AvailableNow jobs.
-    spark.conf.set(aqeKey, "false")
-    try body finally {
-      spark.conf.set(key, prev)
-      spark.conf.set(aqeKey, prevAqe)
-    }
-  }
-
-  private def deleteRecursively(p: java.nio.file.Path): Unit = {
-    if (java.nio.file.Files.exists(p)) {
-      val walk = java.nio.file.Files.walk(p)
-      try walk.sorted(java.util.Comparator.reverseOrder())
-        .forEach(q => java.nio.file.Files.deleteIfExists(q))
-      finally walk.close()
-    }
-  }
-
-  private def runToMemory(df: DataFrame, name: String, mode: OutputMode): DataFrame = {
-    val q = df.writeStream
-      .format("memory").queryName(name)
-      .outputMode(mode)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    df.sparkSession.table(name)
-  }
-
-  /** Tumbling 1h per-user counts — streaming twin of stream_tumbling_batch. */
-  def tumbling(spark: SparkSession, dir: String, sinkName: String = "stream_tumbling"): DataFrame = {
-    val agg = readEventsStream(spark, dir)
-      .groupBy(col("user_id"), window(col("ts"), "1 hour"))
+  private[streaming] def hourlyUserTotals(events: DataFrame): DataFrame =
+    events.groupBy(col("user_id"), window(col("ts"), "1 hour"))
       .agg(count(lit(1)).as("n"), round(sum(col("value")), 6).as("sum_value"))
       .select(col("user_id"), col("window.start").as("win_start"), col("n"), col("sum_value"))
-    withStatePartitions(spark, 8) { runToMemory(agg, sinkName, OutputMode.Complete()) }
-  }
+
+  /** Hourly per-user counts behind a 10-minute watermark: in append mode
+    * a window is emitted once the watermark passes its end, and late rows
+    * whose window already closed are dropped.
+    */
+  private[streaming] def watermarkedHourlyCounts(events: DataFrame): DataFrame =
+    events
+      .withWatermark("ts", "10 minutes")
+      .groupBy(col("user_id"), window(col("ts"), "1 hour"))
+      .agg(count(lit(1)).as("n"))
+      .select(col("user_id"), col("window.start").as("win_start"), col("n"))
+
+  /** Exact dedup on event_id, its state bounded by a 10-minute watermark. */
+  private[streaming] def watermarkedDedup(events: DataFrame): DataFrame =
+    events.withWatermark("ts", "10 minutes").dropDuplicates(Seq("event_id"))
+
+  /** Tumbling 1h per-user counts — streaming twin of stream_tumbling_batch. */
+  def tumbling(spark: SparkSession, dir: String, sinkName: String): DataFrame =
+    toMemory(hourlyUserTotals(readEventsStream(spark, dir)), sinkName, OutputMode.Complete())
 
   /** Durable FILE sink: watermarked append-mode tumbling agg written to
     * a parquet directory with a checkpoint (exactly-once via the sink
-    * commit log), then read back as a batch frame. Unlike AvailableNow,
-    * a started query + processAllAvailable DOES execute the trailing
-    * no-data microbatch, so windows closed under the final watermark
-    * (max ts − 10 min) land in the files — same emission contract as
+    * commit log), then read back as a batch frame. It runs under
+    * [[Drain]], so windows closed under the final watermark (max ts − 10
+    * min) land in the files — same emission contract as
     * stream_watermark_late, now surviving in durable storage. The
     * sink+checkpoint base dir is FIXED per source path and wiped at the
     * start of every invocation — a stale checkpoint would pin its
@@ -124,23 +178,14 @@ object StreamingJobs {
   def fileSinkTumbling(spark: SparkSession, eventsDir: String): DataFrame = {
     val base = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
       s"graft_fsink_${Integer.toHexString(eventsDir.hashCode)}")
-    deleteRecursively(base)
+    graft.deleteRecursively(base)
     java.nio.file.Files.createDirectories(base)
     val out = base.resolve("out").toString
-    val chk = base.resolve("chk").toString
-    val agg = readEventsStream(spark, eventsDir)
-      .withWatermark("ts", "10 minutes")
-      .groupBy(col("user_id"), window(col("ts"), "1 hour"))
-      .agg(count(lit(1)).as("n"))
-      .select(col("user_id"), col("window.start").as("win_start"), col("n"))
-    withStatePartitions(spark, 8) {
-      val q = agg.writeStream.format("parquet")
+    run(watermarkedHourlyCounts(readEventsStream(spark, eventsDir)), Drain)(
+      _.format("parquet")
         .option("path", out)
-        .option("checkpointLocation", chk)
-        .outputMode(OutputMode.Append())
-        .start()
-      try q.processAllAvailable() finally q.stop()
-    }
+        .option("checkpointLocation", base.resolve("chk").toString)
+        .outputMode(OutputMode.Append()))
     spark.read.parquet(out)
   }
 
@@ -153,56 +198,35 @@ object StreamingJobs {
       .agg(count(lit(1)).as("n_events"),
         round(sum(col("value")), 6).as("sum_value"),
         max(col("user_id")).as("max_user"))
-    withStatePartitions(spark, 8) { runToMemory(agg, sinkName, OutputMode.Complete()) }
+    toMemory(agg, sinkName, OutputMode.Complete())
   }
 
   /** Tumbling 1h per-user counts driven through MULTIPLE real
     * microbatches: the source directory holds several staged event files
-    * and the scan is throttled to one file per trigger, so the
-    * AvailableNow run executes one microbatch per file against the same
-    * state store — real incremental state, not a single batch-like pass.
-    * Complete-mode final state still equals the batch SQL over the union
-    * of the files (same oracle as stream_tumbling). Returns the sink
-    * table plus the number of non-empty microbatches executed so specs
-    * can pin the ≥2-batch claim from query progress.
+    * read one file per trigger, so the run executes one microbatch per
+    * file against the same state store — real incremental state, not a
+    * single batch-like pass. Complete-mode final state still equals the
+    * batch SQL over the union of the files (same oracle as
+    * stream_tumbling). Returns the sink table plus the number of
+    * non-empty microbatches executed so specs can pin the ≥2-batch claim
+    * from query progress.
     */
   def tumblingMultiBatch(spark: SparkSession, dir: String,
       sinkName: String): (DataFrame, Int) = {
-    val src = graft.Tables.normalizeEventsTs(
-      spark.readStream.schema(eventsRawSchema(spark, dir))
-        .option("maxFilesPerTrigger", "1")
-        .parquet(dir))
-    val agg = src
-      .groupBy(col("user_id"), window(col("ts"), "1 hour"))
-      .agg(count(lit(1)).as("n"), round(sum(col("value")), 6).as("sum_value"))
-      .select(col("user_id"), col("window.start").as("win_start"), col("n"), col("sum_value"))
-    withStatePartitions(spark, 8) {
-      val q = agg.writeStream
-        .format("memory").queryName(sinkName)
-        .outputMode(OutputMode.Complete())
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      val batches = q.recentProgress.count(_.numInputRows > 0)
-      (spark.table(sinkName), batches)
-    }
+    val q = run(hourlyUserTotals(readEventsStream(spark, dir, oneFilePerTrigger = true)))(
+      _.format("memory").queryName(sinkName).outputMode(OutputMode.Complete()))
+    (spark.table(sinkName), q.recentProgress.count(_.numInputRows > 0))
   }
 
-  /** Tumbling agg with a 10-minute watermark in append mode; late rows
-    * whose window closed before the watermark are dropped. Generic over
-    * any events-shaped streaming source; returns the running query so a
+  /** [[watermarkedHourlyCounts]] over any events-shaped streaming source
+    * into the memory sink `sinkName`; returns the running query so a
     * spec can drive multiple MemoryStream batches through it.
     */
-  def watermarkedTumblingQuery(events: DataFrame, sinkName: String): org.apache.spark.sql.streaming.StreamingQuery = {
-    events
-      .withWatermark("ts", "10 minutes")
-      .groupBy(col("user_id"), window(col("ts"), "1 hour"))
-      .agg(count(lit(1)).as("n"))
-      .select(col("user_id"), col("window.start").as("win_start"), col("n"))
+  def watermarkedTumblingQuery(events: DataFrame, sinkName: String): StreamingQuery =
+    watermarkedHourlyCounts(events)
       .writeStream.format("memory").queryName(sinkName)
       .outputMode(OutputMode.Append())
       .start()
-  }
 
   /** CHAINED stateful aggregations in one streaming query (Spark 3.4+
     * multiple-stateful-operator support): 15-minute tumbling per-user
@@ -225,7 +249,7 @@ object StreamingJobs {
       .agg(sum(col("n15")).as("n"), max(col("n15")).as("peak15"))
       .select(col("user_id"), col("window.start").as("win_start"),
         col("n"), col("peak15"))
-    withStatePartitions(spark, 8) { runToMemory(lvl2, sinkName, OutputMode.Append()) }
+    toMemory(lvl2, sinkName, OutputMode.Append())
   }
 
   /** State-store observability (Spark 4 `statestore` data source): run a
@@ -239,37 +263,31 @@ object StreamingJobs {
     */
   def stateReaderCounts(spark: SparkSession, dir: String,
       sinkName: String): DataFrame = {
-    // fresh checkpoint per run: a leftover checkpoint from an earlier
-    // JVM pins its committed source path — replaying it against a
-    // different staged dir fails with "Wrong basePath"
+    // fixed per sink and wiped per run: a leftover checkpoint pins its
+    // committed source path — replaying it against a different staged
+    // dir fails with "Wrong basePath"
     val ckpt = java.nio.file.Paths.get(
-      System.getProperty("java.io.tmpdir"), "graft_rt",
-      s"${sinkName}_ckpt_${java.util.UUID.randomUUID().toString.take(8)}").toString
+      System.getProperty("java.io.tmpdir"), "graft_rt", s"${sinkName}_ckpt")
+    graft.deleteRecursively(ckpt)
     val agg = readEventsStream(spark, dir)
       .groupBy(col("user_id"))
       .agg(count(lit(1)).as("n"))
-    withStatePartitions(spark, 8) {
-      val q = agg.writeStream
-        .format("memory").queryName(sinkName)
-        .option("checkpointLocation", ckpt)
-        .outputMode(OutputMode.Complete())
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    spark.read.format("statestore").load(ckpt)
+    run(agg)(_.format("memory").queryName(sinkName)
+      .option("checkpointLocation", ckpt.toString)
+      .outputMode(OutputMode.Complete()))
+    spark.read.format("statestore").load(ckpt.toString)
       .select(col("key.user_id").as("user_id"), col("value.count").as("n"))
   }
 
   /** Per-user session windows with a 30-minute gap. */
-  def sessionWindows(spark: SparkSession, dir: String, sinkName: String = "stream_session"): DataFrame = {
+  def sessionWindows(spark: SparkSession, dir: String, sinkName: String): DataFrame = {
     val agg = readEventsStream(spark, dir)
       .groupBy(col("user_id"), session_window(col("ts"), "30 minutes"))
       .agg(count(lit(1)).as("n"))
       .select(col("user_id"),
         col("session_window.start").as("sess_start"),
         col("session_window.end").as("sess_end"), col("n"))
-    withStatePartitions(spark, 8) { runToMemory(agg, sinkName, OutputMode.Complete()) }
+    toMemory(agg, sinkName, OutputMode.Complete())
   }
 
   /** Stream-static enrichment join: the event stream joins a static
@@ -286,7 +304,7 @@ object StreamingJobs {
     val agg = events.join(cust, col("user_id") === col("c_custkey"))
       .groupBy(col("c_mktsegment"))
       .agg(count(lit(1)).as("n_events"), round(sum(col("value")), 6).as("sum_value"))
-    withStatePartitions(spark, 8) { runToMemory(agg, sinkName, OutputMode.Complete()) }
+    toMemory(agg, sinkName, OutputMode.Complete())
   }
 
   /** Stream-stream inner join with watermarks on both sides and a time
@@ -296,18 +314,21 @@ object StreamingJobs {
     * forever; with them, state is bounded by the watermark horizon.
     */
   def streamStreamJoin(spark: SparkSession, eventsDir: String,
-      sinkName: String): DataFrame = {
-    // ONE streaming source branched into both join sides (a streaming
-    // self-join): the shared StreamingRelation means one file listing
-    // and one offset ledger per microbatch instead of two sources each
-    // re-listing and re-reading the same directory. Same rows, same
-    // per-branch watermarks.
-    val src = readEventsStream(spark, eventsDir)
-    val clicks = src.filter(col("event_type") === "click")
-    val purchases = src.filter(col("event_type") === "purchase")
-    val joined = clickPurchaseJoin(clicks, purchases)
-    withStatePartitions(spark, 8) { runToMemory(joined, sinkName, OutputMode.Append()) }
-  }
+      sinkName: String): DataFrame =
+    toMemory(clickPurchaseSelfJoin(readEventsStream(spark, eventsDir), "inner"),
+      sinkName, OutputMode.Append())
+
+  /** [[clickPurchaseJoin]] of ONE streaming source branched into both
+    * join sides (a streaming self-join): the shared StreamingRelation
+    * means one file listing and one offset ledger per microbatch instead
+    * of two sources each re-listing and re-reading the same directory.
+    * Same rows, same per-branch watermarks.
+    */
+  private def clickPurchaseSelfJoin(src: DataFrame, joinType: String): DataFrame =
+    clickPurchaseJoin(
+      src.filter(col("event_type") === "click"),
+      src.filter(col("event_type") === "purchase"),
+      joinType)
 
   /** The watermarked time-bounded click⋈purchase join over any two
     * events-shaped streams (`event_id`, `ts`, `user_id`) — exposed so
@@ -341,17 +362,8 @@ object StreamingJobs {
     */
   def tumblingUpdateMode(spark: SparkSession, dir: String,
       sinkName: String): (DataFrame, Long) = {
-    val src = graft.Tables.normalizeEventsTs(
-      spark.readStream.schema(eventsRawSchema(spark, dir))
-        .option("maxFilesPerTrigger", "1").parquet(dir))
-    val agg = src
-      .groupBy(col("user_id"), window(col("ts"), "1 hour"))
-      .agg(count(lit(1)).as("n"), round(sum(col("value")), 6).as("sum_value"))
-      .select(col("user_id"), col("window.start").as("win_start"),
-        col("n"), col("sum_value"))
-    val sink = withStatePartitions(spark, 8) {
-      runToMemory(agg, sinkName, OutputMode.Update())
-    }
+    val sink = toMemory(hourlyUserTotals(readEventsStream(spark, dir, oneFilePerTrigger = true)),
+      sinkName, OutputMode.Update())
     val collapsed = sink.groupBy(col("user_id"), col("win_start"))
       .agg(max(col("n")).as("n"), max(col("sum_value")).as("sum_value"))
     (collapsed, sink.count())
@@ -363,19 +375,11 @@ object StreamingJobs {
     * they surface.
     */
   def streamStreamFullOuter(spark: SparkSession, dir: String,
-      sinkName: String): DataFrame = {
-    // one shared source, both sides branch off it (see streamStreamJoin)
-    val src = graft.Tables.normalizeEventsTs(
-      spark.readStream.schema(eventsRawSchema(spark, dir))
-        .option("maxFilesPerTrigger", "1").parquet(dir))
-    val joined = clickPurchaseJoin(
-      src.filter(col("event_type") === "click"),
-      src.filter(col("event_type") === "purchase"),
-      joinType = "full_outer")
-    withStatePartitions(spark, 8) { runToMemory(joined, sinkName, OutputMode.Append()) }
+      sinkName: String): DataFrame =
+    toMemory(clickPurchaseSelfJoin(readEventsStream(spark, dir, oneFilePerTrigger = true),
+        "full_outer"), sinkName, OutputMode.Append())
       .filter(coalesce(col("click_id"), lit(0L)) >= 0 &&
         coalesce(col("purchase_id"), lit(0L)) >= 0)
-  }
 
   /** Stream-stream LEFT OUTER click⋈purchase join. Unlike the inner
     * variant, the null (no-purchase) rows are watermark-GATED: a click's
@@ -386,32 +390,23 @@ object StreamingJobs {
     * final file pushes the watermark past every real event — otherwise
     * the unmatched rows for the tail of the stream would sit in the join
     * state forever (exactly what happens on a production stream that
-    * stops receiving events). maxFilesPerTrigger=1 makes each staged
-    * file its own microbatch; the no-data final microbatch after the
-    * sentinel performs the flush. The sentinel click itself (id −1) is
-    * the one row legitimately still stuck in state; callers filter it.
+    * stops receiving events). Each staged file is its own microbatch;
+    * the batch of the second sentinel file performs the flush. The
+    * sentinel click itself (id −1) is the one row legitimately still
+    * stuck in state; callers filter it.
     */
   def streamStreamLeftOuter(spark: SparkSession, dir: String,
-      sinkName: String): DataFrame = {
-    // one shared source, both sides branch off it (see streamStreamJoin)
-    val src = graft.Tables.normalizeEventsTs(
-      spark.readStream.schema(eventsRawSchema(spark, dir))
-        .option("maxFilesPerTrigger", "1").parquet(dir))
-    val joined = clickPurchaseJoin(
-      src.filter(col("event_type") === "click"),
-      src.filter(col("event_type") === "purchase"),
-      joinType = "left_outer")
-    withStatePartitions(spark, 8) { runToMemory(joined, sinkName, OutputMode.Append()) }
+      sinkName: String): DataFrame =
+    toMemory(clickPurchaseSelfJoin(readEventsStream(spark, dir, oneFilePerTrigger = true),
+        "left_outer"), sinkName, OutputMode.Append())
       .filter(col("click_id") >= 0)
-  }
 
-  /** Streaming exact dedup on event_id bounded by a watermark; returns
-    * the running query for multi-batch driving.
+  /** [[watermarkedDedup]] over any events-shaped streaming source into
+    * the memory sink `sinkName`; returns the running query for
+    * multi-batch driving.
     */
-  def streamingDedupQuery(events: DataFrame, sinkName: String): org.apache.spark.sql.streaming.StreamingQuery =
-    events
-      .withWatermark("ts", "10 minutes")
-      .dropDuplicates(Seq("event_id"))
+  def streamingDedupQuery(events: DataFrame, sinkName: String): StreamingQuery =
+    watermarkedDedup(events)
       .writeStream.format("memory").queryName(sinkName)
       .outputMode(OutputMode.Append())
       .start()
@@ -522,31 +517,17 @@ object StreamingJobs {
   def typeHistogramTws(spark: SparkSession, dir: String,
       sinkName: String): DataFrame = {
     import spark.implicits._
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProvider = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val src = graft.Tables.normalizeEventsTs(
-        spark.readStream.schema(eventsRawSchema(spark, dir))
-          .option("maxFilesPerTrigger", "1").parquet(dir))
-      val out = src
-        .select(col("user_id"), col("event_type"))
-        .as[(Long, String)]
-        .groupByKey(_._1)
-        .transformWithState(new TypeHistogramProcessor,
-          org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Update())
-        .toDF("user_id", "total", "hist")
-      val sink = withStatePartitions(spark, 8) {
-        runToMemory(out, sinkName, OutputMode.Update())
-      }
-      sink.groupBy(col("user_id"))
-        .agg(max(col("total")).as("n_events"),
-          expr("max_by(hist, total)").as("hist"))
-    } finally prevProvider match {
-      case Some(p) => spark.conf.set(providerKey, p)
-      case None => spark.conf.unset(providerKey)
-    }
+    val out = readEventsStream(spark, dir, oneFilePerTrigger = true)
+      .select(col("user_id"), col("event_type"))
+      .as[(Long, String)]
+      .groupByKey(_._1)
+      .transformWithState(new TypeHistogramProcessor,
+        org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Update())
+      .toDF("user_id", "total", "hist")
+    toMemory(out, sinkName, OutputMode.Update(), rocksDb = true)
+      .groupBy(col("user_id"))
+      .agg(max(col("total")).as("n_events"),
+        expr("max_by(hist, total)").as("hist"))
   }
 
   /** Inactivity-flush sessionization via EVENT-TIME TIMERS — the timer
@@ -619,38 +600,24 @@ object StreamingJobs {
   def sessionFlushTws(spark: SparkSession, dir: String,
       sinkName: String): DataFrame = {
     import spark.implicits._
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProvider = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val src = graft.Tables.normalizeEventsTs(
-        spark.readStream.schema(eventsRawSchema(spark, dir))
-          .option("maxFilesPerTrigger", "1").parquet(dir))
-      // sentinel rows MUST flow through the watermark collector AND the
-      // processor: a pre-processor `user_id >= 0` filter gets pushed
-      // below EventTimeWatermark by Catalyst (user_id is not the
-      // watermark column), silently freezing the watermark at real-data
-      // time — observed as exactly the globally-latest session never
-      // flushing. Negative sentinel keys just make their own sessions,
-      // dropped at the sink side.
-      val out = src
-        .withWatermark("ts", "10 minutes")
-        .select(col("user_id"), expr("unix_micros(ts) div 1000").as("ts_ms"),
-          col("event_id"))
-        .as[(Long, Long, Long)]
-        .groupByKey(_._1)
-        .transformWithState(new SessionFlushProcessor(30L * 60 * 1000),
-          org.apache.spark.sql.streaming.TimeMode.EventTime(), OutputMode.Append())
-        .toDF("user_id", "sess_start_s", "sess_end_s", "n_events")
-        .filter(col("user_id") >= 0)
-      withStatePartitions(spark, 8) {
-        runToMemory(out, sinkName, OutputMode.Append())
-      }
-    } finally prevProvider match {
-      case Some(p) => spark.conf.set(providerKey, p)
-      case None => spark.conf.unset(providerKey)
-    }
+    // sentinel rows MUST flow through the watermark collector AND the
+    // processor: a pre-processor `user_id >= 0` filter gets pushed
+    // below EventTimeWatermark by Catalyst (user_id is not the
+    // watermark column), silently freezing the watermark at real-data
+    // time — observed as exactly the globally-latest session never
+    // flushing. Negative sentinel keys just make their own sessions,
+    // dropped at the sink side.
+    val out = readEventsStream(spark, dir, oneFilePerTrigger = true)
+      .withWatermark("ts", "10 minutes")
+      .select(col("user_id"), expr("unix_micros(ts) div 1000").as("ts_ms"),
+        col("event_id"))
+      .as[(Long, Long, Long)]
+      .groupByKey(_._1)
+      .transformWithState(new SessionFlushProcessor(30L * 60 * 1000),
+        org.apache.spark.sql.streaming.TimeMode.EventTime(), OutputMode.Append())
+      .toDF("user_id", "sess_start_s", "sess_end_s", "n_events")
+      .filter(col("user_id") >= 0)
+    toMemory(out, sinkName, OutputMode.Append(), rocksDb = true)
   }
 
   /** Update-mode last-3-types changelog over the split multi-batch
@@ -659,70 +626,44 @@ object StreamingJobs {
   def lastNTypesTws(spark: SparkSession, dir: String,
       sinkName: String): DataFrame = {
     import spark.implicits._
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProvider = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val src = graft.Tables.normalizeEventsTs(
-        spark.readStream.schema(eventsRawSchema(spark, dir))
-          .option("maxFilesPerTrigger", "1").parquet(dir))
-      val out = src
-        .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
-          col("event_id"), col("event_type"))
-        .as[(Long, Long, Long, String)]
-        .groupByKey(_._1)
-        .transformWithState(new LastNTypesProcessor(3),
-          org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Update())
-        .toDF("user_id", "seen", "last3")
-      val sink = withStatePartitions(spark, 8) {
-        runToMemory(out, sinkName, OutputMode.Update())
-      }
-      sink.groupBy(col("user_id"))
-        .agg(max(col("seen")).as("n_events"),
-          expr("max_by(last3, seen)").as("last3"))
-    } finally prevProvider match {
-      case Some(p) => spark.conf.set(providerKey, p)
-      case None => spark.conf.unset(providerKey)
-    }
+    val out = readEventsStream(spark, dir, oneFilePerTrigger = true)
+      .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
+        col("event_id"), col("event_type"))
+      .as[(Long, Long, Long, String)]
+      .groupByKey(_._1)
+      .transformWithState(new LastNTypesProcessor(3),
+        org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Update())
+      .toDF("user_id", "seen", "last3")
+    toMemory(out, sinkName, OutputMode.Update(), rocksDb = true)
+      .groupBy(col("user_id"))
+      .agg(max(col("seen")).as("n_events"),
+        expr("max_by(last3, seen)").as("last3"))
   }
 
-  /** transformWithState twin of [[statefulRunningCount]]. Requires the
-    * RocksDB state store; the conf is scoped to this run and restored.
-    */
+  /** transformWithState twin of [[statefulRunningCount]]. */
   def statefulRunningCountTws(spark: SparkSession, dir: String,
-      sinkName: String = "stream_stateful_tws"): DataFrame = {
+      sinkName: String): DataFrame = {
     import spark.implicits._
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProvider = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val agg = readEventsStream(spark, dir)
-        .select(col("user_id"), col("event_id"))
-        .as[(Long, Long)]
-        .groupByKey(_._1)
-        .transformWithState(new RunningCountProcessor,
-          org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Update())
-        .toDF("user_id", "n_events")
-      withStatePartitions(spark, 8) { runToMemory(agg, sinkName, OutputMode.Update()) }
-    } finally prevProvider match {
-      case Some(p) => spark.conf.set(providerKey, p)
-      case None => spark.conf.unset(providerKey)
-    }
+    val agg = readEventsStream(spark, dir)
+      .select(col("user_id"), col("event_id"))
+      .as[(Long, Long)]
+      .groupByKey(_._1)
+      .transformWithState(new RunningCountProcessor,
+        org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Update())
+      .toDF("user_id", "n_events")
+    toMemory(agg, sinkName, OutputMode.Update(), rocksDb = true)
   }
 
   /** Sliding 1h/30min per-user counts — each event contributes to
     * exactly size/slide = 2 overlapping windows; state is keyed by
     * (user, window) like tumbling, just 2× the window rows.
     */
-  def sliding(spark: SparkSession, dir: String,
-      sinkName: String = "stream_sliding"): DataFrame = {
+  def sliding(spark: SparkSession, dir: String, sinkName: String): DataFrame = {
     val agg = readEventsStream(spark, dir)
       .groupBy(col("user_id"), window(col("ts"), "1 hour", "30 minutes"))
       .agg(count(lit(1)).as("n"))
       .select(col("user_id"), col("window.start").as("win_start"), col("n"))
-    withStatePartitions(spark, 8) { runToMemory(agg, sinkName, OutputMode.Complete()) }
+    toMemory(agg, sinkName, OutputMode.Complete())
   }
 
   /** foreachBatch sink — the production streaming-ETL pattern: each
@@ -730,24 +671,20 @@ object StreamingJobs {
     * per-user totals are snapshotted with an idempotent overwrite (the
     * format-free equivalent of MERGE INTO keyed on user_id — reruns of a
     * batch id converge to the same table, which is what makes foreachBatch
-    * exactly-once end to end). Returns the read-back of the final
-    * snapshot, so the whole write path is part of the checked query.
+    * exactly-once end to end). `outDir` is wiped first. Returns the
+    * read-back of the final snapshot, so the whole write path is part of
+    * the checked query.
     */
   def foreachBatchUpsert(spark: SparkSession, dir: String,
       outDir: String): DataFrame = {
+    graft.deleteRecursively(java.nio.file.Paths.get(outDir))
     val agg = readEventsStream(spark, dir)
       .groupBy(col("user_id"))
       .agg(count(lit(1)).as("n"), round(sum(col("value")), 6).as("sum_value"))
-    withStatePartitions(spark, 8) {
-      val q = agg.writeStream
-        .outputMode(OutputMode.Complete())
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          batch.write.mode("overwrite").parquet(outDir)
-        }
-        .start()
-      q.awaitTermination()
-    }
+    run(agg)(_.outputMode(OutputMode.Complete())
+      .foreachBatch { (batch: DataFrame, _: Long) =>
+        batch.write.mode("overwrite").parquet(outDir)
+      })
     spark.read.parquet(outDir)
   }
 
@@ -762,40 +699,28 @@ object StreamingJobs {
     * end-to-end. Every microbatch lands as one atomic table version
     * (readers see batch boundaries, never a torn batch). Input is
     * throttled to one file per trigger over the 2-file split staging,
-    * so the AvailableNow run really exercises ≥2 merge commits.
+    * so the run really exercises ≥2 merge commits.
     * Returns (final table read-back, committed version count).
     */
   def foreachBatchLakeMerge(spark: SparkSession, splitDir: String,
       tablePath: String): (DataFrame, Int) = {
-    val p = java.nio.file.Paths.get(tablePath)
-    deleteRecursively(p)
+    graft.deleteRecursively(java.nio.file.Paths.get(tablePath))
+    def totals(df: DataFrame): DataFrame = df.groupBy(col("user_id"))
+      .agg(count(lit(1)).as("n"), round(sum(col("value")), 6).as("sum_value"))
     // v1 = the empty table, schema taken from the aggregate itself so
     // create/merge schemas agree by construction
-    val batchShape = graft.Tables.normalizeEventsTs(
-        graft.Tables.parquetCached(spark, splitDir))
-      .groupBy(col("user_id"))
-      .agg(count(lit(1)).as("n"), round(sum(col("value")), 6).as("sum_value"))
-      .limit(0)
-    val t = graft.lake.LakeTable.create(spark, tablePath, batchShape, Seq("user_id"))
-    val src = graft.Tables.normalizeEventsTs(
-      spark.readStream.schema(eventsRawSchema(spark, splitDir))
-        .option("maxFilesPerTrigger", "1")
-        .parquet(splitDir))
-    val agg = src.groupBy(col("user_id"))
-      .agg(count(lit(1)).as("n"), round(sum(col("value")), 6).as("sum_value"))
-    withStatePartitions(spark, 8) {
-      val q = agg.writeStream
-        .outputMode(OutputMode.Update())
-        .trigger(Trigger.AvailableNow())
+    val t = graft.lake.LakeTable.create(spark, tablePath,
+      totals(graft.Tables.normalizeEventsTs(
+        graft.Tables.parquetCached(spark, splitDir))).limit(0),
+      Seq("user_id"))
+    run(totals(readEventsStream(spark, splitDir, oneFilePerTrigger = true)))(
+      _.outputMode(OutputMode.Update())
         .foreachBatch { (batch: DataFrame, _: Long) =>
           // foreachBatch runs on the driver; each non-empty batch is one
           // atomic MERGE commit (empty batches would violate merge's
           // non-empty contract and have nothing to say anyway)
           if (!batch.isEmpty) { t.merge(batch, "user_id"); () }
-        }
-        .start()
-      q.awaitTermination()
-    }
+        })
     (t.read(), t.currentVersion)
   }
 
@@ -804,37 +729,27 @@ object StreamingJobs {
     * batch id in the manifest head under this query's app id
     * (`txns: {appId -> lastBatchId}`, the Delta SetTransaction shape) —
     * the transactional sink pattern, scoped so a second query appending
-    * to the same table keeps its own ledger. After the AvailableNow
-    * run, the LAST batch id is
-    * deliberately REPLAYED with recomputed (here: strictly larger)
-    * data, simulating a sink retry after a crash between commit and
-    * checkpoint: the table must recognize the id and skip, leaving
+    * to the same table keeps its own ledger. After the run, the LAST
+    * batch id is deliberately REPLAYED with recomputed (here: strictly
+    * larger) data, simulating a sink retry after a crash between commit
+    * and checkpoint: the table must recognize the id and skip, leaving
     * version and contents untouched. Returns (final read-back,
     * committed version count, replay-was-a-no-op).
     */
   def foreachBatchLakeAppend(spark: SparkSession, splitDir: String,
       tablePath: String): (DataFrame, Int, Boolean) = {
-    deleteRecursively(java.nio.file.Paths.get(tablePath))
+    graft.deleteRecursively(java.nio.file.Paths.get(tablePath))
     def shape(df: DataFrame): DataFrame =
       df.select(col("event_id"), col("user_id"), col("value"))
     val t = graft.lake.LakeTable.create(spark, tablePath,
       shape(graft.Tables.normalizeEventsTs(
         graft.Tables.parquetCached(spark, splitDir))).limit(0),
       Seq("event_id", "user_id"))
-    val src = shape(graft.Tables.normalizeEventsTs(
-      spark.readStream.schema(eventsRawSchema(spark, splitDir))
-        .option("maxFilesPerTrigger", "1")
-        .parquet(splitDir)))
-    withStatePartitions(spark, 8) {
-      val q = src.writeStream
-        .outputMode(OutputMode.Append())
-        .trigger(Trigger.AvailableNow())
+    run(shape(readEventsStream(spark, splitDir, oneFilePerTrigger = true)))(
+      _.outputMode(OutputMode.Append())
         .foreachBatch { (batch: DataFrame, id: Long) =>
           if (!batch.isEmpty) { t.appendStream(batch, "lake-append-demo", id); () }
-        }
-        .start()
-      q.awaitTermination()
-    }
+        })
     val (vBefore, nBefore) = (t.currentVersion, t.read().count())
     t.appendStream(
       shape(graft.Tables.normalizeEventsTs(
@@ -855,8 +770,8 @@ object StreamingJobs {
     */
   def foreachBatchLakeMv(spark: SparkSession, splitDir: String,
       basePath: String, mvPath: String): (DataFrame, Boolean, Int) = {
-    deleteRecursively(java.nio.file.Paths.get(basePath))
-    deleteRecursively(java.nio.file.Paths.get(mvPath))
+    graft.deleteRecursively(java.nio.file.Paths.get(basePath))
+    graft.deleteRecursively(java.nio.file.Paths.get(mvPath))
     def shape(df: DataFrame): DataFrame =
       df.select(col("event_id"), col("user_id"),
         round(col("value"), 2).as("value"))
@@ -865,16 +780,10 @@ object StreamingJobs {
         graft.Tables.parquetCached(spark, splitDir))).limit(0),
       Seq("event_id", "user_id"))
     val mv = graft.lake.LakeMv.create(spark, mvPath, t, Seq("user_id"), "value")
-    val src = shape(graft.Tables.normalizeEventsTs(
-      spark.readStream.schema(eventsRawSchema(spark, splitDir))
-        .option("maxFilesPerTrigger", "1")
-        .parquet(splitDir)))
     var deltaExact = true
     var refreshes = 0
-    withStatePartitions(spark, 8) {
-      val q = src.writeStream
-        .outputMode(OutputMode.Append())
-        .trigger(Trigger.AvailableNow())
+    run(shape(readEventsStream(spark, splitDir, oneFilePerTrigger = true)))(
+      _.outputMode(OutputMode.Append())
         .foreachBatch { (batch: DataFrame, id: Long) =>
           if (!batch.isEmpty) {
             val n = batch.count()
@@ -884,10 +793,7 @@ object StreamingJobs {
             deltaExact &&= scanned == n
             ()
           }
-        }
-        .start()
-      q.awaitTermination()
-    }
+        })
     (mv.read(), deltaExact, refreshes)
   }
 
@@ -896,8 +802,7 @@ object StreamingJobs {
     * 0..rowsPerBatch-1 at a fixed start timestamp, so a Trigger.Once run
     * is reproducible enough to oracle-check against generate_series.
     */
-  def rateDemo(spark: SparkSession, rowsPerBatch: Int,
-      sinkName: String = "stream_rate"): DataFrame = {
+  def rateDemo(spark: SparkSession, rowsPerBatch: Int, sinkName: String): DataFrame = {
     val src = spark.readStream.format("rate-micro-batch")
       .option("rowsPerBatch", rowsPerBatch.toString)
       .option("startTimestamp", "0")
@@ -905,25 +810,17 @@ object StreamingJobs {
     val agg = src
       .groupBy(pmod(col("value"), lit(10L)).as("bucket"))
       .agg(count(lit(1)).as("n"), sum(col("value")).as("sum_value"))
-    withStatePartitions(spark, 8) {
-      val q = agg.writeStream
-        .format("memory").queryName(sinkName)
-        .outputMode(OutputMode.Complete())
-        // deliberately the deprecated Once (not AvailableNow): the rate
-        // source is unbounded, and Once is the API that pins the run to
-        // EXACTLY one microbatch — the determinism the oracle needs
-        .trigger(Trigger.Once())
-        .start()
-      q.awaitTermination()
-    }
-    spark.table(sinkName)
+    // deliberately the deprecated Once (not AvailableNow): the rate
+    // source is unbounded, and Once is the API that pins the run to
+    // EXACTLY one microbatch — the determinism the oracle needs
+    toMemory(agg, sinkName, OutputMode.Complete(), Trigger.Once())
   }
 
   /** Arbitrary stateful op: running per-user event count via
     * mapGroupsWithState (state = count so far, emitted per batch).
     */
   def statefulRunningCount(spark: SparkSession, dir: String,
-      sinkName: String = "stream_stateful"): DataFrame = {
+      sinkName: String): DataFrame = {
     import spark.implicits._
     val updateFn = (userId: Long, rows: Iterator[(Long, Long)], state: GroupState[Long]) => {
       val prev = state.getOption.getOrElse(0L)
@@ -937,6 +834,6 @@ object StreamingJobs {
       .groupByKey(_._1)
       .mapGroupsWithState(GroupStateTimeout.NoTimeout())(updateFn)
       .toDF("user_id", "n_events")
-    withStatePartitions(spark, 8) { runToMemory(agg, sinkName, OutputMode.Update()) }
+    toMemory(agg, sinkName, OutputMode.Update())
   }
 }

@@ -3,7 +3,10 @@ package graft
 import java.sql.Timestamp
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQueryListener
+import org.scalatest.concurrent.Eventually._
 import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.time.SpanSugar._
 import graft.streaming.StreamingJobs
 
 case class Ev(event_id: Long, ts: Timestamp, user_id: Long)
@@ -187,5 +190,58 @@ class StreamingSpec extends AnyFunSuite {
     val clicks = graft.Tables.events(spark, sf)
       .filter(col("event_type") === "click").count()
     assert(out.select(col("click_id")).distinct().count() === clicks)
+  }
+
+  test("repeated streaming keys replace their sink views and work directories") {
+    val keys = Seq("stream_tumbling", "stream_foreachbatch", "stream_state_reader")
+    val rt = new java.io.File(System.getProperty("java.io.tmpdir"), "graft_rt")
+    def footprint(): (Int, Int) = (
+      spark.catalog.listTables().collect().count(_.isTemporary),
+      Option(rt.list()).fold(0)(_.length))
+    def runAll(): Unit = keys.foreach(k => SparkEntry.queries(k)(spark, sf).collect())
+    runAll()
+    val first = footprint()
+    runAll()
+    assert(footprint() === first, "(temp views, graft_rt entries) after run 1 vs run 2")
+  }
+
+  test("multi-file streaming keys keep their microbatch counts") {
+    // one file per trigger: 2 split files, 4 sentinel-staged files, and
+    // one microbatch for a single staged file
+    val expected =
+      Seq("stream_tumbling_2batch", "stream_map_state", "stream_last_n_state",
+        "stream_update_mode", "lake_stream_merge", "lake_stream_append",
+        "lake_stream_mv").map(_ -> 2) ++
+      Seq("stream_timer_sessions", "stream_stream_outer",
+        "stream_stream_full_outer").map(_ -> 4) :+
+      ("stream_tumbling" -> 1)
+    object counts extends StreamingQueryListener {
+      val started = collection.mutable.Set[java.util.UUID]()
+      val ended = collection.mutable.Set[java.util.UUID]()
+      var nonEmpty = 0
+      def reset(): Unit = synchronized { started.clear(); ended.clear(); nonEmpty = 0 }
+      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit =
+        synchronized { started += e.runId }
+      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit =
+        synchronized { if (e.progress.numInputRows > 0) nonEmpty += 1 }
+      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit =
+        synchronized { ended += e.runId }
+    }
+    spark.streams.addListener(counts)
+    try {
+      val seen = expected.map { case (k, _) =>
+        counts.reset()
+        SparkEntry.queries(k)(spark, sf)
+        // a query's progress events reach the listener before its
+        // termination event
+        eventually(timeout(30.seconds), interval(50.millis)) {
+          counts.synchronized {
+            assert(counts.started.nonEmpty && counts.ended == counts.started, k)
+          }
+        }
+        k -> counts.synchronized(counts.nonEmpty)
+      }
+      assert(seen === expected)
+    } finally spark.streams.removeListener(counts)
   }
 }
