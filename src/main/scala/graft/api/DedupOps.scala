@@ -28,7 +28,7 @@ object DedupOps {
   /** md5-prefix group length for a deterministic intra-group pair
     * sample over an n-row frame: the smallest p with 16^p ≥ n/125, on
     * an exact integer ladder (~125 rows per group, so sampled pairs
-    * stay ~n·62 — LINEAR in n). Same ladder as sim_pair_hist_sampled;
+    * stay ~n·62 — LINEAR in n). Every md5-group sample uses it;
     * integer thresholds, not a float log, so Spark and any SQL oracle
     * always pick the same p for the same count.
     */
@@ -443,15 +443,7 @@ object DedupOps {
         concat_ws("_", (0 until rowsPerBand).map(r =>
           element_at(col("sig"), band * rowsPerBand + r + 1)): _*).as("bucket"))
     }.reduce(_.unionAll(_))
-    val wB = Window.partitionBy(col("band"), col("bucket"))
-    val capped = banded.withColumn("bucket_n", count(lit(1)).over(wB))
-      .filter(col("bucket_n") <= bucketCap)
-    val x = capped.select(col("doc_id").as("id_a"), col("band"), col("bucket"))
-    val y = capped.select(col("doc_id").as("id_b"), col("band").as("band_b"),
-      col("bucket").as("bucket_b"))
-    x.join(y, col("band") === col("band_b") && col("bucket") === col("bucket_b") &&
-        col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b")).distinct()
+    SimilarityOps.bucketMates(SimilarityOps.capBuckets(banded, bucketCap), "doc_id")
   }
 
   /** The production near-dup path at scale: LSH candidate generation
@@ -544,13 +536,7 @@ object DedupOps {
           struct(lit(b).as("band"),
             shiftright(col("simhash"), bandBits * b).bitwiseAND(lit(mask)).as("bucket"))): _*)).as("bb"))
       .select(col("doc_id"), col("simhash"), col("bb.band"), col("bb.bucket"))
-    // skip degenerate mega-buckets (m docs in one band bucket = m²/2
-    // candidate pairs) — same guard as minhashCandidates.bucketCap. A
-    // pair lost here is only lost if EVERY shared band is degenerate.
-    val wB = Window.partitionBy(col("band"), col("bucket"))
-    val banded = banded0.withColumn("bucket_n", count(lit(1)).over(wB))
-      .filter(col("bucket_n") <= bucketCap)
-      .drop("bucket_n")
+    val banded = SimilarityOps.capBuckets(banded0, bucketCap)
     val x = banded.select(col("doc_id").as("id_a"), col("simhash").as("sig_a"),
       col("band"), col("bucket"))
     val y = banded.select(col("doc_id").as("id_b"), col("simhash").as("sig_b"),

@@ -1,12 +1,19 @@
 package graft.api
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Library-facing text-analysis operators for training-data pipelines. */
 object TextOps {
 
   private def toks(textCol: String) = split(col(textCol), " ")
+
+  /** Whitespace tokens with empty tokens dropped — in-row array
+    * arithmetic, no explode. This object's own operators split with
+    * [[toks]], which keeps empty tokens.
+    */
+  private[graft] def nonEmptyTokens(textCol: String): Column =
+    filter(split(col(textCol), " "), t => t =!= lit(""))
 
   /** Corpus-wide token frequencies. */
   def tokenFrequencies(documents: DataFrame, textCol: String): DataFrame =

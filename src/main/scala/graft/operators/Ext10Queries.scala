@@ -31,28 +31,6 @@ object Ext10Queries {
   private def media(s: org.apache.spark.sql.SparkSession, dir: String) =
     MultimodalQueries.mediaTable(s, dir)
 
-  private def embD(s: org.apache.spark.sql.SparkSession, dir: String) =
-    Tables.embeddings(s, dir)
-      .select(col("vec_id"), col("label"),
-        transform(col("embedding"), x => x.cast("double")).as("e"))
-
-  /** Exact cosine ranking of the corpus against the 10 query vectors
-    * (vec_id < 10): rounded 6dp + id tiebreak, so both engines produce
-    * the identical total order. Queries broadcast; cost is
-    * O(|queries|·n), never corpus×corpus.
-    */
-  private def rankedByQuery(s: org.apache.spark.sql.SparkSession, dir: String) = {
-    val e = embD(s, dir)
-    val q = e.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("q_id"), col("label").as("q_label"),
-        col("e").as("q_e"))
-    val w = Window.partitionBy(col("q_id")).orderBy(desc("cos"), col("vec_id"))
-    broadcast(q).join(e, col("vec_id") =!= col("q_id"))
-      .withColumn("cos",
-        round(graft.functions.DotProduct.dot(col("q_e"), col("e")), 6))
-      .withColumn("rank", row_number().over(w))
-  }
-
   val queries: Map[String, Q] = Map(
 
     // retrieval eval 1/3 — Mean Reciprocal Rank: for each query, the
@@ -61,7 +39,7 @@ object Ext10Queries {
     // deterministic here (6dp cosine + id tiebreak), so it is fully
     // oracle-checkable — no sketch grading needed
     "sim_eval_mrr" -> ((s, dir) => {
-      val firstRel = rankedByQuery(s, dir)
+      val firstRel = AnnQueries.rankedByQuery(s, dir)
         .filter(col("label") === col("q_label"))
         .groupBy(col("q_id"))
         .agg(min(col("rank")).as("first_rel_rank"))
@@ -75,8 +53,8 @@ object Ext10Queries {
     // DCG terms round at 9dp before the sum (ulp-stable across
     // engines); IDCG uses min(10, total relevant) ideal hits
     "sim_eval_ndcg" -> ((s, dir) => {
-      val rk = rankedByQuery(s, dir)
-      val labelN = embD(s, dir).groupBy(col("label")).agg(count(lit(1)).as("ln"))
+      val rk = AnnQueries.rankedByQuery(s, dir)
+      val labelN = AnnQueries.embDouble(s, dir).groupBy(col("label")).agg(count(lit(1)).as("ln"))
       val dcg = rk.filter(col("rank") <= 10)
         .withColumn("gain", when(col("label") === col("q_label"),
           round(lit(1.0) / log2(col("rank") + 1), 9)).otherwise(lit(0.0)))
@@ -100,7 +78,7 @@ object Ext10Queries {
     // is itself exactly oracle-checkable (unlike LSH/IVF recall, which
     // is graded through invariant reports)
     "sim_eval_recall_trunc" -> ((s, dir) => {
-      val exactTop = rankedByQuery(s, dir).filter(col("rank") <= 10)
+      val exactTop = AnnQueries.rankedByQuery(s, dir).filter(col("rank") <= 10)
         .select(col("q_id"), col("vec_id"))
       val truncTop = graft.api.SimilarityOps.truncatedTopK(
           Tables.embeddings(s, dir), "vec_id", "embedding",

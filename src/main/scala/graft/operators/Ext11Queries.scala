@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{Q, Tables}
+import graft.api.TextOps.nonEmptyTokens
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -48,12 +49,6 @@ import org.apache.spark.sql.functions._
   */
 object Ext11Queries {
 
-  /** Whitespace tokens of documents.text with empties dropped —
-    * in-row array arithmetic, no explode.
-    */
-  private def toks: Column =
-    filter(split(col("text"), " "), t => t =!= lit(""))
-
   /** Deterministic Poisson(1)-distributed bootstrap weight from the
     * first two md5 hex chars of (key, resample): thresholds are the
     * Poisson(1) CDF mapped onto the 256 equiprobable 2-char hex
@@ -99,7 +94,7 @@ object Ext11Queries {
     // kept vs removed block instances.
     "dedup_paragraph" -> ((s, dir) => {
       val d = Tables.documents(s, dir)
-        .select(col("doc_id"), col("source"), toks.as("toks"))
+        .select(col("doc_id"), col("source"), nonEmptyTokens("text").as("toks"))
         .filter(size(col("toks")) > 0)
         .withColumn("nblk", ceil(size(col("toks")) / lit(20.0)).cast("int"))
         .select(col("doc_id"), col("source"),
@@ -126,7 +121,7 @@ object Ext11Queries {
       // broadcast-score attach) with no shuffle under it — fan out the
       // narrow scan so both passes parallelize (Tables.fanOutIfNarrow)
       val docs = Tables.fanOutIfNarrow(Tables.documents(s, dir), "doc_id")
-        .select(col("doc_id"), col("lang"), toks.as("toks"))
+        .select(col("doc_id"), col("lang"), nonEmptyTokens("text").as("toks"))
         .withColumn("n", size(col("toks"))).filter(col("n") >= 2)
       val bb = docs.select(col("doc_id"), col("lang"),
           explode(transform(sequence(lit(1), col("n") - 1),
@@ -266,7 +261,7 @@ object Ext11Queries {
       val docs = Tables.fanOutIfNarrow(
           Tables.documents(s, dir).select(col("doc_id"), col("lang"), col("text")),
           "doc_id")
-        .select(col("doc_id"), col("lang"), toks.as("toks"))
+        .select(col("doc_id"), col("lang"), nonEmptyTokens("text").as("toks"))
         .withColumn("n", size(col("toks"))).filter(col("n") >= 2)
       val bi = docs.select(col("doc_id"), col("lang"),
         explode(expr("transform(sequence(1, n - 1), " +
@@ -309,7 +304,7 @@ object Ext11Queries {
           Tables.documents(s, dir).select(col("doc_id"), col("lang"), col("text")),
           "doc_id")
         .select(col("doc_id"), col("lang"),
-          transform(toks, t => substring(md5(t), 1, 2)).as("toks"))
+          transform(nonEmptyTokens("text"), t => substring(md5(t), 1, 2)).as("toks"))
         .withColumn("n", size(col("toks"))).filter(col("n") >= 2)
       val bi = docs.select(col("doc_id"), col("lang"),
         explode(expr("transform(sequence(1, n - 1), " +

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{Q, Tables}
+import graft.api.TextOps.nonEmptyTokens
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -38,10 +39,6 @@ import org.apache.spark.sql.functions._
   *   9 · avg-cell-occupancy · n, never n².
   */
 object Ext12Queries {
-
-  /** Whitespace tokens of documents.text with empties dropped. */
-  private def toks12: org.apache.spark.sql.Column =
-    filter(split(col("text"), " "), t => t =!= lit(""))
 
   /** Deterministic mid-latitude point cloud from customer keys (prime
     * lattice, reduced mod-first so the multiply can never overflow).
@@ -221,7 +218,7 @@ object Ext12Queries {
     // data pipeline reports before trusting held-out perplexity.
     "text_train_coverage" -> ((s, dir) => {
       val t2 = Tables.documents(s, dir)
-        .select(col("doc_id"), col("lang"), toks12.as("toks"))
+        .select(col("doc_id"), col("lang"), nonEmptyTokens("text").as("toks"))
         .withColumn("n", size(col("toks"))).filter(col("n") >= 2)
         .withColumn("is_test",
           substring(md5(col("doc_id").cast("string")), 1, 2) < "29")
@@ -291,7 +288,7 @@ object Ext12Queries {
     "dedup_cdc" -> ((s, dir) => {
       val tok = Tables.documents(s, dir)
         .select(col("doc_id"), col("source"),
-          posexplode(filter(split(col("text"), " "), t => t =!= lit(""))))
+          posexplode(nonEmptyTokens("text")))
         .withColumnRenamed("col", "w").withColumnRenamed("pos", "i")
       val wd = Window.partitionBy(col("doc_id")).orderBy(col("i"))
       val seg = tok

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{Q, Tables}
+import graft.api.TextOps.nonEmptyTokens
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -38,9 +39,6 @@ import org.apache.spark.sql.functions._
   *   op shares).
   */
 object Ext13Queries {
-
-  private def toks13: org.apache.spark.sql.Column =
-    filter(split(col("text"), " "), t => t =!= lit(""))
 
   val queries: Map[String, Q] = Map(
 
@@ -181,7 +179,7 @@ object Ext13Queries {
     "dedup_soft_weights" -> ((s, dir) => {
       // 8-token shingle explode over a narrow scan — fan out
       val tk = Tables.fanOutIfNarrow(Tables.documents(s, dir), "doc_id")
-        .select(col("doc_id"), col("source"), toks13.as("t"))
+        .select(col("doc_id"), col("source"), nonEmptyTokens("text").as("t"))
         .filter(size(col("t")) >= 8)
       // the shingle key is shuffled TWICE (df groupBy + join back): hash
       // it to a fixed 16-hex-char md5 prefix so the shuffle carries 16
@@ -238,7 +236,7 @@ object Ext13Queries {
         .select(col("doc_id"), col("lang"),
           when(substring(md5(col("doc_id").cast("string")), 1, 1) < "8", "train")
             .otherwise("val").as("split"),
-          toks13.as("t"))
+          nonEmptyTokens("text").as("t"))
         .filter(size(col("t")) >= 2)
       val bi = tk.select(col("lang"), col("split"),
         explode(expr("transform(sequence(1, size(t) - 1), " +
@@ -377,7 +375,7 @@ object Ext13Queries {
       // checkpoint lazy so the first consumer materializes it (r16)
       val tk = Tables.fanOutIfNarrow(
           Tables.documents(s, dir).select(col("doc_id"), col("text")), "doc_id")
-        .select(col("doc_id"), toks13.as("t")).filter(size(col("t")) >= 3)
+        .select(col("doc_id"), nonEmptyTokens("text").as("t")).filter(size(col("t")) >= 3)
       val sh = tk.select(col("doc_id"),
         explode(expr("transform(sequence(1, size(t) - 2), " +
           "i -> array_join(slice(t, i, 3), ' '))")).as("w"))
@@ -417,7 +415,7 @@ object Ext13Queries {
     // contribute the closed-form 0.5·q·ln2 tail).
     "text_js_divergence" -> ((s, dir) => {
       val w = Tables.documents(s, dir)
-        .select(col("lang"), explode(toks13).as("tok"))
+        .select(col("lang"), explode(nonEmptyTokens("text")).as("tok"))
         .select(col("lang"), substring(md5(col("tok")), 1, 2).as("b"))
       val pl = w.groupBy(col("lang"), col("b")).agg(count(lit(1)).as("c"))
         .localCheckpoint(false) // lazy: first consumer materializes (r16)

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{Q, Tables}
+import graft.api.TextOps.nonEmptyTokens
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -196,7 +197,7 @@ object Ext14Queries {
     "text_mattr" -> ((s, dir) => {
       val d = Tables.documents(s, dir)
         .select(col("doc_id"), col("lang"),
-          filter(split(col("text"), " "), t => t =!= lit("")).as("t"))
+          nonEmptyTokens("text").as("t"))
         .filter(size(col("t")) >= 50)
       val perDoc = d
         .select(col("doc_id"), col("lang"),

@@ -233,9 +233,7 @@ object Ext16Queries {
       import s.implicits._
       val docs = Tables.documents(s, dir)
       val n = Tables.rowCountCached(s, s"$dir/documents.parquet")
-      val prefLen =
-        if (n <= 2000L) 1 else if (n <= 32000L) 2
-        else if (n <= 512000L) 3 else 4
+      val prefLen = graft.api.DedupOps.samplePrefixLen(n)
       val g = substring(md5(col("doc_id").cast("string")), 1, prefLen)
       // the explode+distinct map side runs over the narrow scan — fan out
       val toks = Tables.fanOutIfNarrow(docs, "doc_id")

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{Q, Tables}
+import graft.api.TextOps.nonEmptyTokens
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -17,9 +18,6 @@ import org.apache.spark.sql.functions._
   * 9dp before their ≤25-row sum.
   */
 object Ext17Queries {
-
-  private def toks17: org.apache.spark.sql.Column =
-    filter(split(col("text"), " "), t => t =!= lit(""))
 
   /** 30-min-gap sessionization with per-session bounds — the Ext15
     * spine plus min/max event micros for duration statistics.
@@ -187,7 +185,7 @@ object Ext17Queries {
     "text_source_overlap" -> ((s, dir) => {
       // tokenize+explode over the narrow scan — fan out first (r16)
       val st = Tables.fanOutIfNarrow(Tables.documents(s, dir), "doc_id")
-        .select(col("source"), explode(toks17).as("tok")).distinct()
+        .select(col("source"), explode(nonEmptyTokens("text")).as("tok")).distinct()
       val sizes = st.groupBy(col("source")).agg(count(lit(1)).as("vocab"))
       val inter = st.as("x").join(st.as("y"),
           col("x.tok") === col("y.tok") && col("x.source") < col("y.source"))
@@ -211,7 +209,7 @@ object Ext17Queries {
     // explicit integer df bands.
     "dedup_shingle_profile" -> ((s, dir) => {
       val tk = Tables.documents(s, dir)
-        .select(col("doc_id"), toks17.as("t"))
+        .select(col("doc_id"), nonEmptyTokens("text").as("t"))
         .filter(size(col("t")) >= 8)
       val sh = tk.select(col("doc_id"),
         explode(expr("transform(sequence(1, size(t) - 7), " +

@@ -168,20 +168,18 @@ object Ext18Queries {
     "emb_hubness_sampled" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
       val n = Tables.rowCountCached(s, s"$dir/embeddings.parquet")
-      val prefLen =
-        if (n <= 2000L) 1 else if (n <= 32000L) 2
-        else if (n <= 512000L) 3 else 4
+      val prefLen = graft.api.DedupOps.samplePrefixLen(n)
       // the double-cast + md5 prep feeds both equi-join sides from the
       // narrow scan — fan out first (no-op on a wide table, r16)
-      val e = Tables.fanOutIfNarrow(emb, "vec_id").select(col("vec_id"),
-        transform(col("embedding"), x => x.cast("double")).as("e"),
-        substring(md5(col("vec_id").cast("string")), 1, prefLen).as("grp"))
+      val e = graft.api.SimilarityOps.asDouble(
+          Tables.fanOutIfNarrow(emb, "vec_id"), "embedding", col("vec_id"))
+        .withColumn("grp", substring(md5(col("vec_id").cast("string")), 1, prefLen))
       val pairs = e.select(col("grp"), col("vec_id").as("ia"), col("e").as("ea"))
         .join(e.select(col("grp"), col("vec_id").as("ib"), col("e").as("eb")),
           Seq("grp"))
         .filter(col("ia") =!= col("ib"))
         .select(col("ia"), col("ib"),
-          round(graft.functions.DotProduct.dot(col("ea"), col("eb")), 6).as("cos"))
+          graft.api.SimilarityOps.exactCos(col("ea"), col("eb")).as("cos"))
       val top1 = pairs.withColumn("rn", row_number().over(
           Window.partitionBy(col("ia")).orderBy(desc("cos"), col("ib"))))
         .filter(col("rn") === 1)

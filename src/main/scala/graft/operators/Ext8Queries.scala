@@ -103,11 +103,6 @@ object Ext8Queries {
       .drop("_pid", "_mid", "_local_rn", "_off"), total)
   }
 
-  private def embDouble(s: org.apache.spark.sql.SparkSession, dir: String) =
-    Tables.embeddings(s, dir)
-      .select(col("vec_id"), col("label"),
-        transform(col("embedding"), x => x.cast("double")).as("e"))
-
   val queries: Map[String, Q] = Map(
 
     // equal-width binning of order totals into 10 buckets from the
@@ -409,7 +404,7 @@ object Ext8Queries {
     // dot-as-cosine)
     "emb_norm_qc" -> ((s, dir) => {
       val norm = sqrt(graft.functions.DotProduct.dot(col("e"), col("e")))
-      embDouble(s, dir)
+      AnnQueries.embDouble(s, dir)
         .select(col("label"), norm.as("nm"))
         .groupBy(col("label"))
         .agg(count(lit(1)).as("n"),
@@ -427,10 +422,10 @@ object Ext8Queries {
       // BNLJ parallelism == streamed-side partitions; the narrow scan
       // otherwise puts all n²/2 dot products on ONE task (r16)
       val a = Tables.fanOutIfNarrow(
-        embDouble(s, dir).select(col("vec_id").as("ia"), col("e").as("ea")), "ia")
-      val b = embDouble(s, dir).select(col("vec_id").as("ib"), col("e").as("eb"))
+        AnnQueries.embDouble(s, dir).select(col("vec_id").as("ia"), col("e").as("ea")), "ia")
+      val b = AnnQueries.embDouble(s, dir).select(col("vec_id").as("ib"), col("e").as("eb"))
       a.join(b, col("ia") < col("ib"))
-        .select(round(graft.functions.DotProduct.dot(col("ea"), col("eb")), 6).as("cos"))
+        .select(graft.api.SimilarityOps.exactCos(col("ea"), col("eb")).as("cos"))
         .withColumn("bucket",
           least(greatest(floor(col("cos") * 10), lit(-10L)), lit(9L)).cast("int"))
         .groupBy(col("bucket"))
@@ -451,16 +446,14 @@ object Ext8Queries {
     // schema as the exact tier; estimates converge at 1/√pairs
     "sim_pair_hist_sampled" -> ((s, dir) => {
       val n = Tables.rowCountCached(s, s"$dir/embeddings.parquet")
-      val prefLen =
-        if (n <= 2000L) 1 else if (n <= 32000L) 2
-        else if (n <= 512000L) 3 else 4
+      val prefLen = graft.api.DedupOps.samplePrefixLen(n)
       val g = substring(md5(col("vec_id").cast("string")), 1, prefLen)
-      val a = embDouble(s, dir)
+      val a = AnnQueries.embDouble(s, dir)
         .select(col("vec_id").as("ia"), col("e").as("ea"), g.as("grp"))
-      val b = embDouble(s, dir)
+      val b = AnnQueries.embDouble(s, dir)
         .select(col("vec_id").as("ib"), col("e").as("eb"), g.as("grp"))
       a.join(b, Seq("grp")).filter(col("ia") < col("ib"))
-        .select(round(graft.functions.DotProduct.dot(col("ea"), col("eb")), 6).as("cos"))
+        .select(graft.api.SimilarityOps.exactCos(col("ea"), col("eb")).as("cos"))
         .withColumn("bucket",
           least(greatest(floor(col("cos") * 10), lit(-10L)), lit(9L)).cast("int"))
         .groupBy(col("bucket"))

@@ -34,11 +34,6 @@ object Ext9Queries {
   private def dayIdx(c: org.apache.spark.sql.Column) =
     datediff(c, lit("1990-01-01").cast("date"))
 
-  private def embDouble(s: org.apache.spark.sql.SparkSession, dir: String) =
-    Tables.embeddings(s, dir)
-      .select(col("vec_id"), col("label"),
-        transform(col("embedding"), x => x.cast("double")).as("e"))
-
   val queries: Map[String, Q] = Map(
 
     // cohort lifetime-value matrix: customers grouped by first-order
@@ -66,7 +61,7 @@ object Ext9Queries {
     // per-dimension embedding distribution audit (the drift monitor for
     // a vector corpus): one posexplode to (dim, x), hash-agg to 64 rows
     "emb_dim_stats" -> ((s, dir) => {
-      embDouble(s, dir)
+      AnnQueries.embDouble(s, dir)
         .select(posexplode(col("e")).as(Seq("dim", "x")))
         .groupBy(col("dim"))
         .agg(count(lit(1)).as("n"),
@@ -82,17 +77,13 @@ object Ext9Queries {
     // SAME centroid), broadcast back for a map-side argmax; ties break
     // toward the lower centroid label
     "sim_centroid_classify" -> ((s, dir) => {
-      val e = embDouble(s, dir)
-      val cent = e.select(col("label").as("clabel"), posexplode(col("e")).as(Seq("dim", "x")))
-        .groupBy(col("clabel"), col("dim"))
-        .agg(round(avg(col("x")), 6).as("cx"))
-        .groupBy(col("clabel"))
-        .agg(sort_array(collect_list(struct(col("dim"), col("cx")))).as("pairs"))
-        .select(col("clabel"),
-          transform(col("pairs"), p => p.getField("cx")).as("cvec"))
+      val e = AnnQueries.embDouble(s, dir)
+      val cent = graft.api.SimilarityOps
+        .meanVectors(e.withColumnRenamed("label", "clabel"), Seq("clabel"), "e")
+        .select(col("clabel"), transform(col("mean_e"), x => round(x, 6)).as("cvec"))
       val scored = e.crossJoin(broadcast(cent))
         .select(col("vec_id"), col("label"), col("clabel"),
-          round(graft.functions.DotProduct.dot(col("e"), col("cvec")), 6).as("dot"))
+          graft.api.SimilarityOps.exactCos(col("e"), col("cvec")).as("dot"))
       val w = Window.partitionBy(col("vec_id")).orderBy(desc("dot"), col("clabel"))
       scored.withColumn("rk", row_number().over(w)).filter(col("rk") === 1)
         .groupBy(col("label"))

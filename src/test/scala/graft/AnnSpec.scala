@@ -103,6 +103,48 @@ class AnnSpec extends AnyFunSuite {
     assert(recall >= 0.5, s"recall=$recall (graph=${ann.size}, brute=${brute.size})")
   }
 
+  test("every per-query top-k tier honors the shared rank/score contract") {
+    // exact copies of the first 200 vectors under new ids: equal scores
+    // occur, so the tie order (ascending neighbor_id) is exercised
+    val base = Tables.embeddings(spark, sf)
+    val emb = base.unionByName(
+      base.filter(col("vec_id") < 200).withColumn("vec_id", col("vec_id") + 1000000L))
+    val qp = col("vec_id") < 10
+    var ties = 0
+    val ops = graft.api.SimilarityOps
+    val tiers = Seq(
+      "ivfTopK" -> ops.ivfTopK(emb, "vec_id", "embedding", qp, numSeeds = 8, k = 5),
+      "kmeansIvfTopK" -> ops.kmeansIvfTopK(emb, "vec_id", "embedding", qp,
+        k = 5, nClusters = 8, iters = 1, nprobe = 2),
+      "truncatedTopK" -> ops.truncatedTopK(emb, "vec_id", "embedding", qp, dims = 32, k = 5),
+      "pqTopK" -> ops.pqTopK(emb, "vec_id", "embedding", qp, k = 5, m = 16, ksub = 16, iters = 3),
+      "graphAnnSearch" -> ops.graphAnnSearch(emb, "vec_id", "embedding",
+        ops.graphAnnAdjacency(emb, "vec_id", "embedding"), qp, k = 5))
+    for ((tier, df) <- tiers) {
+      assert(df.columns.take(3).sameElements(Seq("q_id", "rank", "neighbor_id")),
+        s"$tier columns: ${df.columns.mkString(",")}")
+      val byQ = df.collect().groupBy(_.getLong(0))
+      assert(byQ.nonEmpty, s"$tier returned no query")
+      for ((q, rs) <- byQ) {
+        val ranked = rs.sortBy(_.getInt(1))
+        val ids = ranked.map(_.getLong(2))
+        val scores = ranked.map(_.getDouble(3))
+        assert(ranked.length <= 5 && ranked.map(_.getInt(1)).sameElements(1 to ranked.length),
+          s"$tier q=$q ranks ${ranked.map(_.getInt(1)).mkString(",")}")
+        assert(!ids.contains(q) && ids.distinct.length == ids.length,
+          s"$tier q=$q neighbors ${ids.mkString(",")}")
+        for (i <- 1 until ranked.length) {
+          if (scores(i) == scores(i - 1)) ties += 1
+          assert(scores(i) < scores(i - 1) ||
+            (scores(i) == scores(i - 1) && ids(i) > ids(i - 1)),
+            s"$tier q=$q rank ${i + 1}: (${scores(i)}, ${ids(i)}) after " +
+              s"(${scores(i - 1)}, ${ids(i - 1)})")
+        }
+      }
+    }
+    assert(ties > 0, "no equal scores: the tie order went unchecked")
+  }
+
   test("declared ANN invariant reports are all-green (recall floors + brute top-1)") {
     for (name <- Seq("sim_ann_ivf", "sim_ann_kmeans", "sim_ann_graph")) {
       val rows = SparkEntry.queries(name)(spark, sf).collect()
