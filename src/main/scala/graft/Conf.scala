@@ -35,4 +35,21 @@ object Conf {
       // SparkContext, where the static conf is not re-read
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
       .withExtensions(new graft.plans.GraftExtensions()(_))
+
+  /** The session graft.Bench runs on, for the probe mains: local mode on
+    * SPARK_GRAFT_CPUS cores (default 32) with as many shuffle partitions,
+    * AQE on, and GraftExtensions.
+    */
+  def benchSession(): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.ui.enabled", "false")
+      .config("spark.sql.adaptive.enabled", "true")
+      .withExtensions(new graft.plans.GraftExtensions()(_))
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
 }

@@ -70,19 +70,21 @@ object StreamingDeclared {
   private def stagedEventsParts(s: SparkSession, sfDir: String,
       prefix: String)(parts: DataFrame => Seq[DataFrame]): String =
     staged(sfDir, prefix) { dir =>
-      val raw = StreamingJobs.rawEventsReader(s).parquet(s"$sfDir/events.parquet")
-      parts(raw).zipWithIndex.foreach { case (df, i) =>
-        val stage = dir.resolve(s"stage_$i")
-        df.coalesce(1).write.mode("overwrite").parquet(stage.toString)
-        val src = stage.toFile.listFiles()
-          .find(_.getName.endsWith(".parquet"))
-          .getOrElse(sys.error(s"no parquet part written under $stage"))
-        val dst = dir.resolve(s"events_$i.parquet")
-        java.nio.file.Files.move(src.toPath, dst,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        java.nio.file.Files.setLastModifiedTime(dst,
-          java.nio.file.attribute.FileTime.fromMillis(1700000000000L + i * 60000L))
-        graft.deleteRecursively(stage)
+      StreamingJobs.readingRawEvents(s) {
+        val raw = s.read.parquet(s"$sfDir/events.parquet")
+        parts(raw).zipWithIndex.foreach { case (df, i) =>
+          val stage = dir.resolve(s"stage_$i")
+          df.coalesce(1).write.mode("overwrite").parquet(stage.toString)
+          val src = stage.toFile.listFiles()
+            .find(_.getName.endsWith(".parquet"))
+            .getOrElse(sys.error(s"no parquet part written under $stage"))
+          val dst = dir.resolve(s"events_$i.parquet")
+          java.nio.file.Files.move(src.toPath, dst,
+            java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+          java.nio.file.Files.setLastModifiedTime(dst,
+            java.nio.file.attribute.FileTime.fromMillis(1700000000000L + i * 60000L))
+          graft.deleteRecursively(stage)
+        }
       }
     }
 

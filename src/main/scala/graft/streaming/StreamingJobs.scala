@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, DataFrameReader, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout,
   OutputMode, StreamingQuery, Trigger}
@@ -11,9 +11,12 @@ import org.apache.spark.sql.types._
   * A job is a batch-shaped plan over a streaming source plus a trigger,
   * an output mode and a sink, and every job runs through [[run]]. The run
   * pins the microbatch session settings ([[StatePartitions]] shuffle
-  * partitions, AQE off), scopes the RocksDB state-store provider when the
-  * job asks for it, starts the query, waits for it and restores the
-  * session values. The trigger is one of three:
+  * partitions, AQE off, raw NANOS timestamps) and the checkpoint
+  * filesystem ([[NioLocalFs]]: without libhadoop the stock local one
+  * forks a `chmod` or `readlink` process per checkpoint file), scopes the
+  * RocksDB state-store provider when the job asks for it, starts the
+  * query, waits for it and restores the session values, so a job leaves
+  * the caller's session as it found it. The trigger is one of three:
   *  - AvailableNow (the default): batch-like semantics over whatever data
   *    is present, one microbatch per staged file under the
   *    one-file-per-trigger throttle of [[readEventsStream]] — the idiom
@@ -52,27 +55,38 @@ object StreamingJobs {
     */
   private[streaming] def run(df: DataFrame, trigger: Trigger = Trigger.AvailableNow(),
       rocksDb: Boolean = false)(
-      sink: DataStreamWriter[Row] => DataStreamWriter[Row]): StreamingQuery = {
-    val conf = df.sparkSession.conf
-    val pinned = Seq(
+      sink: DataStreamWriter[Row] => DataStreamWriter[Row]): StreamingQuery =
+    withConf(df.sparkSession, Seq(
       "spark.sql.shuffle.partitions" -> StatePartitions.toString,
       // AQE off for microbatch jobs: stateful operators disable it anyway,
       // and stateless stages pay a full AQE replan per microbatch (extra
       // stage barriers + plan serialization) — measured 3-4x slower
       // across this suite's AvailableNow jobs.
-      "spark.sql.adaptive.enabled" -> "false") ++
+      "spark.sql.adaptive.enabled" -> "false",
+      // checkpoint and state-store files go through FileContext; without
+      // libhadoop the stock local one forks chmod/readlink per file
+      "fs.AbstractFileSystem.file.impl" -> classOf[NioLocalFs.Checksummed].getName,
+      NanosAsLong) ++
       // transformWithState requires the RocksDB state store
       (if (rocksDb) Seq("spark.sql.streaming.stateStore.providerClass" ->
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      else Nil)
-    val saved = pinned.map { case (k, _) => k -> conf.getOption(k) }
-    pinned.foreach { case (k, v) => conf.set(k, v) }
-    try {
+      else Nil)) {
       val q = sink(df.writeStream.trigger(trigger)).start()
       if (trigger == Drain) try q.processAllAvailable() finally q.stop()
       else q.awaitTermination()
       q
-    } finally saved.foreach {
+    }
+
+  /** Run `body` with the session values `pinned` set, then restore them:
+    * a key that was unset is unset again, not set to its default.
+    */
+  private def withConf[T](spark: SparkSession, pinned: Seq[(String, String)])(body: => T): T = {
+    val conf = spark.conf
+    val set = conf.getAll
+    val saved = pinned.map { case (k, _) => k -> set.get(k) }
+    pinned.foreach { case (k, v) => conf.set(k, v) }
+    try body
+    finally saved.foreach {
       case (k, Some(v)) => conf.set(k, v)
       case (k, None) => conf.unset(k)
     }
@@ -85,15 +99,16 @@ object StreamingJobs {
     df.sparkSession.table(name)
   }
 
-  /** Batch reader for raw events parquet: `ts` keeps its on-disk
-    * encoding, parquet NANOS timestamps read as raw longs that
-    * Tables.normalizeEventsTs converts. The conf is set on the session
-    * because the streams' own scans read under it too.
+  /** Parquet NANOS timestamps read as raw longs, which
+    * Tables.normalizeEventsTs converts; `ts` keeps its on-disk encoding.
     */
-  private[streaming] def rawEventsReader(spark: SparkSession): DataFrameReader = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.read
-  }
+  private val NanosAsLong = "spark.sql.legacy.parquet.nanosAsLong" -> "true"
+
+  /** `body`, a batch read of raw events parquet, under [[NanosAsLong]];
+    * the streams' own scans read under it through [[run]].
+    */
+  private[streaming] def readingRawEvents[T](spark: SparkSession)(body: => T): T =
+    withConf(spark, Seq(NanosAsLong))(body)
 
   /** File streams need an explicit schema. Hardcoding one is how round 4
     * silently corrupted timestamps when the testdata re-encoded `ts`
@@ -114,13 +129,13 @@ object StreamingJobs {
     new java.util.concurrent.ConcurrentHashMap[String, StructType]()
 
   def eventsRawSchema(spark: SparkSession, dir: String): StructType = {
-    val reader = rawEventsReader(spark)
     val files = Option(new java.io.File(dir).listFiles())
       .getOrElse(Array.empty[java.io.File])
       .filter(_.getName.endsWith(".parquet"))
       .map(f => s"${f.getName}:${f.length}:${f.lastModified}")
       .sorted.mkString(",")
-    schemaCache.computeIfAbsent(s"$dir|$files", _ => reader.parquet(dir).schema)
+    schemaCache.computeIfAbsent(s"$dir|$files",
+      _ => readingRawEvents(spark)(spark.read.parquet(dir).schema))
   }
 
   /** Streaming scan of an events parquet directory, ts normalized to a

@@ -205,6 +205,16 @@ class StreamingSpec extends AnyFunSuite {
     assert(footprint() === first, "(temp views, graft_rt entries) after run 1 vs run 2")
   }
 
+  test("the streaming workload's keys leave the session conf as they found it") {
+    // a fresh session: the shared one already carries what earlier specs set
+    val s = spark.newSession()
+    val before = s.conf.getAll
+    Seq("stream_stream_full_outer", "stream_stream_outer", "stream_tumbling", "stream_dedup",
+      "stream_static_join", "stream_stateful", "stream_foreachbatch")
+      .foreach(k => SparkEntry.queries(k)(s, sf).collect())
+    assert(s.conf.getAll === before)
+  }
+
   test("multi-file streaming keys keep their microbatch counts") {
     // one file per trigger: 2 split files, 4 sentinel-staged files, and
     // one microbatch for a single staged file
