@@ -265,7 +265,7 @@ private[lake] class LakeDsv2Table(spark: SparkSession,
   // with BATCH_WRITE advertised); dynamic partition overwrite is the
   // one mode Spark serves ONLY through a full v2 BATCH_WRITE, so a
   // clean (identity-mapped, unbucketed) snapshot advertises
-  // OVERWRITE_DYNAMIC and plans the native [[LakeDynamicBatchWrite]] —
+  // OVERWRITE_DYNAMIC and plans the native [[LakeDynamicWrite]] —
   // renamed/bucketed snapshots keep the LakeDmlRule rewrite fallback
   // (LakeSqlDml), which is why the capability is conditional: an
   // advertised-but-unservable capability would pass analysis and fail
@@ -326,15 +326,17 @@ private[lake] class LakeDsv2Table(spark: SparkSession,
   *    failing later inside V2Writes with a confusing error);
   *  - dynamic partition overwrite (`df.writeTo(t).overwritePartitions()`,
   *    dynamic-mode INSERT OVERWRITE) is the one mode with NO V1
-  *    fallback exec: it builds the native [[LakeDynamicBatchWrite]] —
-  *    executor-side DataWriters write real parquet into a staging
-  *    directory via [[org.apache.spark.sql.graftbridge.LakeWriteBridge]],
-  *    the driver-side commit adopts the files (no second write of the
-  *    new data) and lands ONE atomic
+  *    fallback exec: it builds the native [[LakeDynamicWrite]] —
+  *    executor-side [[LakeFileWriter]]s write real parquet into a
+  *    staging directory and return each file's stats, the driver-side
+  *    commit adopts the files (no second write or reread of the new
+  *    data) and lands ONE atomic
   *    [[LakeTable.commitDynamicOverwriteStaged]] mutation replacing
   *    exactly the partitions present. The write requests a
-  *    partition-clustered distribution so each file is partition-pure
-  *    — touched files replace whole, copy-on-write stays bounded.
+  *    partition-clustered, partition-sorted layout and the writer
+  *    starts a file per partition value, so each file is
+  *    partition-pure (min = max on every partition column) — touched
+  *    files replace whole, copy-on-write stays bounded.
   */
 private[lake] class LakeWriteBuilder(spark: SparkSession, t: LakeTable,
     writeSchema: StructType)
@@ -391,114 +393,54 @@ private[lake] object LakeWriteBuilder {
   final case class ByFilter(filters: Array[Filter]) extends Mode
 }
 
-/** The native v2 Write for dynamic partition overwrite. Declares a
-  * partition-clustered required distribution (Spark shuffles the query
-  * output so every output file is partition-pure — the layout that
-  * keeps the commit's touched-file set replace-whole at any scale),
-  * then hands a [[LakeDynamicBatchWrite]].
+/** The native v2 Write and BatchWrite for dynamic partition overwrite.
+  * It declares a partition-clustered distribution, sorted by the
+  * partition columns within each task, so each executor-side
+  * [[LakeFileWriter]] — the writer behind every lake data file — sees
+  * every partition value's rows together and writes one file per value
+  * (the partition-pure layout that keeps the commit's touched-file set
+  * replace-whole at any scale) under `<table>/_staging_<job>/`, and
+  * returns each file's stats and partition tuple. The driver commit
+  * ADOPTS the files into one atomic dynamic-overwrite mutation: no
+  * second write or reread of the new data. A crash before commit
+  * leaves only the staging directory, which the next vacuum collects —
+  * never a corrupt snapshot.
   */
 private[lake] class LakeDynamicWrite(spark: SparkSession, t: LakeTable,
     writeSchema: StructType) extends Write
-    with org.apache.spark.sql.connector.write.RequiresDistributionAndOrdering {
+    with org.apache.spark.sql.connector.write.RequiresDistributionAndOrdering
+    with org.apache.spark.sql.connector.write.BatchWrite {
   import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
-  import org.apache.spark.sql.connector.expressions.{Expressions, SortOrder}
-
-  private val partitionBy: Seq[String] =
-    t.manifest(t.currentVersion).partitionBy
-
-  override def requiredDistribution(): Distribution =
-    if (partitionBy.isEmpty) Distributions.unspecified()
-    else Distributions.clustered(
-      partitionBy.map(p => Expressions.identity(p):
-        org.apache.spark.sql.connector.expressions.Expression).toArray)
-
-  override def requiredOrdering(): Array[SortOrder] = Array.empty
-
-  override def toBatch: org.apache.spark.sql.connector.write.BatchWrite =
-    new LakeDynamicBatchWrite(spark, t, writeSchema)
-}
-
-/** BatchWrite: executors stream rows into per-task parquet files under
-  * `<table>/_staging_v2_<job>/` (Spark's own parquet OutputWriter via
-  * the bridge — vectorized-readable, real codec); the driver commit
-  * ADOPTS the staged files into one atomic dynamic-overwrite mutation.
-  * A crash before commit leaves only the staging directory, which the
-  * next vacuum collects — never a corrupt snapshot. No second write of
-  * the new data anywhere (the round-13 rewrite path re-staged it).
-  */
-private[lake] class LakeDynamicBatchWrite(spark: SparkSession, t: LakeTable,
-    writeSchema: StructType)
-    extends org.apache.spark.sql.connector.write.BatchWrite {
+  import org.apache.spark.sql.connector.expressions.{Expression, Expressions,
+    SortDirection, SortOrder}
   import org.apache.spark.sql.connector.write.{DataWriterFactory,
     PhysicalWriteInfo, WriterCommitMessage}
 
-  private val job = java.util.UUID.randomUUID().toString.replace("-", "").take(12)
-  private val stagingDir = s"${t.path}/_staging_v2_$job"
+  private val m: Manifest = t.manifest(t.currentVersion)
+  private val staging = Paths.get(t.path, s"_staging_${LakeFileWriter.newJob()}")
+  private def partitionRefs: Seq[Expression] =
+    m.partitionBy.map(p => Expressions.identity(p): Expression)
 
-  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
-    Files.createDirectories(Paths.get(stagingDir))
-    new LakeDataWriterFactory(stagingDir,
-      org.apache.spark.sql.graftbridge.LakeWriteBridge.prepare(spark, writeSchema))
-  }
+  override def requiredDistribution(): Distribution =
+    if (m.partitionBy.isEmpty) Distributions.unspecified()
+    else Distributions.clustered(partitionRefs.toArray)
+
+  override def requiredOrdering(): Array[SortOrder] =
+    partitionRefs.map(Expressions.sort(_, SortDirection.ASCENDING)).toArray
+
+  override def toBatch: org.apache.spark.sql.connector.write.BatchWrite = this
+
+  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
+    LakeFileWriter.factory(spark, staging, writeSchema, m.statsCols, m.partitionBy)
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val names = messages.collect {
-      case m: LakeV2FileMessage if m.name.nonEmpty => m.name.get
-    }.toSeq
-    t.commitDynamicOverwriteStaged(stagingDir, names)
-  }
-
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val dir = new java.io.File(stagingDir)
-    Option(dir.listFiles()).foreach(_.foreach(_.delete()))
-    dir.delete()
-    ()
-  }
-}
-
-private[lake] case class LakeV2FileMessage(name: Option[String], rows: Long)
-    extends org.apache.spark.sql.connector.write.WriterCommitMessage
-
-private[lake] class LakeDataWriterFactory(stagingDir: String,
-    factory: org.apache.spark.sql.graftbridge.LakeWriteBridge.Factory)
-    extends org.apache.spark.sql.connector.write.DataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long)
-      : org.apache.spark.sql.connector.write.DataWriter[org.apache.spark.sql.catalyst.InternalRow] =
-    new LakeV2DataWriter(stagingDir, partitionId, taskId, factory)
-}
-
-/** One task's writer: lazily opens the parquet file on first row, so
-  * empty input partitions produce NO file (not a 0-row stub in the
-  * manifest).
-  */
-private[lake] class LakeV2DataWriter(stagingDir: String, partitionId: Int,
-    taskId: Long,
-    factory: org.apache.spark.sql.graftbridge.LakeWriteBridge.Factory)
-    extends org.apache.spark.sql.connector.write.DataWriter[org.apache.spark.sql.catalyst.InternalRow] {
-
-  private val fileName = f"v2-$partitionId%05d-$taskId.parquet"
-  private var writer: org.apache.spark.sql.graftbridge.LakeWriteBridge.ParquetWriter = _
-  private var rows = 0L
-
-  override def write(row: org.apache.spark.sql.catalyst.InternalRow): Unit = {
-    if (writer == null)
-      writer = factory.newWriter(s"$stagingDir/$fileName")
-    writer.write(row)
-    rows += 1
-  }
-
-  override def commit(): org.apache.spark.sql.connector.write.WriterCommitMessage = {
-    if (writer != null) writer.close()
-    LakeV2FileMessage(if (rows > 0) Some(fileName) else None, rows)
-  }
-
-  override def abort(): Unit = {
-    if (writer != null) writer.close()
-    new java.io.File(stagingDir, fileName).delete()
+    t.commitDynamicOverwriteStaged(staging,
+      messages.toSeq.collect { case w: LakeWriteMessage => w })
     ()
   }
 
-  override def close(): Unit = ()
+  override def abort(messages: Array[WriterCommitMessage]): Unit =
+    graft.deleteRecursively(staging)
 }
 
 /** V1Scan fallback for snapshots the pure-parquet scan cannot serve

@@ -73,7 +73,7 @@ case class LakeDmlRule(spark: SparkSession) extends Rule[LogicalPlan] {
     // dynamic partition overwrite (writeTo(...).overwritePartitions(),
     // dynamic-mode INSERT OVERWRITE): a clean catalog snapshot
     // advertises OVERWRITE_DYNAMIC and runs Spark's NATIVE v2
-    // BatchWrite ([[LakeDynamicBatchWrite]] — executor-parallel parquet,
+    // BatchWrite ([[LakeDynamicWrite]] — executor-parallel parquet,
     // no second write), so the rewrite SKIPS it; renamed/bucketed
     // snapshots (no native capability) keep this post-hoc route to the
     // lake's atomic replaceWhere on the partitions present in the data

@@ -4,7 +4,6 @@ import java.io.File
 import java.nio.file.{FileAlreadyExistsException, Files, Paths, StandardCopyOption}
 import java.util.UUID
 
-import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
@@ -42,9 +41,9 @@ import org.json4s.jackson.JsonMethods
   *    rewrites ONLY files whose per-file key [min,max] — recorded in
   *    the manifest at write time — can contain updated keys; `delete`
   *    rewrites ONLY files that actually contain matching rows (probed
-  *    with one `input_file_name()` aggregation). Untouched files carry
-  *    over by reference: at 100 TB a point-merge rewrites a handful of
-  *    files, not the table.
+  *    with one distinct over the rows' `_metadata` file). Untouched
+  *    files carry over by reference: at 100 TB a point-merge rewrites
+  *    a handful of files, not the table.
   *  - **Time travel**: `readVersion(n)` reads any retained snapshot;
   *    `history()` lists the commit log. `vacuum(retain)` drops the
   *    manifests older than the retained window and every data file no
@@ -55,8 +54,11 @@ import org.json4s.jackson.JsonMethods
   * Scale shape: manifests are control-plane (one small line per file —
   * at 1 GB/file a 100 TB table is a ~100k-line manifest); the data
   * plane is ordinary parquet read via an explicit file list, so
-  * column pruning and predicate pushdown work unchanged. Stats-based
-  * file skipping for reads is exposed via [[LakeTable.prunedRead]].
+  * column pruning and predicate pushdown work unchanged. Every data
+  * file is written by one [[LakeFileWriter]] task, which computes the
+  * file's manifest stats (rows, min/max, null counts, HLL sketch) as
+  * it writes — no stats job ever rereads the data. Stats-based file
+  * skipping for reads is exposed via [[LakeTable.prunedRead]].
   */
 class LakeTable private (spark: SparkSession, val path: String) {
   import LakeTable._
@@ -393,7 +395,7 @@ class LakeTable private (spark: SparkSession, val path: String) {
     val alignedPhys =
       if (base0.physNames.isEmpty) aligned
       else aligned.toDF(aligned.columns.map(base0.physOf).toIndexedSeq: _*)
-    val staged = LakeTable.stage(spark, path, alignedPhys,
+    val staged = LakeFileWriter.stage(spark, path, alignedPhys,
       base0.statsCols.map(base0.physOf), base0.partitionBy.map(base0.physOf),
       base0.bucketBy.map(base0.physOf), base0.buckets)
     var proven: Map[String, String] = null
@@ -446,25 +448,7 @@ class LakeTable private (spark: SparkSession, val path: String) {
     * rejected up front with the constraint's name, BEFORE any data is
     * staged: drop or migrate the constraint first, the Delta rule).
     */
-  def overwrite(df: DataFrame): Int = {
-    val v = currentVersion
-    val base = manifest(v)
-    validateChecksResolve(base.checks, df.schema)
-    require(base.partitionBy.forall(df.columns.contains),
-      s"overwrite must keep the partition columns ${base.partitionBy.mkString(", ")}")
-    // same up-front rejection for the bucket layout: without it the
-    // missing column only surfaces as an opaque AnalysisException inside
-    // stage()'s repartition, after the scratch directory exists
-    require(base.bucketBy.forall(df.columns.contains),
-      s"overwrite must keep the bucket columns ${base.bucketBy.mkString(", ")}")
-    // every file is replaced, so the column-mapping indirection resets
-    // to identity: stage under the NEW logical names directly
-    val staged = stageFiles(df, base.copy(physNames = Map.empty))
-    enforceChecks(staged, base.copy(physNames = Map.empty), df.schema)
-    commit(v + 1, "overwrite",
-      staged, base.copy(schemaJson = df.schema.json,
-        statsCols = statsColsOf(df, base), physNames = Map.empty))
-  }
+  def overwrite(df: DataFrame): Int = overwriteAs("overwrite", df, Map.empty)
 
   /** [[overwrite]] carrying a txn-ledger entry IN THE SAME COMMIT — the
     * atomicity [[LakeMv]] needs: the refreshed view contents and the
@@ -472,20 +456,27 @@ class LakeTable private (spark: SparkSession, val path: String) {
     * leave an anchor pointing at un-applied (or double-applied) deltas.
     */
   private[lake] def overwriteWithTxn(df: DataFrame, txnKey: String,
-      txnVal: Long): Int = {
+      txnVal: Long): Int = overwriteAs("mv-refresh", df, Map(txnKey -> txnVal))
+
+  private def overwriteAs(op: String, df: DataFrame, txns: Map[String, Long]): Int = {
     val v = currentVersion
     val base = manifest(v)
     validateChecksResolve(base.checks, df.schema)
     require(base.partitionBy.forall(df.columns.contains),
       s"overwrite must keep the partition columns ${base.partitionBy.mkString(", ")}")
+    // same up-front rejection for the bucket layout: without it the
+    // missing column only surfaces as an opaque AnalysisException inside
+    // the stage's repartition, after the scratch directory exists
     require(base.bucketBy.forall(df.columns.contains),
       s"overwrite must keep the bucket columns ${base.bucketBy.mkString(", ")}")
+    // every file is replaced, so the column-mapping indirection resets
+    // to identity: stage under the NEW logical names directly
     val staged = stageFiles(df, base.copy(physNames = Map.empty))
     enforceChecks(staged, base.copy(physNames = Map.empty), df.schema)
-    commit(v + 1, "mv-refresh",
+    commit(v + 1, op,
       staged, base.copy(schemaJson = df.schema.json,
         statsCols = statsColsOf(df, base), physNames = Map.empty,
-        txns = base.txns + (txnKey -> txnVal)))
+        txns = base.txns ++ txns))
   }
 
   /** Upsert by equality on `keyCol`: rows of `updates` replace
@@ -765,53 +756,44 @@ class LakeTable private (spark: SparkSession, val path: String) {
     if (parts.isEmpty) return overwrite(df)
     val data = df.cache()
     try replaceWhere(partitionsCond(parts,
-      data.select(parts.map(col): _*).distinct().collect()), data)
+      data.select(parts.map(col): _*).distinct().collect().toSeq.map(_.toSeq)), data)
     finally data.unpersist(blocking = false)
   }
 
   /** The condition matching exactly the given partition-column tuples
     * (a NULL tuple value matches NULL); no tuples match nothing.
     */
-  private def partitionsCond(parts: Seq[String], tuples: Array[Row]): Column =
+  private def partitionsCond(parts: Seq[String], tuples: Seq[Seq[Any]]): Column =
     tuples.map { r =>
-      parts.zipWithIndex.map { case (p, i) =>
-        if (r.isNullAt(i)) col(p).isNull else col(p) === lit(r.get(i))
+      parts.zip(r).map { case (p, v) =>
+        if (v == null) col(p).isNull else col(p) === lit(v)
       }.reduce(_ && _)
     }.reduceOption(_ || _).getOrElse(lit(false))
 
   /** Native v2 BatchWrite landing for dynamic partition overwrite:
-    * adopt files the executor-side DataWriters already wrote into
-    * `stagingDir` (no second write of the new data — the round-13
-    * rewrite path re-staged it), stats them with the same combined
-    * job as [[stage]], and commit ONE atomic `overwrite-dynamic`
-    * mutation replacing exactly the partitions present in the data.
-    * Files are partition-clustered by the write's required
-    * distribution, so touched files are normally replaced whole; a
+    * adopt the files the executor-side [[LakeFileWriter]]s already
+    * wrote into `staging` (no second write of the new data), with the
+    * stats and the exact partition tuple each writer task returned, and
+    * commit ONE atomic `overwrite-dynamic` mutation replacing exactly
+    * the partitions present in the data. Each adopted file holds one
+    * partition tuple, so touched files are normally replaced whole; a
     * mixed file (written before partitioning was configured) keeps its
     * other-partition rows via a bounded copy-on-write rewrite.
     */
-  private[lake] def commitDynamicOverwriteStaged(stagingDir: String,
-      stagedNames: Seq[String]): Int = {
+  private[lake] def commitDynamicOverwriteStaged(staging: java.nio.file.Path,
+      messages: Seq[LakeWriteMessage]): Int = {
     val v = currentVersion
     val base = manifest(v)
     require(base.physNames.isEmpty && base.bucketBy.isEmpty,
       "native v2 dynamic overwrite serves identity-mapped, unbucketed " +
         "snapshots; renamed/bucketed tables route through LakeDmlRule")
-    val job = UUID.randomUUID().toString.replace("-", "").take(12)
-    val named = stagedNames.sorted.zipWithIndex.map { case (n, i) =>
-      val target = f"part-$job-$i%05d.parquet"
-      Files.move(Paths.get(stagingDir, n), Paths.get(path, target),
-        StandardCopyOption.ATOMIC_MOVE)
-      target
-    }
-    graft.deleteRecursively(Paths.get(stagingDir))
-    val staged = LakeTable.entriesFor(spark, path, named, base.statsCols)
+    val written = LakeFileWriter.moveIn(path, staging, LakeFileWriter.newJob(),
+      messages, bucketed = false)
+    graft.deleteRecursively(staging)
+    val staged = written.map(_.entry)
     enforceChecks(staged, base)
     val parts = base.partitionBy
-    val tuples =
-      if (parts.isEmpty || named.isEmpty) Array.empty[Row]
-      else spark.read.parquet(named.map(n => s"$path/$n"): _*)
-        .select(parts.map(col): _*).distinct().collect()
+    val tuples = if (parts.isEmpty) Nil else written.map(_.partition).distinct
     val cond = partitionsCond(parts, tuples)
     // unpartitioned: dynamic degrades to a full overwrite (every file
     // consumed unprobed), matching Spark's session-config dynamic
@@ -963,9 +945,9 @@ class LakeTable private (spark: SparkSession, val path: String) {
   /** The tail of [[changeRows]], shared with [[mergeGeneral]]: stage
     * `rows`, gate them against the CHECK constraints (when `checkRows`),
     * and commit `consumed` → `kept ++ staged` through [[commitMutation]]
-    * with `scope` as its conflict predicate. A zero-row staged file is
-    * deleted instead of committed, so no caller spends a job probing its
-    * output for emptiness first.
+    * with `scope` as its conflict predicate. Staging writes no file for
+    * an empty output, so no caller spends a job probing it for
+    * emptiness first.
     *
     * Cleanup: every file the change wrote — `written` (a DV sidecar,
     * adopted files) plus the staged ones — is deleted on a failure
@@ -983,10 +965,8 @@ class LakeTable private (spark: SparkSession, val path: String) {
     var files = written
     var publishing = false
     try {
-      val (empty, staged) = rows.fold(Seq.empty[FileEntry])(stageFiles(_, base))
-        .partition(_.rows == 0L)
-      files ++= (empty ++ staged).map(_.name)
-      empty.foreach(f => Files.deleteIfExists(Paths.get(path, f.name)))
+      val staged = rows.fold(Seq.empty[FileEntry])(stageFiles(_, base))
+      files ++= staged.map(_.name)
       if (checkRows) enforceChecks(staged, base)
       publishing = true
       commitMutation(v, base, op, consumed, kept ++ staged, scope)
@@ -1011,7 +991,7 @@ class LakeTable private (spark: SparkSession, val path: String) {
     */
   private def writeDvSidecar(hits: DataFrame)
       : Option[(String, Map[String, Long])] = {
-    val job = UUID.randomUUID().toString.replace("-", "").take(12)
+    val job = LakeFileWriter.newJob()
     val scratch = Paths.get(path, s"_staging_dv_$job")
     try {
       hits.coalesce(1).write.mode("overwrite").parquet(scratch.toString)
@@ -1320,7 +1300,7 @@ class LakeTable private (spark: SparkSession, val path: String) {
     *  2. Files referenced by NO manifest at all. These are either
     *     crash orphans (safe to delete) or — the race this grace window
     *     exists for — a concurrent writer's staged-but-not-yet-committed
-    *     files, which [[stage]] moves into the table root BEFORE the
+    *     files, which [[LakeFileWriter.stage]] moves into the table root BEFORE the
     *     manifest commit. Deleting those would corrupt the table the
     *     moment the writer commits, so unreferenced files are reclaimed
     *     only once older than `orphanGraceMs` (default 10 min, the
@@ -1346,12 +1326,12 @@ class LakeTable private (spark: SparkSession, val path: String) {
           now - new File(path, n).lastModified() >= orphanGraceMs
       }
     dataDead.foreach(n => Files.deleteIfExists(Paths.get(path, n)))
-    // orphaned v2 staging directories: a driver crash between the
-    // executors' writer commits and BatchWrite.commit leaves
-    // `_staging_v2_<job>` behind (the dynamic-overwrite path) — sweep
-    // whole directories once older than the grace window; a live
-    // in-flight write is always younger than the grace
-    val stagingDead = Option(new File(path).list((_, n) => n.startsWith("_staging_v2_")))
+    // orphaned staging directories: a driver crash between the writer
+    // tasks and the move-in (or the v2 BatchWrite.commit) leaves
+    // `_staging_<job>` behind — sweep whole directories once older
+    // than the grace window; a live in-flight write is always younger
+    // than the grace
+    val stagingDead = Option(new File(path).list((_, n) => n.startsWith("_staging_")))
       .getOrElse(Array.empty[String]).toSeq
       .filter(n => now - new File(path, n).lastModified() >= orphanGraceMs)
     stagingDead.foreach(n => graft.deleteRecursively(Paths.get(path, n)))
@@ -1774,7 +1754,7 @@ class LakeTable private (spark: SparkSession, val path: String) {
     val physDf =
       if (base.physNames.isEmpty) df
       else df.toDF(df.columns.map(base.physOf).toIndexedSeq: _*)
-    LakeTable.stage(spark, path, physDf,
+    LakeFileWriter.stage(spark, path, physDf,
       base.statsCols.map(base.physOf), base.partitionBy.map(base.physOf),
       base.bucketBy.map(base.physOf), base.buckets)
   }
@@ -2038,12 +2018,16 @@ object LakeTable {
     */
   private[lake] val StrStatLen = 64
 
-  /** lgConfigK for the per-file HLL ndv sketches the stats job records
-    * (HLL_4, 2^8 buckets ≈ 128 bytes packed, ~6.5% relative error) —
-    * small enough that a 100k-file manifest carries them without the
-    * control plane bloating, accurate enough that equality-selectivity
-    * and join-cardinality estimates stop being range-bound guesses.
-    * Sketches of the SAME lgK union losslessly across files.
+  /** lgConfigK for the per-file HLL ndv sketches [[LakeFileWriter]]
+    * records: an HLL_8 sketch serialized with `toUpdatableByteArray`
+    * (the bytes `hll_sketch_agg(_, 8)` returns), ~6.5% relative error.
+    * A file with few distinct values keeps the sparse coupon list or
+    * set (4 bytes a slot, 40 bytes for a handful of values); past that
+    * the sketch is the dense 2^8-register array, 296 bytes. Small
+    * enough that a 100k-file manifest carries them, accurate enough
+    * that equality-selectivity and join-cardinality estimates stop
+    * being range-bound guesses. Sketches of the SAME lgK union
+    * losslessly across files.
     */
   private[lake] val HllLgK = 8
 
@@ -2156,7 +2140,7 @@ object LakeTable {
     * the distinct `partitionBy` values (one-or-more files per value —
     * the partition columns stay stored IN the data files), and because
     * each file then carries exactly one value per partition column, the
-    * ordinary stats job records min = max = value: partition pruning IS
+    * writer's ordinary stats record min = max = value: partition pruning IS
     * stats pruning, exact, with no directory scheme — the manifest is
     * the index. First-line skipping for the date/tenant/lang layouts a
     * 100 TB table actually uses; stats columns keep working on top for
@@ -2194,7 +2178,7 @@ object LakeTable {
     val t = new LakeTable(spark, path)
     // partition columns get stats implicitly (min = max = value)
     val allStats = (statsCols ++ partitionBy.filterNot(statsCols.contains))
-    val staged = stage(spark, path, df, allStats, partitionBy,
+    val staged = LakeFileWriter.stage(spark, path, df, allStats, partitionBy,
       bucketBy, buckets)
     commit(Paths.get(path, LogDir).toString, 1,
       Manifest("create", df.schema.json, allStats, staged,
@@ -2207,196 +2191,6 @@ object LakeTable {
     val t = new LakeTable(spark, path)
     t.currentVersion // validates
     t
-  }
-
-  /** Stage `df` as immutable parquet files in the table root: write to
-    * a scratch dir, move each part in under a job-unique name, then
-    * compute per-file rows + stats with ONE aggregation job keyed on
-    * `input_file_name()` (no footer reads, no per-file jobs).
-    *
-    * With `partitionBy`, the scratch write splits files by the distinct
-    * partition values — via DUPLICATED `_gfp_*` columns, so the
-    * original columns stay stored in the data files and the table reads
-    * as plain parquet — and the moved files land flat in the table root
-    * like any other (the manifest, not the directory tree, is the
-    * index). Nulls go to Hive's default partition, read back as null.
-    */
-  private def stage(spark: SparkSession, path: String, df: DataFrame,
-      statsCols: Seq[String], partitionBy: Seq[String] = Nil,
-      bucketBy: Seq[String] = Nil, buckets: Int = 0): Seq[FileEntry] = {
-    val job = UUID.randomUUID().toString.replace("-", "").take(12)
-    val scratch = Paths.get(path, s"_staging_$job")
-    // For the plain (unbucketed, unpartitioned) layout, ride the stats
-    // aggregation on the staged WRITE job itself (CollectMetrics): when
-    // the stage produces exactly one file — the dominant commit shape —
-    // the global observed aggregates ARE that file's stats, and the
-    // separate reread job (plus its footer-inference job) is skipped
-    // entirely. Multi-file stages fall back to the per-file reread.
-    // statAggCols is shared with entriesFor, so both paths record
-    // bit-identical manifest stats: the observed path and the reread
-    // path see the SAME single partition in the SAME row order, so
-    // every aggregate — including the HLL sketch bytes, whose
-    // LIST/SET-mode serialization is insertion-order-sensitive — is
-    // computed over an identical sequence. (Do not reuse this
-    // bit-identity claim for multi-partition stages; only dense-mode
-    // HLL registers are order-independent.)
-    var observed: Map[String, Any] = null
-    if (bucketBy.nonEmpty) {
-      // Spark's own bucket distribution: repartition(n, cols) IS
-      // HashPartitioning(cols, n), so scratch partition index i holds
-      // exactly bucket i's rows — the reader-side grouping contract
-      df.repartition(buckets, bucketBy.map(col): _*)
-        .write.mode("overwrite").parquet(scratch.toString)
-    } else if (partitionBy.isEmpty) {
-      val aggs = statAggCols(df.schema, statsCols)
-      val obs = new org.apache.spark.sql.Observation(s"gf_stage_$job")
-      df.observe(obs, aggs.head, aggs.tail: _*)
-        .write.mode("overwrite").parquet(scratch.toString)
-      observed = obs.get
-    } else {
-      val gfp = partitionBy.map(c => s"_gfp_$c")
-      df.withColumns(partitionBy.zip(gfp)
-          .map { case (c, g) => g -> col(c) }.toMap)
-        .write.mode("overwrite").partitionBy(gfp: _*).parquet(scratch.toString)
-    }
-    val parts: Seq[java.nio.file.Path] = {
-      val walk = Files.walk(scratch)
-      try walk.filter { p =>
-        val n = p.getFileName.toString
-        n.startsWith("part-") && n.endsWith(".parquet")
-      }.sorted().iterator().asScala.toVector
-      finally walk.close()
-    }
-    // scratch part files are named part-<task>%05d-<uuid>; for bucketed
-    // layouts task index == bucket id, re-encoded into the Spark bucket
-    // suffix (_NNNNN) the reader's BucketingUtils.getBucketId parses
-    val BucketPart = "part-(\\d+)-.*".r
-    val named = parts.zipWithIndex.map { case (p, i) =>
-      val target =
-        if (bucketBy.isEmpty) f"part-$job-$i%05d.parquet"
-        else p.getFileName.toString match {
-          case BucketPart(task) =>
-            f"part-$job-$i%05d_${task.toInt}%05d.parquet"
-          case other => throw new IllegalStateException(
-            s"unexpected scratch part name for a bucketed write: $other")
-        }
-      Files.move(p, Paths.get(path, target), StandardCopyOption.ATOMIC_MOVE)
-      target
-    }
-    graft.deleteRecursively(scratch)
-    if (observed != null && named.size == 1 &&
-        observed("_rows").asInstanceOf[Long] > 0L) {
-      val (strCols, longCols) = statsCols.partition(c =>
-        df.schema(c).dataType == StringType)
-      val (rows, stats, strStats, nulls, hll) =
-        decodeStats(observed(_), longCols, strCols)
-      Seq(FileEntry(named.head, rows, stats,
-        Files.size(Paths.get(path, named.head)),
-        strStats = strStats, nulls = nulls, hll = hll))
-    } else if (observed != null && named.size == 1) {
-      // zero-row file: match entriesFor's absent-group default exactly
-      // (no stats, no null counts, no sketches)
-      Seq(FileEntry(named.head, 0L, Map.empty[String, (Long, Long)],
-        Files.size(Paths.get(path, named.head))))
-    } else
-      // multi-file (or partitioned/bucketed) stage: per-file reread,
-      // with the explicit schema (= what the files store) so no
-      // footer-inference job runs
-      entriesFor(spark, path, named, statsCols, fileSchema = df.schema)
-  }
-
-  /** Build one stats-complete manifest entry per already-written table
-    * file (one combined stats job over the named files — min/max, null
-    * counts, HLL ndv sketches). Shared by [[stage]] and the native v2
-    * BatchWrite adoption path.
-    */
-  private[lake] def entriesFor(spark: SparkSession, path: String,
-      named: Seq[String], statsCols: Seq[String],
-      fileSchema: StructType = null): Seq[FileEntry] = {
-    if (named.isEmpty) return Seq.empty
-    // an explicit schema (the staged frame's — identical to what the
-    // files store) skips the parquet footer-inference Spark job the
-    // schemaless reader otherwise runs per commit
-    val reader =
-      if (fileSchema != null) spark.read.schema(fileSchema) else spark.read
-    val reread = reader.parquet(named.map(n => s"$path/$n"): _*)
-    val (strCols, longCols) = statsCols.partition(c =>
-      reread.schema(c).dataType == StringType)
-    // per column, the same single stats job also records the null count
-    // and a small HLL ndv sketch (HllLgK): the CBO needs real
-    // equality-selectivity inputs, and this is the only pass that ever
-    // reads the staged bytes. Long columns sketch their manifest long
-    // ENCODING (injective — ndv is preserved); strings sketch raw.
-    val aggs = statAggCols(reread.schema, statsCols)
-    val statRows = reread
-      .groupBy(input_file_name().as("_file"))
-      .agg(aggs.head, aggs.tail: _*)
-      .collect()
-    val byName = statRows.map { r =>
-      new File(r.getAs[String]("_file")).getName ->
-        decodeStats(k => r.getAs[Any](k), longCols, strCols)
-    }.toMap
-    named.toSeq.map { n =>
-      val (rows, stats, strStats, nulls, hll) = byName.getOrElse(n,
-        (0L, Map.empty[String, (Long, Long)],
-          Map.empty[String, (String, Option[String])],
-          Map.empty[String, Long], Map.empty[String, String]))
-      FileEntry(n, rows, stats, Files.size(Paths.get(path, n)),
-        strStats = strStats, nulls = nulls, hll = hll)
-    }
-  }
-
-  /** The per-file stats aggregate list entriesFor and the fused
-    * stage-write observation share — one definition so both paths
-    * record bit-identical manifest stats.
-    */
-  private def statAggCols(schema: StructType,
-      statsCols: Seq[String]): Seq[Column] = {
-    val (strCols, longCols) = statsCols.partition(c =>
-      schema(c).dataType == StringType)
-    count(lit(1)).as("_rows") +:
-      (longCols.flatMap { c =>
-        val enc = statLong(c, schema(c).dataType)
-        Seq(min(enc).as(s"_min_$c"), max(enc).as(s"_max_$c"),
-          count(lit(1)).minus(count(col(c))).as(s"_nulls_$c"),
-          hll_sketch_agg(enc, HllLgK).as(s"_hll_$c"))
-      } ++ strCols.flatMap { c =>
-        // min/max travel untruncated (one value per file per column);
-        // truncation to the manifest encoding happens in decodeStats,
-        // driver-side
-        Seq(min(col(c)).as(s"_min_$c"), max(col(c)).as(s"_max_$c"),
-          count(lit(1)).minus(count(col(c))).as(s"_nulls_$c"),
-          hll_sketch_agg(col(c), HllLgK).as(s"_hll_$c"))
-      })
-  }
-
-  /** Decode one file's [[statAggCols]] result (a Row or an observed
-    * metrics map) into the manifest stat maps.
-    */
-  private def decodeStats(get: String => Any, longCols: Seq[String],
-      strCols: Seq[String]): (Long, Map[String, (Long, Long)],
-      Map[String, (String, Option[String])], Map[String, Long],
-      Map[String, String]) = {
-    val stats = longCols.flatMap { c =>
-      val mn = get(s"_min_$c")
-      val mx = get(s"_max_$c")
-      if (mn == null || mx == null) None
-      else Some(c -> (mn.asInstanceOf[Long], mx.asInstanceOf[Long]))
-    }.toMap
-    val strStats = strCols.flatMap { c =>
-      val mn = get(s"_min_$c").asInstanceOf[String]
-      val mx = get(s"_max_$c").asInstanceOf[String]
-      if (mn == null || mx == null) None
-      else Some(c -> ((truncMin(mn), truncMax(mx))))
-    }.toMap
-    val nulls = (longCols ++ strCols).map { c =>
-      c -> get(s"_nulls_$c").asInstanceOf[Long]
-    }.toMap
-    val hll = (longCols ++ strCols).flatMap { c =>
-      Option(get(s"_hll_$c").asInstanceOf[Array[Byte]])
-        .map(b => c -> java.util.Base64.getEncoder.encodeToString(b))
-    }.toMap
-    (get("_rows").asInstanceOf[Long], stats, strStats, nulls, hll)
   }
 
   /** Checkpoint cadence of the delta log: versions 1, K, 2K, … publish

@@ -200,13 +200,11 @@ object Ext10Queries {
       s.sql("""CREATE TABLE graft_rt_cat2.tp PARTITIONED BY (lang)
         AS SELECT * FROM cat_ctas_docs WHERE lang <> 'zh'""")
       s.sql("INSERT INTO graft_rt_cat2.tp SELECT * FROM cat_ctas_docs WHERE lang = 'zh'")
-      def opened(df: org.apache.spark.sql.DataFrame): Long =
-        df.select(input_file_name()).distinct().count()
-      val all = opened(s.table("graft_rt_cat2.tp"))
+      val all = LakeQueries.opened(s.table("graft_rt_cat2.tp"))
       val en = s.table("graft_rt_cat2.tp").filter(col("lang") === "en")
       val zh = s.table("graft_rt_cat2.tp").filter(col("lang") === "zh")
-      val enPruned = opened(en) < all
-      val zhPruned = opened(zh) < all && zh.count() > 0
+      val enPruned = LakeQueries.opened(en) < all
+      val zhPruned = LakeQueries.opened(zh) < all && zh.count() > 0
       s.table("graft_rt_cat2.tp").filter(col("lang") === "en")
         .groupBy(col("lang"))
         .agg(count(lit(1)).as("n"),

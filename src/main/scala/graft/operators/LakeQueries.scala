@@ -26,6 +26,12 @@ object LakeQueries {
   private def wipe(path: String): Unit =
     graft.deleteRecursively(java.nio.file.Paths.get(path))
 
+  /** How many distinct data files a read of `df` opens — the probe the
+    * pruning keys compare against the unfiltered scan.
+    */
+  private[operators] def opened(df: DataFrame): Long =
+    df.select(input_file_name()).distinct().count()
+
   /** (k, status, price) view of orders — the lake tables' content. */
   private def base(s: SparkSession, dir: String): DataFrame =
     Tables.orders(s, dir).select(
@@ -415,8 +421,6 @@ object LakeQueries {
       val (lo, hi) = (mx / 2, mx / 2 + mx / 10)
       val t = LakeTable.create(s, path,
         b.repartitionByRange(4, col("k")), Seq("k"))
-      def opened(df: org.apache.spark.sql.DataFrame): Long =
-        df.select(input_file_name()).distinct().count()
       val nAll = opened(t.scan())
       val filtered = t.scan().filter(col("k").between(lo, hi))
       val nPruned = opened(filtered)
@@ -443,8 +447,6 @@ object LakeQueries {
         col("o_custkey").cast("long").as("ck"),
         col("o_totalprice").as("price"))
       val t = LakeTable.create(s, path, b.repartition(4), Seq("k", "ck"))
-      def opened(df: org.apache.spark.sql.DataFrame): Long =
-        df.select(input_file_name()).distinct().count()
       val Array(kMax, ckMax) = t.read()
         .agg(max(col("k")), max(col("ck"))).head() match {
           case r => Array(r.getLong(0), r.getLong(1))
@@ -976,8 +978,6 @@ object LakeQueries {
       val t = LakeTable.create(s, path, d.filter(col("lang") =!= "zh"),
         Seq("doc_id"), Seq("lang"))
       t.append(d.filter(col("lang") === "zh"))
-      def opened(df: org.apache.spark.sql.DataFrame): Long =
-        df.select(input_file_name()).distinct().count()
       val nAll = opened(t.scan())
       val en = t.scan().filter(col("lang") === "en")
       val enPruned = opened(en) < nAll
@@ -1006,8 +1006,6 @@ object LakeQueries {
         .select(col("doc_id"), col("source"), col("n_chars"))
       val t = LakeTable.create(s, path,
         d.repartitionByRange(4, col("source")), Seq("source"))
-      def opened(df: org.apache.spark.sql.DataFrame): Long =
-        df.select(input_file_name()).distinct().count()
       val nAll = opened(t.scan())
       val prunesEq = opened(t.scan().filter(col("source") === "src0")) < nAll
       val prefixScan = t.scan().filter(col("source").startsWith("src1"))

@@ -12,12 +12,12 @@ import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.util.SerializableConfiguration
 
-/** Write-side bridge for the graft.lake native v2 BatchWrite (same
-  * private[sql] access rationale as [[LakeReadBridge]]): exposes
-  * Spark's OWN parquet [[OutputWriter]] — the exact write support,
-  * compression codec, and schema conversion a DataFrame write would
-  * configure via `ParquetFileFormat.prepareWrite` — so executor-side
-  * DataWriters produce files indistinguishable from stage()'s, readable
+/** Write-side bridge for graft.lake's one file writer,
+  * `graft.lake.LakeFileWriter` (same private[sql] access rationale as
+  * [[LakeReadBridge]]): exposes Spark's OWN parquet [[OutputWriter]] —
+  * the exact write support, compression codec, and schema conversion a
+  * DataFrame write would configure via `ParquetFileFormat.prepareWrite`
+  * — so the writer's files are what `df.write.parquet` writes, readable
   * by the vectorized scan, with zero hand-rolled parquet plumbing.
   * All private[sql]/private[spark] types stay inside this object; the
   * lake side sees only the serializable opaque factory below.

@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -195,6 +197,46 @@ class GraftCatalogSpec extends AnyFunSuite {
     assert(rows.filter(_._2 <= 1).map(_._1).forall(_ >= 200))
     assert(rows.count(_._2 == 2) === 25 && rows.count(_._2 == 3) === 25)
     assert(rows.count(_._2 <= 1) === 20)
+  }
+
+  test("dynamic partition overwrite adopts partition-pure files without a distinct job") {
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, OverwritePartitionsDynamic}
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    warehouse
+    val path = s"$warehouse/dynpure"
+    LakeTable.create(spark, path,
+      kv(1 to 400).withColumn("p", col("k") % 8), Seq.empty, Seq("p"))
+    val t = LakeTable.forPath(spark, path)
+    val before = t.fileNames(t.currentVersion).toSet
+    // every plan the write runs, as "<grouping columns>" per aggregate;
+    // the command's own plan arrives after every nested one
+    val groupings = new java.util.concurrent.ConcurrentLinkedQueue[Seq[String]]()
+    @volatile var commandSeen = false
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = {
+        qe.optimizedPlan.foreach {
+          case a: Aggregate => groupings.add(a.groupingExpressions.map(_.sql))
+          case _ =>
+        }
+        if (qe.analyzed.exists(_.isInstanceOf[OverwritePartitionsDynamic])) commandSeen = true
+      }
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      kv(1000 to 1099).withColumn("p", col("k") % 3)
+        .writeTo("graft_test.dynpure").overwritePartitions()
+      val deadline = System.currentTimeMillis() + 30000
+      while (!commandSeen && System.currentTimeMillis() < deadline) Thread.sleep(20)
+    } finally spark.listenerManager.unregister(listener)
+    assert(commandSeen, "the overwrite command's plan never reached the listener")
+    assert(!groupings.asScala.exists(_ == Seq("p")),
+      s"the commit must not collect the partition tuples with a distinct job: $groupings")
+    val m = graft.lake.LakeTestAccess.fileStats(t, t.currentVersion)
+    val adopted = m.filterNot { case (n, _) => before(n) }
+    assert(adopted.map(_._2("p")).sorted === Seq((0L, 0L), (1L, 1L), (2L, 2L)),
+      "one adopted file per partition value, each with min = max on p")
   }
 
   test("SQL INSERT OVERWRITE in dynamic mode runs the native v2 BatchWrite") {

@@ -71,4 +71,8 @@ object LakeTestAccess {
     LakeFileIndex.resolvedCondition(df, cond)
       .map(e => LakeFileIndex.boundsOf(Seq(e), statsCols))
       .getOrElse(Map.empty)
+
+  /** Each file of `version` with its recorded integral [min,max] stats. */
+  def fileStats(t: LakeTable, version: Int): Seq[(String, Map[String, (Long, Long)])] =
+    t.manifest(version).files.map(f => f.name -> f.stats)
 }
