@@ -69,7 +69,7 @@ class DefaultSource extends RelationProvider
     val version = parameters.get("version").map(_.toInt)
       .getOrElse(t.currentVersion)
     val m = t.manifest(version)
-    if (m.files.forall(_.dv.isEmpty) && m.physNames.isEmpty)
+    if (m.plainParquet)
       new LakeFileIndex(spark, path, m).relation
     else
       // deletion vectors present (the plain file relation would
@@ -93,7 +93,7 @@ class DefaultSource extends RelationProvider
 private[lake] class DvMaskedRelation(ctx: SQLContext, t: LakeTable,
     version: Int) extends BaseRelation
     with org.apache.spark.sql.sources.PrunedFilteredScan {
-  import org.apache.spark.sql.{functions => F, Column, Row}
+  import org.apache.spark.sql.Row
   import org.apache.spark.sql.sources._
 
   private[lake] def tablePath: String = t.path
@@ -106,18 +106,6 @@ private[lake] class DvMaskedRelation(ctx: SQLContext, t: LakeTable,
       .asInstanceOf[org.apache.spark.sql.types.StructType]
 
   override def buildScan(requiredColumns: Array[String],
-      filters: Array[Filter]): org.apache.spark.rdd.RDD[Row] = {
-    val base = t.scanVersion(version)
-    val filtered = filters.flatMap(toColumn).foldLeft(base)(_.filter(_))
-    // an empty projection (e.g. count(*)) must return rows matching the
-    // empty pruned schema — select() gives genuinely zero-field Rows,
-    // honoring the PrunedFilteredScan contract rather than relying on
-    // the row converter ignoring extra fields
-    val projected =
-      if (requiredColumns.isEmpty) filtered.select()
-      else filtered.select(requiredColumns.toSeq.map(F.col): _*)
-    projected.rdd
-  }
-
-  private def toColumn(f: Filter): Option[Column] = LakeFilters.toColumn(f)
+      filters: Array[Filter]): org.apache.spark.rdd.RDD[Row] =
+    LakeFilters.scanRows(t, version, requiredColumns.toSeq, filters.toSeq)
 }

@@ -287,7 +287,7 @@ private[lake] class LakeDsv2Table(spark: SparkSession,
       "version" -> snapVersion.toString).asJava
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    if (m.files.forall(_.dv.isEmpty) && m.physNames.isEmpty)
+    if (m.plainParquet)
       // clean snapshot: Spark's own vectorized v2 parquet scan over the
       // manifest index — pushdown + manifest-stats pruning intact
       LakeReadBridge.parquetScanBuilder(spark,
@@ -478,15 +478,9 @@ private[lake] class LakeV1FallbackScanBuilder(t: LakeTable, version: Int,
       new BaseRelation with TableScan {
         override def sqlContext: SQLContext = context
         override def schema: StructType = schemaCapture
-        override def buildScan(): org.apache.spark.rdd.RDD[org.apache.spark.sql.Row] = {
-          val base = t.scanVersion(version)
-          val filtered = filterCapture.flatMap(LakeFilters.toColumn)
-            .foldLeft(base)(_.filter(_))
-          val projected =
-            if (schemaCapture.isEmpty) filtered.select()
-            else filtered.select(schemaCapture.fieldNames.toSeq.map(F.col): _*)
-          projected.rdd
-        }
+        override def buildScan(): org.apache.spark.rdd.RDD[org.apache.spark.sql.Row] =
+          LakeFilters.scanRows(t, version, schemaCapture.fieldNames.toSeq,
+            filterCapture.toSeq)
       }.asInstanceOf[T]
     }
   }
@@ -516,5 +510,20 @@ private[lake] object LakeFilters {
     case AlwaysTrue() => Some(F.lit(true))
     case AlwaysFalse() => Some(F.lit(false))
     case _ => None
+  }
+
+  /** The fallback scan both v1 paths serve ([[DvMaskedRelation]] and
+    * [[LakeV1FallbackScanBuilder]]): `version`'s snapshot with the
+    * translatable pushed filters applied as Columns — where they still
+    * reach [[LakeFileIndex]] for manifest-stats file skipping — and the
+    * required columns projected. An empty projection (e.g. count(*))
+    * yields genuinely zero-field Rows via `select()`, honoring the
+    * pruned-scan contract rather than relying on the row converter
+    * ignoring extra fields.
+    */
+  def scanRows(t: LakeTable, version: Int, columns: Seq[String],
+      filters: Seq[Filter]): org.apache.spark.rdd.RDD[org.apache.spark.sql.Row] = {
+    val filtered = filters.flatMap(toColumn).foldLeft(t.scanVersion(version))(_.filter(_))
+    filtered.select(columns.map(F.col): _*).rdd
   }
 }

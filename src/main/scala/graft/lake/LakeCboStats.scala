@@ -64,7 +64,7 @@ object LakeCboStatsRule {
     */
   private[lake] def statsOf(idx: LakeFileIndex): CatalogStatistics = {
     val m = idx.manifestSnapshot
-    val rowCount = m.files.map(f => f.rows - f.dvRows).sum
+    val rowCount = m.files.map(_.liveCount).sum
     val schema = m.schema
     // real ndv (HLL-union) and null counts, shared with statsReport —
     // None when any file predates the recording; ndv callers fall back

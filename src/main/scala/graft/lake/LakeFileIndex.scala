@@ -44,8 +44,8 @@ class LakeFileIndex private[lake] (sparkSession: SparkSession,
   private[lake] def manifestSnapshot: Manifest = m
 
   // the index plans what the FILES store: PHYSICAL field names (stable
-  // across renames under column mapping); [[LakeTable.scanVersion]]
-  // aliases the logical names on top. Stats are keyed physically too,
+  // across renames under column mapping); [[LakeTable.rowsOf]] aliases
+  // the logical names on top. Stats are keyed physically too,
   // so pushed filters (which reference the relation's physical attrs)
   // line up with the bounds with no translation.
   private val schema: StructType = m.physSchema
@@ -104,9 +104,15 @@ class LakeFileIndex private[lake] (sparkSession: SparkSession,
       fileFormat = new ParquetFileFormat,
       options = Map.empty)(sparkSession)
 
-  /** The snapshot as a DataFrame planned through this index. */
+  /** The snapshot as a DataFrame planned through this index. Every
+    * column reads as nullable, as Spark's own file reads do: the
+    * manifest schema's NOT NULL is not enforced on the rows the files
+    * hold (an append or merge of a nullable frame can carry NULLs into
+    * such a column), so the optimizer must not fold null checks away.
+    */
   private[lake] def toDataFrame: DataFrame =
-    sparkSession.baseRelationToDataFrame(relation)
+    sparkSession.baseRelationToDataFrame(relation.copy(dataSchema =
+      StructType(schema.fields.map(_.copy(nullable = true))))(sparkSession))
 }
 
 private[lake] object LakeFileIndex {

@@ -182,15 +182,15 @@ private[lake] class LakeStreamingSource(
     // The batch DataFrame must carry isStreaming=true for the microbatch
     // planner; wrap the batch parquet scan's physical RDD in a streaming
     // LogicalRDD (the FileStreamSource/internalCreateDataFrame shape).
-    // readEntries applies any deletion vectors already on the new files.
+    // rowsOf applies any deletion vectors already on the new files.
     // read under the STREAM's fixed schema (captured at start), with the
     // current logical→physical mapping: physical names are stable across
     // renames, so the capture-time mapping resolves files written later
     // too, and schema evolution after stream start stays a by-name
     // subset/null-fill read exactly as before
-    val batch = table.readEntries(added,
+    val batch = table.rowsOf(
       table.manifest(ver(end)).copy(schemaJson = schema.json,
-        physNames = physNames))
+        physNames = physNames), added)
     val qe = batch.queryExecution
     new ClassicDataset[Row](spark,
       LogicalRDD(qe.analyzed.output, qe.toRdd, isStreaming = true)(spark),

@@ -53,12 +53,16 @@ import org.json4s.jackson.JsonMethods
   *
   * Scale shape: manifests are control-plane (one small line per file —
   * at 1 GB/file a 100 TB table is a ~100k-line manifest); the data
-  * plane is ordinary parquet read via an explicit file list, so
-  * column pruning and predicate pushdown work unchanged. Every data
-  * file is written by one [[LakeFileWriter]] task, which computes the
-  * file's manifest stats (rows, min/max, null counts, HLL sketch) as
-  * it writes — no stats job ever rereads the data. Stats-based file
-  * skipping for reads is exposed via [[LakeTable.prunedRead]].
+  * plane is ordinary parquet. Every read of table data — `read` and
+  * `scan` (one plan), time travel, the DML probes and rewrites,
+  * maintenance, checks, the bloom build and the stream source — plans
+  * through one [[LakeFileIndex]] over the manifest's file list, never
+  * a directory listing, so column pruning, predicate pushdown and
+  * manifest-stats file skipping work unchanged, and deletion vectors
+  * are masked in one place. Every data file is written by one
+  * [[LakeFileWriter]] task, which computes the file's manifest stats
+  * (rows, min/max, null counts, HLL sketch) as it writes — no stats
+  * job ever rereads the data.
   */
 class LakeTable private (spark: SparkSession, val path: String) {
   import LakeTable._
@@ -85,48 +89,63 @@ class LakeTable private (spark: SparkSession, val path: String) {
 
   // ---- reads ------------------------------------------------------------
 
-  /** Current snapshot as a DataFrame (manifest-listed files only). */
+  /** Current snapshot as a DataFrame — the same plan as [[scan]]. */
   def read(): DataFrame = readVersion(currentVersion)
 
-  /** Time travel: the table exactly as of commit `version`. */
-  def readVersion(version: Int): DataFrame = readManifest(manifest(version))
+  /** Time travel: the table exactly as of commit `version` — the same
+    * plan as [[scanVersion]].
+    */
+  def readVersion(version: Int): DataFrame = {
+    val m = manifest(version)
+    rowsOf(m, m.files)
+  }
 
   /** Current snapshot planned through [[LakeFileIndex]]: a plain
     * `.filter()` on this DataFrame prunes non-overlapping files via the
     * manifest [min,max] stats inside Catalyst — the automatic form of
-    * [[prunedRead]], composable with every downstream operator.
+    * [[prunedRead]], composable with every downstream operator. The
+    * same plan as [[read]].
     */
   def scan(): DataFrame = scanVersion(currentVersion)
 
-  /** [[scan]] with time travel. When the snapshot carries deletion
-    * vectors, the masked positions are anti-joined ON TOP of the
-    * index-planned scan: pushed data filters still reach
-    * [[LakeFileIndex]] (left-side predicates push through a left-anti
-    * join), so manifest-stats file pruning is unchanged and the DV mask
-    * costs one broadcast-sized join only when DVs exist.
-    */
-  def scanVersion(version: Int): DataFrame = {
-    val m = manifest(version)
-    val planned = new LakeFileIndex(spark, path, m).toDataFrame
-    val sidecars = m.files.flatMap(_.dv).distinct
-    val masked =
-      if (sidecars.isEmpty) planned
-      else maskDeleted(withProvenance(planned), sidecars)
-        .drop("_gf_file", "_gf_pos")
-    // the index plans under PHYSICAL field names (what the files store);
-    // surface the logical names on top — filters and column prunes push
-    // through the alias-only Project, so file skipping is unchanged
-    if (m.physNames.isEmpty) masked
-    else masked.toDF(m.schema.fieldNames.toIndexedSeq: _*)
-  }
+  /** [[scan]] with time travel; the same plan as [[readVersion]]. */
+  def scanVersion(version: Int): DataFrame = readVersion(version)
 
-  /** Expose each row's physical provenance as `_gf_file` / `_gf_pos`
-    * (parquet metadata columns) — the join key of the DV mask.
+  /** The live rows of `entries` under `m`'s schema, planned through a
+    * [[LakeFileIndex]] over exactly those entries, with logical column
+    * names. When any entry carries a deletion vector (or `withId` is
+    * set) the rows carry their physical provenance `_gf_file` /
+    * `_gf_pos` and the masked positions are anti-joined away ON TOP of
+    * the index-planned scan: pushed data filters still reach the index
+    * (left-side predicates push through a left-anti join), so
+    * manifest-stats file pruning and a bucketed scan's output
+    * partitioning are unchanged, and the mask costs one
+    * broadcast-sized join only when DVs exist. `withId` keeps the two
+    * provenance columns in the output — the identity the hit probe and
+    * [[mergeGeneral]] need.
     */
-  private def withProvenance(df: DataFrame): DataFrame =
-    df.select(col("*"),
-      element_at(split(col("_metadata.file_path"), "/"), -1).as("_gf_file"),
-      col("_metadata.row_index").as("_gf_pos"))
+  private[lake] def rowsOf(m: Manifest, entries: Seq[FileEntry],
+      withId: Boolean = false): DataFrame = {
+    val planned = new LakeFileIndex(spark, path, m.copy(files = entries)).toDataFrame
+    val sidecars = entries.flatMap(_.dv).distinct
+    val rows =
+      if (sidecars.isEmpty && !withId) planned
+      else {
+        val provenance = planned.select(col("*"),
+          element_at(split(col("_metadata.file_path"), "/"), -1).as("_gf_file"),
+          col("_metadata.row_index").as("_gf_pos"))
+        val masked =
+          if (sidecars.isEmpty) provenance else maskDeleted(provenance, sidecars)
+        if (withId) masked else masked.drop("_gf_file", "_gf_pos")
+      }
+    // the index plans under PHYSICAL field names (what the files store);
+    // surface the logical names on top, by name (the mask's using-join
+    // puts its keys first) — filters and column prunes push through the
+    // alias-only Project, so file skipping is unchanged
+    if (m.physNames.isEmpty && !withId) rows
+    else rows.select(m.schema.fieldNames.toSeq.map(c => col(m.physOf(c)).as(c)) ++
+      (if (withId) Seq(col("_gf_file"), col("_gf_pos")) else Nil): _*)
+  }
 
   /** Anti-join away the (file, position) pairs the sidecars mask. The
     * sidecar side is PINNED to a broadcast: DVs are deleted-row
@@ -140,38 +159,6 @@ class LakeTable private (spark: SparkSession, val path: String) {
   private def maskDeleted(df: DataFrame, sidecars: Seq[String]): DataFrame =
     df.join(broadcast(readSidecars(sidecars)),
       Seq("_gf_file", "_gf_pos"), "left_anti")
-
-  private def readManifest(m: Manifest): DataFrame = readEntries(m.files, m)
-
-  /** Read a set of manifest entries, applying any deletion vectors:
-    * files without DVs read as plain parquet; files WITH them are read
-    * alongside the parquet metadata columns and anti-joined against
-    * their sidecars' (file, row position) pairs. Sidecars are tiny next
-    * to the data (positions of deleted rows only), so the anti-join is
-    * broadcast-shaped at scale; files untouched by any delete pay
-    * nothing.
-    */
-  private[lake] def readEntries(entries: Seq[FileEntry],
-      m: Manifest): DataFrame = {
-    val logical = m.schema
-    if (entries.isEmpty)
-      return spark.createDataFrame(spark.sparkContext.emptyRDD[Row], logical)
-    val (dvd, plain) = entries.partition(_.dv.nonEmpty)
-    // files store PHYSICAL field names (stable across renames); read
-    // under them, then alias to the logical names in one Project
-    def readPlain(fs: Seq[FileEntry]): DataFrame = spark.read
-      .schema(m.physSchema)
-      .parquet(fs.map(f => s"$path/${f.name}"): _*)
-    val sides = Seq(
-      if (plain.isEmpty) None else Some(readPlain(plain)),
-      if (dvd.isEmpty) None else Some {
-        maskDeleted(withProvenance(readPlain(dvd)), dvd.flatMap(_.dv).distinct)
-          .drop("_gf_file", "_gf_pos")
-      }).flatten
-    val physDf = sides.reduce(_ unionByName _)
-    if (m.physNames.isEmpty) physDf
-    else physDf.toDF(logical.fieldNames.toIndexedSeq: _*)
-  }
 
   /** The (file, position) pairs the given sidecars mask out. Schema is
     * supplied (sidecars are written with exactly these two columns by
@@ -188,7 +175,7 @@ class LakeTable private (spark: SparkSession, val path: String) {
     */
   def prunedRead(col: String, lo: Long, hi: Long): DataFrame = {
     val m = manifest(currentVersion)
-    readEntries(m.files.filter(_.overlaps(m.physOf(col), lo, hi)), m)
+    rowsOf(m, m.files.filter(_.overlaps(m.physOf(col), lo, hi)))
   }
 
   /** Incremental (streaming-style) consumption: the rows in files that
@@ -204,8 +191,7 @@ class LakeTable private (spark: SparkSession, val path: String) {
   def readAppendsSince(sinceVersion: Int): DataFrame = {
     val cur = manifest(currentVersion)
     val old = manifest(sinceVersion).files.map(_.name).toSet
-    val added = cur.files.filterNot(f => old(f.name))
-    readEntries(added, cur)
+    rowsOf(cur, cur.files.filterNot(f => old(f.name)))
   }
 
   /** Row-level change feed between two retained versions: rows only in
@@ -228,10 +214,8 @@ class LakeTable private (spark: SparkSession, val path: String) {
     // renaming it, and its removed rows must surface as 'delete'
     val fromSigs = mFrom.files.map(_.signature).toSet
     val toSigs = mTo.files.map(_.signature).toSet
-    val onlyFrom = readEntries(
-      mFrom.files.filterNot(f => toSigs(f.signature)), mTo)
-    val onlyTo = readEntries(
-      mTo.files.filterNot(f => fromSigs(f.signature)), mTo)
+    val onlyFrom = rowsOf(mTo, mFrom.files.filterNot(f => toSigs(f.signature)))
+    val onlyTo = rowsOf(mTo, mTo.files.filterNot(f => fromSigs(f.signature)))
     onlyTo.exceptAll(onlyFrom).withColumn("_change_type", lit("insert"))
       .unionByName(onlyFrom.exceptAll(onlyTo).withColumn("_change_type", lit("delete")))
   }
@@ -249,7 +233,7 @@ class LakeTable private (spark: SparkSession, val path: String) {
     listVersions.sorted.map { v =>
       val m = manifest(v)
       LakeCommit(v, m.operation, m.files.size,
-        m.files.map(f => f.rows - f.dvRows).sum)
+        m.files.map(_.liveCount).sum)
     }
 
   // ---- writes -----------------------------------------------------------
@@ -404,7 +388,7 @@ class LakeTable private (spark: SparkSession, val path: String) {
       require(base.schemaJson == base0.schemaJson,
         "schema changed concurrently; re-run appendEvolve against the new snapshot")
       if (proven == null || proven != base.checks) {
-        enforceChecks(staged, base, unified)
+        enforceChecks(staged, base.copy(schemaJson = unified.json))
         proven = base.checks
       }
       commit(v + 1, "append-evolve", base.files ++ staged,
@@ -472,7 +456,7 @@ class LakeTable private (spark: SparkSession, val path: String) {
     // every file is replaced, so the column-mapping indirection resets
     // to identity: stage under the NEW logical names directly
     val staged = stageFiles(df, base.copy(physNames = Map.empty))
-    enforceChecks(staged, base.copy(physNames = Map.empty), df.schema)
+    enforceChecks(staged, base.copy(physNames = Map.empty, schemaJson = df.schema.json))
     commit(v + 1, op,
       staged, base.copy(schemaJson = df.schema.json,
         statsCols = statsColsOf(df, base), physNames = Map.empty,
@@ -511,7 +495,7 @@ class LakeTable private (spark: SparkSession, val path: String) {
     val cols = base.schema.fieldNames.map(col).toSeq
     changeRows("merge", v, base, mergeKeyRange(updates, keyCol, base),
       mor = false, hits = None, always = true, output = { candidates =>
-        val candData = readEntries(candidates, base)
+        val candData = rowsOf(base, candidates)
         // surviving source rows: everything (upsert), or minus the MATCHED
         // delete-arm rows (their targets vanish via the anti-join below).
         // SQL MERGE scopes the delete arm to matched rows — an unmatched
@@ -583,7 +567,7 @@ class LakeTable private (spark: SparkSession, val path: String) {
     // implementations stage their source)
     val src = source.withColumn("_src_exists", lit(1))
       .localCheckpoint(true)
-    val tgt = scanVersionWithId(v)
+    val tgt = rowsOf(base, base.files, withId = true)
 
     /** First-arm-wins predicates: one Column per arm, mutually
       * exclusive by construction, all scoped by `within`. A NULL arm
@@ -614,7 +598,7 @@ class LakeTable private (spark: SparkSession, val path: String) {
       // not trip this (the Delta/Spark semantics).
       val matchedArmFires = mFires.reduceOption(_ || _).getOrElse(lit(false))
       val dup = j.filter(isMatched && matchedArmFires)
-        .groupBy(col("_gfile"), col("_gpos"))
+        .groupBy(col("_gf_file"), col("_gf_pos"))
         .agg(count(lit(1)).as("_m"))
         .filter(col("_m") > 1)
       if (dup.limit(1).count() > 0)
@@ -629,7 +613,7 @@ class LakeTable private (spark: SparkSession, val path: String) {
       // affected files: only where some arm actually fires — the
       // copy-on-write bound. File names are control plane (manifest-sized).
       val affected = j.filter(takesAction)
-        .select(col("_gfile")).distinct()
+        .select(col("_gf_file")).distinct()
         .collect().map(_.getString(0)).toSet
       val (consumed, _) = base.files.partition(f => affected(f.name))
 
@@ -646,12 +630,12 @@ class LakeTable private (spark: SparkSession, val path: String) {
       // exactly ONCE. Keep the firing copy when one exists (so its
       // arm's assignment/delete applies), else exactly one inert copy.
       // The window is scoped to the affected files' rows only, and
-      // (_gfile,_gpos) is near-unique, so the extra shuffle is bounded
+      // (_gf_file,_gf_pos) is near-unique, so the extra shuffle is bounded
       // by the copy-on-write footprint, not the table.
       val winRn = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("_gfile"), col("_gpos"))
+        .partitionBy(col("_gf_file"), col("_gf_pos"))
         .orderBy(when(takesAction, lit(0)).otherwise(lit(1)))
-      val replaced = j.filter(col("_gfile").isin(affected.toSeq: _*))
+      val replaced = j.filter(col("_gf_file").isin(affected.toSeq: _*))
         .withColumn("_g_rn", row_number().over(winRn))
         .filter(col("_g_rn") === 1)
         .filter(!deleteCond)
@@ -689,25 +673,6 @@ class LakeTable private (spark: SparkSession, val path: String) {
       // unpersist here would only WARN (truncated lineage cannot be
       // recomputed) without freeing anything sooner
     }
-  }
-
-  /** [[scanVersion]] keeping each row's immutable identity: `_gfile`
-    * (file name) and `_gpos` (row position) from the parquet metadata
-    * columns — the provenance [[mergeGeneral]] needs for exact
-    * cardinality checks and affected-file discovery.
-    */
-  private[lake] def scanVersionWithId(version: Int): DataFrame = {
-    val m = manifest(version)
-    val planned = withProvenance(
-      new LakeFileIndex(spark, path, m).toDataFrame)
-    val sidecars = m.files.flatMap(_.dv).distinct
-    val masked =
-      if (sidecars.isEmpty) planned
-      else maskDeleted(planned, sidecars)
-    val renamed = masked.withColumnRenamed("_gf_file", "_gfile")
-      .withColumnRenamed("_gf_pos", "_gpos")
-    if (m.physNames.isEmpty) renamed
-    else renamed.toDF((m.schema.fieldNames :+ "_gfile" :+ "_gpos").toIndexedSeq: _*)
   }
 
   /** DELETE the rows matching `cond`, copy-on-write: every file holding
@@ -885,7 +850,7 @@ class LakeTable private (spark: SparkSession, val path: String) {
         if (set.isEmpty) { if (mor) None else Some(survivors(touched, base, cond)) }
         // MoR appends the matching rows only, CoW rewrites whole files
         else Some(updated(
-          if (mor) liveRows(touched, base).filter(cond) else readEntries(touched, base))))
+          if (mor) rowsOf(base, touched).filter(cond) else rowsOf(base, touched))))
   }
 
   /** The row-level change core: DELETE, UPDATE, MERGE and the filtered
@@ -899,7 +864,7 @@ class LakeTable private (spark: SparkSession, val path: String) {
     *     [[commitMutation]]: a file outside the scope can neither hold a
     *     hit row nor invalidate the change.
     *  2. '''Locate.''' `hits` picks the hit rows out of the candidates'
-    *     live rows ([[liveRows]]). CoW collects the names of the files
+    *     live rows ([[rowsOf]]). CoW collects the names of the files
     *     holding them; MoR writes their (file, position) pairs as ONE
     *     deletion-vector sidecar ([[writeDvSidecar]], [[maskEntries]]).
     *     `hits = None` touches every candidate unprobed (CoW only).
@@ -923,7 +888,7 @@ class LakeTable private (spark: SparkSession, val path: String) {
       always: Boolean = false): Int = {
     val candidates = base.files.filter(scope)
     val hitRows = if (candidates.isEmpty) None
-      else hits.map(_(liveRows(candidates, base)))
+      else hits.map(_(rowsOf(base, candidates, withId = true)))
     val (touched, masked, sidecar) =
       if (!mor) {
         val names = hitRows.fold(Set.empty[String])(
@@ -1079,23 +1044,7 @@ class LakeTable private (spark: SparkSession, val path: String) {
     */
   private def survivors(touched: Seq[FileEntry], base: Manifest,
       cond: Column): DataFrame =
-    readEntries(touched, base).filter(!coalesce(cond, lit(false)))
-
-  /** The LIVE rows of `entries` (deletion vectors applied) with their
-    * physical provenance exposed as `_gf_file` / `_gf_pos` — what
-    * [[changeRows]] probes for hit rows.
-    */
-  private def liveRows(entries: Seq[FileEntry],
-      m: Manifest): DataFrame = {
-    val raw = withProvenance(spark.read.schema(m.physSchema)
-      .parquet(entries.map(f => s"$path/${f.name}"): _*))
-    val sidecars = entries.flatMap(_.dv).distinct
-    val masked = if (sidecars.isEmpty) raw else maskDeleted(raw, sidecars)
-    if (m.physNames.isEmpty) masked
-    else masked.select(m.schema.fields.map(f =>
-      col(m.physOf(f.name)).as(f.name)).toIndexedSeq
-      :+ col("_gf_file") :+ col("_gf_pos"): _*)
-  }
+    rowsOf(base, touched).filter(!coalesce(cond, lit(false)))
 
   /** OPTIMIZE: bin-pack the small files (rows < `smallFileRows`) into
     * ~`targetRows`-row files. Content-identical by construction — only
@@ -1119,10 +1068,10 @@ class LakeTable private (spark: SparkSession, val path: String) {
   def compact(smallFileRows: Long, targetRows: Long, clusterBy: Seq[String]): Int = {
     val v = currentVersion
     val base = manifest(v)
-    val (small, big) = base.files.partition(f => f.rows - f.dvRows < smallFileRows)
+    val (small, big) = base.files.partition(_.liveCount < smallFileRows)
     if (small.size < 2) return v
-    val data = readEntries(small, base) // DVs applied → purged by the rewrite
-    val totalRows = small.map(f => f.rows - f.dvRows).sum
+    val data = rowsOf(base, small) // DVs applied → purged by the rewrite
+    val totalRows = small.map(_.liveCount).sum
     val nOut = math.max(1, math.ceil(totalRows.toDouble / targetRows).toInt)
     val laidOut =
       if (clusterBy.isEmpty) data.repartition(nOut)
@@ -1166,7 +1115,7 @@ class LakeTable private (spark: SparkSession, val path: String) {
         s"zorder column $c must be integral/timestamp/date/string, " +
           s"is ${schema(c).dataType}")
     }
-    val data = readEntries(base.files, base)
+    val data = rowsOf(base, base.files)
     // the z bucketing needs an ORDER-PRESERVING long per column:
     // integrals/timestamps/dates via their stats encoding, strings via
     // the first 7 UTF-8 bytes right-padded with zeros (left-aligned so
@@ -1236,7 +1185,7 @@ class LakeTable private (spark: SparkSession, val path: String) {
         shiftleft(shiftright(b, j).bitwiseAND(lit(1L)), j * n + i)
       }.reduce(_.bitwiseOR(_))
     }.reduce(_.bitwiseOR(_))
-    val totalRows = base.files.map(f => f.rows - f.dvRows).sum
+    val totalRows = base.files.map(_.liveCount).sum
     val nOut = math.max(1, math.ceil(totalRows.toDouble / targetRows).toInt)
     val laidOut = data.withColumn("_graft_z", z)
       .repartitionByRange(nOut, col("_graft_z"))
@@ -1274,7 +1223,7 @@ class LakeTable private (spark: SparkSession, val path: String) {
     val indebted = base.files.filter(f =>
       f.dvRows > 0 && f.dvRows.toDouble / f.rows >= minDebt)
     if (indebted.isEmpty) return v
-    val staged = stageFiles(readEntries(indebted, base), base)
+    val staged = stageFiles(rowsOf(base, indebted), base)
     // content-identical layout move: concurrent additions never conflict
     commitMutation(v, base, "purge-dv", indebted, staged, _ => false)
   }
@@ -1416,7 +1365,7 @@ class LakeTable private (spark: SparkSession, val path: String) {
       // lacks" as a clear drop-or-migrate error, not an opaque
       // AnalysisException out of expr()
       validateChecksResolve(head.checks, target.schema)
-      val probe = readManifest(target)
+      val probe = rowsOf(target, target.files)
       head.checks.foreach { case (n, e) =>
         if (probe.filter(!coalesce(expr(e), lit(true))).limit(1).count() > 0L)
           throw new CheckViolationException(n, e,
@@ -1441,7 +1390,7 @@ class LakeTable private (spark: SparkSession, val path: String) {
     val v = currentVersion
     val base = manifest(v)
     require(!base.checks.contains(name), s"constraint $name already exists")
-    val probe = readManifest(base)
+    val probe = rowsOf(base, base.files)
     probe.filter(!coalesce(expr(exprSql), lit(true))).limit(1).count() match {
       case 0L =>
       case _ => throw new CheckViolationException(name, exprSql, "existing rows")
@@ -1469,7 +1418,7 @@ class LakeTable private (spark: SparkSession, val path: String) {
     */
   def statsReport(): DataFrame = {
     val m = manifest(currentVersion)
-    val rowCount = m.files.map(f => f.rows - f.dvRows).sum
+    val rowCount = m.files.map(_.liveCount).sum
     val rows = m.statsCols.sorted.map { c =>
       val phys = m.physOf(c)
       val bounds: Option[(Long, Long)] =
@@ -1505,7 +1454,10 @@ class LakeTable private (spark: SparkSession, val path: String) {
     * reference, only the manifest grows). Files appended AFTER the
     * build have no bitmap and conservatively always match — re-run to
     * cover them. NULLs are not indexed (a bloom answers non-null
-    * equality only).
+    * equality only). The pass reads the live rows, so on a file with
+    * deletion vectors the bits cover only its unmasked rows — still
+    * exact for pruning, because a file's mask only ever grows under its
+    * name (a rewrite that unmasks rows writes a new file).
     */
   def buildBloomIndex(cols: Seq[String]): Int = {
     import org.apache.spark.sql.types.StringType
@@ -1522,27 +1474,24 @@ class LakeTable private (spark: SparkSession, val path: String) {
     val phys = cols.map(base.physOf)
     import spark.implicits._
     val mByName = base.files.map(f => f.name -> LakeTable.bloomBits(f.rows))
-    val mDf = mByName.toDF("_fname", "_m")
-    val raw = spark.read.schema(base.physSchema)
-      .parquet(base.files.map(f => s"$path/${f.name}"): _*)
-      .withColumn("_fname", element_at(split(input_file_name(), "/"), -1))
-      .join(broadcast(mDf), "_fname")
+    val mDf = mByName.toDF("_gf_file", "_m")
+    val raw = rowsOf(base, base.files, withId = true)
+      .join(broadcast(mDf), "_gf_file")
     // per indexed column: positions = xxhash64(seed, value) mod m(file),
     // folded to (file, word) -> bits by a distributed bit_or — the
     // manifest-plane result is |files| × m/64 rows, never row-plane
-    val byCol: Map[String, Map[String, Array[Long]]] = phys.map { pc =>
-      val dt = base.physSchema(pc).dataType
-      val enc = if (dt == StringType) col(pc) else col(pc).cast("long")
+    val byCol: Map[String, Map[String, Array[Long]]] = cols.map { c =>
+      val enc = if (base.schema(c).dataType == StringType) col(c) else col(c).cast("long")
       val words = raw.filter(enc.isNotNull)
-        .select(col("_fname"), col("_m"),
+        .select(col("_gf_file"), col("_m"),
           explode(array((0 until LakeTable.BloomSeeds).map(k =>
             pmod(xxhash64(lit(k), enc), col("_m"))): _*)).as("_p"))
-        .groupBy(col("_fname"), shiftright(col("_p"), 6).cast("int").as("_w"))
+        .groupBy(col("_gf_file"), shiftright(col("_p"), 6).cast("int").as("_w"))
         .agg(bit_or(expr("shiftleft(CAST(1 AS BIGINT), CAST(_p & 63 AS INT))"))
           .as("_bits"))
         .collect()
       val mMap = mByName.toMap
-      pc -> words.groupBy(_.getString(0)).map { case (fname, rs) =>
+      base.physOf(c) -> words.groupBy(_.getString(0)).map { case (fname, rs) =>
         val arr = new Array[Long]((mMap(fname) / 64L).toInt)
         rs.foreach(r => arr(r.getInt(1)) = r.getLong(2))
         fname -> arr
@@ -1568,7 +1517,7 @@ class LakeTable private (spark: SparkSession, val path: String) {
     */
   def bloomPrunedRead(c: String, value: Any): DataFrame = {
     val (candidates, m) = bloomCandidates(c, value)
-    readEntries(candidates, m)
+    rowsOf(m, candidates)
   }
 
   /** The file count [[bloomPrunedRead]] would open — the in-band
@@ -1681,24 +1630,12 @@ class LakeTable private (spark: SparkSession, val path: String) {
     * once (staging), and a commit-time retry can cheaply re-enforce
     * against a constraint set a concurrent addCheck just changed.
     */
-  private def enforceChecks(staged: Seq[FileEntry], base: Manifest,
-      schemaOverride: StructType = null): Unit = {
+  private def enforceChecks(staged: Seq[FileEntry], base: Manifest): Unit = {
     if (base.checks.isEmpty || staged.isEmpty) return
-    val logical =
-      if (schemaOverride != null) schemaOverride
-      else base.schema
-    // staged parquet carries physical names; check exprs use logical
-    val phys = StructType(logical.fields.map(f =>
-      f.copy(name = base.physOf(f.name))))
     val aggs = base.checks.toSeq.map { case (n, e) =>
       count_if(!coalesce(expr(e), lit(true))).as(n)
     }
-    val raw = spark.read.schema(phys)
-      .parquet(staged.map(f => s"$path/${f.name}"): _*)
-    val logicalDf =
-      if (base.physNames.isEmpty) raw
-      else raw.toDF(logical.fieldNames.toIndexedSeq: _*)
-    val r = logicalDf.agg(aggs.head, aggs.tail: _*).head()
+    val r = rowsOf(base, staged).agg(aggs.head, aggs.tail: _*).head()
     base.checks.toSeq.foreach { case (n, e) =>
       if (r.getAs[Long](n) > 0L) {
         staged.foreach(f => Files.deleteIfExists(Paths.get(path, f.name)))
@@ -1876,6 +1813,12 @@ private[lake] case class Manifest(operation: String, schemaJson: String,
     */
   def physSchema: StructType =
     StructType(schema.fields.map(f => f.copy(name = physOf(f.name))))
+
+  /** The files read as plain parquet under the logical names: no
+    * deletion vector to mask and no renamed column to re-alias — the
+    * snapshots the format readers serve with Spark's own file scans.
+    */
+  def plainParquet: Boolean = files.forall(_.dv.isEmpty) && physNames.isEmpty
 }
 
 /** One immutable data file with optional per-column long [min,max].
@@ -1947,6 +1890,9 @@ private[lake] case class FileEntry(name: String, rows: Long,
     * future path normalizes or merges sidecar lists.
     */
   def signature: String = s"$name|${dv.sorted.mkString(",")}"
+
+  /** Logical row count: the physical rows minus the DV-masked ones. */
+  def liveCount: Long = rows - dvRows
 }
 
 case class LakeCommit(version: Int, operation: String, numFiles: Int, totalRows: Long)

@@ -32,6 +32,11 @@ object LakeQueries {
   private[operators] def opened(df: DataFrame): Long =
     df.select(input_file_name()).distinct().count()
 
+  /** How many deletion-vector sidecars sit in the table directory. */
+  private def dvFiles(t: LakeTable): Int =
+    Option(new java.io.File(t.path).list((_, n) => n.startsWith("dv-")))
+      .map(_.length).getOrElse(0)
+
   /** (k, status, price) view of orders — the lake tables' content. */
   private def base(s: SparkSession, dir: String): DataFrame =
     Tables.orders(s, dir).select(
@@ -503,8 +508,7 @@ object LakeQueries {
       val namesBefore = t.fileNames(2).toSet
       t.deleteWhereMoR(col("k") % 10 === 0 && col("k") <= half)
       val noRewrite = t.fileNames(3).toSet.subsetOf(namesBefore)
-      val sidecars = Option(new java.io.File(t.path)
-        .list((_, n) => n.startsWith("dv-"))).map(_.length).getOrElse(0)
+      val sidecars = dvFiles(t)
       t.scan().agg(
           count(lit(1)).as("n_rows"),
           sum(Tables.dec2(col("price"))).cast("double").as("total_price"))
@@ -529,8 +533,7 @@ object LakeQueries {
       val hiCarried = after.intersect(before).size == 1
       val lowRewritten = (after -- before).size == 1
       t.vacuum(1)
-      val dvOnDisk = Option(new java.io.File(t.path)
-        .list((_, n) => n.startsWith("dv-"))).map(_.length).getOrElse(0)
+      val dvOnDisk = dvFiles(t)
       t.scan().agg(
           count(lit(1)).as("n_rows"),
           sum(Tables.dec2(col("price"))).cast("double").as("total_price"))
@@ -557,8 +560,7 @@ object LakeQueries {
       val after = t.fileNames(3).toSet
       val noRewrite = namesBefore.subsetOf(after)
       val deltaAppended = (after -- namesBefore).nonEmpty
-      val sidecars = Option(new java.io.File(t.path)
-        .list((_, n) => n.startsWith("dv-"))).map(_.length).getOrElse(0)
+      val sidecars = dvFiles(t)
       t.scan().agg(
           count(lit(1)).as("n_rows"),
           count_if(col("status") === "U").as("n_updated"),
@@ -592,8 +594,7 @@ object LakeQueries {
       t.mergeMoR(upd.unionByName(ins), "k")
       val after = t.fileNames(3).toSet
       val noRewrite = namesBefore.subsetOf(after)
-      val sidecars = Option(new java.io.File(t.path)
-        .list((_, n) => n.startsWith("dv-"))).map(_.length).getOrElse(0)
+      val sidecars = dvFiles(t)
       t.scan().agg(
           count(lit(1)).as("n_rows"),
           count_if(col("status") === "U").as("n_updated"),

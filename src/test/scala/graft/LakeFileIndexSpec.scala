@@ -695,4 +695,98 @@ class LakeFileIndexSpec extends AnyFunSuite {
     assert(t.read().filter(col("v") === -1L).count() == 10)
     assert(t.read().count() == 400)
   }
+
+  test("a NULL appended into a column created NOT NULL stays visible to null filters") {
+    val t = LakeTable.create(spark, freshDir("nullable"), spark.range(3).toDF("k"), Seq("k"))
+    t.append(Seq(Some(5L), None).toDF("k")) // same name and type: accepted
+    assert(t.read().filter(col("k").isNull).count() == 1)
+    assert(t.scan().filter(col("k").isNull).count() == 1)
+  }
+
+  test("every read of table data plans through LakeFileIndex") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.SpanSugar._
+    val path = freshDir("onereader")
+    val seed = (1 to 200).toDF("i").select(col("i").cast("long").as("k"),
+      (col("i") % 7).cast("long").as("v"), format_string("s%03d", col("i")).as("s"))
+    val t = LakeTable.create(spark, path,
+      seed.filter(col("k") <= 100L).coalesce(1), Seq("k"))
+    t.append(seed.filter(col("k") > 100L).coalesce(1))
+    t.renameColumn("v", "w") // files keep the physical name v
+    val vRenamed = t.currentVersion
+    t.deleteWhereMoR(col("k") % 5 === 0L) // a DV on both files
+    val vMasked = t.currentVersion
+
+    // every executed query's plan, from the listener; a marker query
+    // run after each call shows that all of its events were delivered
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = seen.add(qe)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    object walk extends AdaptiveSparkPlanHelper
+    // file scans, including those inside a cached relation's plan
+    def fileScans(plan: SparkPlan): Seq[FileSourceScanExec] =
+      walk.collectWithSubqueries(plan) {
+        case s: FileSourceScanExec => Seq(s)
+        case c: InMemoryTableScanExec => fileScans(c.relation.cachedPlan)
+      }.flatten
+    def tableScans(qe: QueryExecution): Seq[FileSourceScanExec] =
+      fileScans(qe.executedPlan)
+        .filter(_.relation.location.rootPaths.exists(_.toUri.getPath.startsWith(path)))
+        .filterNot(_.relation.location.rootPaths.forall { p =>
+          p.getName.startsWith("dv-") || p.getParent.getName.startsWith("_staging_dv_")
+        })
+    var marker = 0
+    def scansOf(op: => Unit): Seq[FileSourceScanExec] = {
+      seen.clear()
+      op
+      marker += 1
+      val tag = s"graft_marker_$marker"
+      spark.range(1).select(col("id").as(tag)).collect()
+      eventually(timeout(30.seconds), interval(50.millis)) {
+        assert(seen.toArray.exists(_.asInstanceOf[QueryExecution]
+          .analyzed.output.exists(_.name == tag)))
+      }
+      seen.toArray.toSeq.map(_.asInstanceOf[QueryExecution]).flatMap(tableScans)
+    }
+    val updates = Seq((3L, 30L, "u003"), (250L, 1L, "u250")).toDF("k", "w", "s")
+    spark.listenerManager.register(listener)
+    try Seq[(String, () => Unit)](
+      "read" -> (() => t.read().collect()),
+      "readVersion" -> (() => t.readVersion(vRenamed).collect()),
+      "prunedRead" -> (() => t.prunedRead("k", 1L, 50L).collect()),
+      "readAppendsSince" -> (() => t.readAppendsSince(1).collect()),
+      "changesBetween" -> (() => t.changesBetween(vRenamed, vMasked).collect()),
+      "deleteWhere" -> (() => t.deleteWhere(col("k") === 7L)),
+      "updateWhereMoR" -> (() => t.updateWhereMoR(col("k") === 11L, Map("w" -> lit(0L)))),
+      "mergeGeneral" -> (() => t.mergeGeneral(Seq((13L, 99L)).toDF("_src_k", "_src_w"),
+        col("k") === col("_src_k"),
+        Seq(None -> graft.lake.MergeArm.Update(Map("w" -> col("_src_w")))), Nil, Nil)),
+      "purgeDeletes" -> (() => t.purgeDeletes()),
+      "merge" -> (() => t.merge(updates, "k")),
+      "compact" -> { () => t.deleteWhereMoR(col("k") === 12L); t.compact(1000L, 1000L) },
+      "addCheck" -> (() => t.addCheck("k_pos", "k > 0")),
+      "buildBloomIndex" -> (() => t.buildBloomIndex(Seq("s")))
+    ).foreach { case (name, op) =>
+      val scans = scansOf(op())
+      assert(scans.nonEmpty, s"$name ran no scan over the table's files")
+      scans.foreach { s =>
+        assert(s.relation.location.getClass.getName == "graft.lake.LakeFileIndex",
+          s"$name scans table data through ${s.relation.location.getClass.getName}")
+      }
+    }
+    finally spark.listenerManager.unregister(listener)
+    // rows stay exact through the renamed, masked, rewritten history
+    val live = (1L to 200L).filterNot(k => k % 5 == 0 || k == 7L || k == 12L) :+ 250L
+    assert(t.read().select("k").as[Long].collect().sorted.toSeq == live.sorted)
+    assert(t.read().filter(col("k") === 3L).select("w", "s").as[(Long, String)]
+      .collect().toSeq == Seq((30L, "u003")))
+    assert(t.read().filter(col("k") === 13L).select("w", "s").as[(Long, String)]
+      .collect().toSeq == Seq((99L, "s013")))
+  }
 }
