@@ -22,8 +22,8 @@ object Tables {
     * the schema from the metastore instead. This memo is that catalog:
     * metadata only, never data, and a restaged file (new size/mtime)
     * re-infers. Safe across sessions in one JVM — the schema is a pure
-    * function of the file bytes (events' nanosAsLong conf is always set
-    * by its loader before the first read).
+    * function of the file bytes (events' loader sets nanosAsLong before
+    * the first read whenever the footer stores NANOS).
     */
   private val schemaCache =
     new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()
@@ -57,19 +57,20 @@ object Tables {
 
   private def pq(s: SparkSession, path: String): DataFrame = parquetCached(s, path)
 
-  private val countCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-
-  /** Exact row count of an immutable parquet table from FOOTER metadata
-    * (block row counts), memoized on the same fingerprint as the schema.
-    * This is the manifest-stats pattern (LakeTable.statsReport serves the
-    * same number at zero file I/O): several queries need the corpus size
-    * only to pick a sampling prefix length, and a full `df.count()` job
-    * per query re-derives a constant the footers already store. Metadata
-    * only — a restaged file re-reads; parquet footer counts are exact.
+  /** What the footers of an immutable parquet table say: its exact row
+    * count (block row counts) and the top-level columns stored as
+    * INT64 TIMESTAMP(NANOS).
     */
-  def rowCountCached(s: SparkSession, path: String): Long = {
-    countCache.computeIfAbsent(fingerprint(path), { _ =>
+  private case class FooterFacts(rows: Long, nanosColumns: Set[String])
+
+  private val footerCache = new java.util.concurrent.ConcurrentHashMap[String, FooterFacts]()
+
+  /** [[FooterFacts]] of `path`, memoized on the same fingerprint as the
+    * schema: metadata only — a restaged file re-reads.
+    */
+  private def footerFacts(s: SparkSession, path: String): FooterFacts =
+    footerCache.computeIfAbsent(fingerprint(path), { _ =>
+      import org.apache.parquet.schema.LogicalTypeAnnotation.{TimestampLogicalTypeAnnotation, TimeUnit}
       val conf = s.sparkContext.hadoopConfiguration
       val f = new java.io.File(path)
       val files: Seq[java.io.File] =
@@ -82,14 +83,32 @@ object Tables {
             }
           walk(f)
         } else Seq(f)
-      java.lang.Long.valueOf(files.map { file =>
+      files.map { file =>
         val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
           new org.apache.hadoop.fs.Path(file.getAbsolutePath), conf)
         val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        try r.getRecordCount finally r.close()
-      }.sum)
-    }).longValue()
-  }
+        try {
+          import scala.jdk.CollectionConverters._
+          val nanos = r.getFooter.getFileMetaData.getSchema.getFields.asScala
+            .map(c => (c.getName, c.getLogicalTypeAnnotation)).collect {
+              case (n, t: TimestampLogicalTypeAnnotation) if t.getUnit == TimeUnit.NANOS => n
+            }.toSet
+          FooterFacts(r.getRecordCount, nanos)
+        } finally r.close()
+      }.foldLeft(FooterFacts(0L, Set.empty)) { (a, b) =>
+        FooterFacts(a.rows + b.rows, a.nanosColumns ++ b.nanosColumns)
+      }
+    })
+
+  /** Exact row count of an immutable parquet table from FOOTER metadata
+    * (block row counts), memoized on the same fingerprint as the schema.
+    * This is the manifest-stats pattern (LakeTable.statsReport serves the
+    * same number at zero file I/O): several queries need the corpus size
+    * only to pick a sampling prefix length, and a full `df.count()` job
+    * per query re-derives a constant the footers already store. Metadata
+    * only — a restaged file re-reads; parquet footer counts are exact.
+    */
+  def rowCountCached(s: SparkSession, path: String): Long = footerFacts(s, path).rows
 
   def region(s: SparkSession, dir: String): DataFrame   = pq(s, s"$dir/region.parquet")
   def nation(s: SparkSession, dir: String): DataFrame   = pq(s, s"$dir/nation.parquet")
@@ -105,13 +124,16 @@ object Tables {
     * regenerations (INT64 TIMESTAMP(NANOS) → plain timestamp[us] on
     * 2026-08-13), so the loader is schema-adaptive: it inspects the
     * footer-derived type and normalizes to a session-TZ (UTC)
-    * TimestampType with microsecond values either way. nanosAsLong is a
-    * runtime-settable conf, so this works under the driver's pre-built
-    * session too; it is a no-op for non-NANOS files.
+    * TimestampType with microsecond values either way. Only a footer
+    * that stores `ts` as NANOS needs nanosAsLong, and only then is it
+    * set on the session (the scan reads with it); a timestamp[us] file
+    * leaves the session conf untouched.
     */
   def events(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    normalizeEventsTs(pq(s, s"$dir/events.parquet"))
+    val path = s"$dir/events.parquet"
+    if (footerFacts(s, path).nanosColumns("ts"))
+      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    normalizeEventsTs(pq(s, path))
   }
 
   /** Hash-repartition `df` to `defaultParallelism` — but ONLY when its

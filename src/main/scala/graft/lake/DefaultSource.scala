@@ -84,7 +84,7 @@ class DefaultSource extends RelationProvider
 
 /** Format-reader relation over a snapshot that carries deletion
   * vectors: delegates to [[LakeTable.scanVersion]] (index-planned scan
-  * + DV anti-join) and forwards the pushed column prunes and filters
+  * + the per-row DV bitmap filter) and forwards the pushed column prunes and filters
   * into it, so file skipping survives this fallback path. Unsupported
   * filter shapes are simply not forwarded — Spark re-evaluates every
   * filter above the relation, so this stays exact (the

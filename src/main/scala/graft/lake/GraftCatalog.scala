@@ -444,7 +444,8 @@ private[lake] class LakeDynamicWrite(spark: SparkSession, t: LakeTable,
 }
 
 /** V1Scan fallback for snapshots the pure-parquet scan cannot serve
-  * (deletion vectors to anti-join, physical column names to re-alias):
+  * (deletion vectors to mask by row index, physical column names to
+  * re-alias):
   * plans through [[LakeTable.scanVersion]] with pushed prunes/filters
   * forwarded, so manifest-stats file skipping still applies inside the
   * v1 relation. Pushed filters are reported but ALSO left as residual

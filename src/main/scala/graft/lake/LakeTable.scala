@@ -4,13 +4,19 @@ import java.io.File
 import java.nio.file.{FileAlreadyExistsException, Files, Paths, StandardCopyOption}
 import java.util.UUID
 
+import scala.collection.mutable
 import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.json4s._
 import org.json4s.jackson.JsonMethods
+import org.roaringbitmap.longlong.Roaring64NavigableMap
+
+import graft.functions.{DeletedRows, NotDeleted}
 
 /** A minimal ACID table format on plain parquet — the lakehouse
   * primitive (Delta/Iceberg-shaped) the engine otherwise lacks, built
@@ -114,60 +120,50 @@ class LakeTable private (spark: SparkSession, val path: String) {
   /** The live rows of `entries` under `m`'s schema, planned through a
     * [[LakeFileIndex]] over exactly those entries, with logical column
     * names. When any entry carries a deletion vector (or `withId` is
-    * set) the rows carry their physical provenance `_gf_file` /
-    * `_gf_pos` and the masked positions are anti-joined away ON TOP of
-    * the index-planned scan: pushed data filters still reach the index
-    * (left-side predicates push through a left-anti join), so
-    * manifest-stats file pruning and a bucketed scan's output
-    * partitioning are unchanged, and the mask costs one
-    * broadcast-sized join only when DVs exist. `withId` keeps the two
-    * provenance columns in the output — the identity the hit probe and
-    * [[mergeGeneral]] need.
+    * set) the rows carry their physical provenance `_gf_file`
+    * (`_metadata.file_name`) / `_gf_pos` (`_metadata.row_index`), and
+    * the masked positions are dropped by a per-row filter ON TOP of the
+    * index-planned scan ([[deletedRows]]): pushed data filters still
+    * reach the index, so manifest-stats file pruning and a bucketed
+    * scan's output partitioning are unchanged, and the mask adds no
+    * join, exchange or job. `withId` keeps the two provenance columns
+    * in the output — the identity the hit probe and [[mergeGeneral]]
+    * need.
     */
   private[lake] def rowsOf(m: Manifest, entries: Seq[FileEntry],
       withId: Boolean = false): DataFrame = {
     val planned = new LakeFileIndex(spark, path, m.copy(files = entries)).toDataFrame
-    val sidecars = entries.flatMap(_.dv).distinct
+    val masked = entries.filter(_.dv.nonEmpty)
     val rows =
-      if (sidecars.isEmpty && !withId) planned
+      if (masked.isEmpty && !withId) planned
       else {
         val provenance = planned.select(col("*"),
-          element_at(split(col("_metadata.file_path"), "/"), -1).as("_gf_file"),
+          col("_metadata.file_name").as("_gf_file"),
           col("_metadata.row_index").as("_gf_pos"))
-        val masked =
-          if (sidecars.isEmpty) provenance else maskDeleted(provenance, sidecars)
-        if (withId) masked else masked.drop("_gf_file", "_gf_pos")
+        val live =
+          if (masked.isEmpty) provenance
+          else provenance.filter(NotDeleted.column(col("_gf_file"), col("_gf_pos"),
+            deletedRows(masked)))
+        if (withId) live else live.drop("_gf_file", "_gf_pos")
       }
     // the index plans under PHYSICAL field names (what the files store);
-    // surface the logical names on top, by name (the mask's using-join
-    // puts its keys first) — filters and column prunes push through the
-    // alias-only Project, so file skipping is unchanged
+    // surface the logical names on top, by name — filters and column
+    // prunes push through the alias-only Project, so file skipping is
+    // unchanged
     if (m.physNames.isEmpty && !withId) rows
     else rows.select(m.schema.fieldNames.toSeq.map(c => col(m.physOf(c)).as(c)) ++
       (if (withId) Seq(col("_gf_file"), col("_gf_pos")) else Nil): _*)
   }
 
-  /** Anti-join away the (file, position) pairs the sidecars mask. The
-    * sidecar side is PINNED to a broadcast: DVs are deleted-row
-    * positions only (KBs–MBs), and without the hint a table whose
-    * deletes accumulated past the auto-broadcast threshold would
-    * silently degrade to shuffling the whole fact on (file, pos) — the
-    * exact scale-killer DVs exist to avoid. [[purgeDeletes]] is the
-    * matching debt policy: once dvRows/rows crosses a threshold, the
-    * masked files get rewritten and the sidecars retired.
+  /** The deleted positions of `entries`: their DV files, read on the
+    * driver and unioned per data file, broadcast to the tasks.
     */
-  private def maskDeleted(df: DataFrame, sidecars: Seq[String]): DataFrame =
-    df.join(broadcast(readSidecars(sidecars)),
-      Seq("_gf_file", "_gf_pos"), "left_anti")
-
-  /** The (file, position) pairs the given sidecars mask out. Schema is
-    * supplied (sidecars are written with exactly these two columns by
-    * writeDvSidecar), skipping the per-read footer inference pass.
-    */
-  private def readSidecars(names: Seq[String]): DataFrame =
-    spark.read.schema(LakeTable.dvSidecarSchema)
-      .parquet(names.map(n => s"$path/$n"): _*)
-      .select(col("_gf_file"), col("_gf_pos"))
+  private def deletedRows(entries: Seq[FileEntry]): DeletedRows = {
+    val dvs = entries.flatMap(_.dv).distinct
+      .map(n => n -> LakeTable.decodeDv(Files.readAllBytes(Paths.get(path, n)))).toMap
+    val byFile = entries.map(f => f.name -> f.dv.map(dvs(_)(f.name)).reduce(or)).toMap
+    new DeletedRows(spark.sparkContext.broadcast(byFile))
+  }
 
   /** Stats-pruned read: skip every file whose [min,max] for `col` lies
     * outside [lo, hi] — manifest-level file skipping, no footer reads.
@@ -786,23 +782,25 @@ class LakeTable private (spark: SparkSession, val path: String) {
     changeWhere("update", mor = false, cond, Some(set))
   }
 
-  /** Merge-on-read DELETE: the matching ROW POSITIONS are recorded in a
-    * deletion-vector sidecar and no data file is rewritten; every read
-    * path (read / scan / prunedRead / merge / changesBetween / compact)
-    * masks them via an anti-join on (file, `_metadata.row_index`). At
+  /** Merge-on-read DELETE: the matching ROW POSITIONS are recorded as
+    * one Roaring bitmap per touched file in one deletion-vector (DV)
+    * file, and no data file is rewritten — one job, the hit probe, whose
+    * tasks return the bitmaps. Every read path (read / scan / prunedRead
+    * / merge / changesBetween / compact) drops the masked
+    * `_metadata.row_index` positions with a per-row bitmap probe. At
     * 100 TB this turns a point delete from rewriting N×1 GB files into
-    * writing one KB-scale sidecar; reads pay a broadcast anti-join
-    * against the (small) live DV set until [[purgeDeletes]] or
-    * compaction rewrites the file.
+    * writing one KB-scale DV file; reads pay the probe until
+    * [[purgeDeletes]] or compaction rewrites the file.
     */
   def deleteWhereMoR(cond: Column): Int =
     changeWhere("delete-mor", mor = true, cond, None)
 
   /** Merge-on-read UPDATE: the matching rows are DV-masked IN PLACE and
     * only their updated versions are appended as a delta file — ZERO
-    * data files rewritten. A point UPDATE costs one KB-scale sidecar
-    * plus a delta the size of the touched rows, instead of rewriting
-    * each touched GB-scale file.
+    * data files rewritten. A point UPDATE costs one KB-scale DV file
+    * plus a delta the size of the touched rows — two jobs, the hit
+    * probe and the delta's write — instead of rewriting each touched
+    * GB-scale file.
     */
   def updateWhereMoR(cond: Column, set: Map[String, Column]): Int = {
     require(set.nonEmpty, "updateWhereMoR needs at least one SET column")
@@ -865,12 +863,14 @@ class LakeTable private (spark: SparkSession, val path: String) {
     *     hit row nor invalidate the change.
     *  2. '''Locate.''' `hits` picks the hit rows out of the candidates'
     *     live rows ([[rowsOf]]). CoW collects the names of the files
-    *     holding them; MoR writes their (file, position) pairs as ONE
-    *     deletion-vector sidecar ([[writeDvSidecar]], [[maskEntries]]).
+    *     holding them; MoR's probe tasks return their positions as
+    *     per-file Roaring bitmaps, written as ONE deletion-vector file
+    *     ([[writeDv]]) whose cardinalities are the masked-row counts
+    *     ([[maskEntries]]).
     *     `hits = None` touches every candidate unprobed (CoW only).
     *  3. '''Apply.''' `output(touched)` is the rows to stage. CoW: the
     *     touched files' new contents, replacing them. MoR: the appended
-    *     delta; the touched files stay, masked by the sidecar.
+    *     delta; the touched files stay, masked by the DV file.
     *  4. '''Stage, check, commit, clean up:''' [[commitChange]].
     *
     * A change that touches no file is a no-op returning `v`, unless it
@@ -889,22 +889,21 @@ class LakeTable private (spark: SparkSession, val path: String) {
     val candidates = base.files.filter(scope)
     val hitRows = if (candidates.isEmpty) None
       else hits.map(_(rowsOf(base, candidates, withId = true)))
-    val (touched, masked, sidecar) =
+    val (touched, masked, dvFile) =
       if (!mor) {
         val names = hitRows.fold(Set.empty[String])(
           _.select(col("_gf_file")).distinct().collect().map(_.getString(0)).toSet)
         (if (hits.isEmpty) candidates else candidates.filter(f => names(f.name)),
           Nil, None)
-      } else hitRows.flatMap(h =>
-          writeDvSidecar(h.select(col("_gf_file"), col("_gf_pos")))) match {
-        case Some((sc, perFile)) =>
-          val (t, m) = maskEntries(candidates, sc, perFile)
-          (t, m, Some(sc))
+      } else hitRows.flatMap(writeDv) match {
+        case Some((dv, perFile)) =>
+          val (t, m) = maskEntries(candidates, dv, perFile)
+          (t, m, Some(dv))
         case None => (Nil, Nil, None)
       }
     if (touched.isEmpty && !always) v
     else commitChange(op, v, base, scope, touched, masked ++ adopted,
-      output(touched), checkOutput, adopted.map(_.name) ++ sidecar)
+      output(touched), checkOutput, adopted.map(_.name) ++ dvFile)
   }
 
   /** The tail of [[changeRows]], shared with [[mergeGeneral]]: stage
@@ -914,7 +913,7 @@ class LakeTable private (spark: SparkSession, val path: String) {
     * an empty output, so no caller spends a job probing it for
     * emptiness first.
     *
-    * Cleanup: every file the change wrote — `written` (a DV sidecar,
+    * Cleanup: every file the change wrote — `written` (a DV file,
     * adopted files) plus the staged ones — is deleted on a failure
     * known to precede the publish: anything thrown before
     * [[commitMutation]] is entered (a [[CheckViolationException]]
@@ -944,52 +943,42 @@ class LakeTable private (spark: SparkSession, val path: String) {
     }
   }
 
-  /** Write the (file, position) pairs of `hits` as ONE deletion-vector
-    * sidecar parquet in the table root (positions are small next to
-    * data; a mask wide enough to make this big belongs in the
-    * copy-on-write path). Returns the sidecar name and its per-file
-    * masked-row counts; None when nothing matched. The counts are read
-    * from the scratch copy, so the sidecar enters the table root only
-    * as the last step. It is dead data until a manifest references
-    * it — a crash here leaves an orphan for the next vacuum, never a
-    * corrupt snapshot.
+  /** Collect the hit rows' positions as one Roaring bitmap per touched
+    * file — ONE job over the hit probe's plan, each task returning the
+    * bitmaps of the rows it saw ([[LakeTable.dvOfRows]]) — and write the
+    * driver's per-file union as ONE deletion-vector file in the table
+    * root with java.nio: a temp name, then an atomic move. Returns the
+    * file's name and its per-file masked-row counts (the bitmap
+    * cardinalities); None when nothing matched. The file is dead data
+    * until a manifest references it — a crash leaves an orphan for the
+    * next vacuum, never a corrupt snapshot.
     */
-  private def writeDvSidecar(hits: DataFrame)
-      : Option[(String, Map[String, Long])] = {
-    val job = LakeFileWriter.newJob()
-    val scratch = Paths.get(path, s"_staging_dv_$job")
+  private def writeDv(hits: DataFrame): Option[(String, Map[String, Long])] = {
+    val qe = hits.select(col("_gf_file"), col("_gf_pos")).queryExecution
+    val union = SQLExecution.withNewExecutionId(qe, Some("lake dv probe")) {
+      qe.executedPlan.execute().mapPartitions(rows => Iterator(LakeTable.dvOfRows(rows))).collect()
+    }.flatten.groupMapReduce(_._1)(_._2)(or)
+    if (union.isEmpty) return None
+    val name = s"dv-${LakeFileWriter.newJob()}.bin"
+    val tmp = Paths.get(path, s"_staging_$name")
     try {
-      hits.coalesce(1).write.mode("overwrite").parquet(scratch.toString)
-      val part = Option(scratch.toFile.list((_, n) =>
-          n.startsWith("part-") && n.endsWith(".parquet")))
-        .getOrElse(Array.empty[String]).sorted.headOption
-      part.flatMap { p =>
-        val perFile = spark.read.schema(LakeTable.dvSidecarSchema)
-          .parquet(scratch.resolve(p).toString)
-          .groupBy(col("_gf_file")).count()
-          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-        if (perFile.isEmpty) None
-        else {
-          val sidecar = s"dv-$job.parquet"
-          Files.move(scratch.resolve(p), Paths.get(path, sidecar),
-            StandardCopyOption.ATOMIC_MOVE)
-          Some((sidecar, perFile))
-        }
-      }
-    } finally graft.deleteRecursively(scratch)
+      Files.write(tmp, LakeTable.encodeDv(union))
+      Files.move(tmp, Paths.get(path, name), StandardCopyOption.ATOMIC_MOVE)
+    } finally Files.deleteIfExists(tmp)
+    Some((name, union.map { case (f, b) => f -> b.getLongCardinality }))
   }
 
-  /** Split `files` into (touched, masked): entries the sidecar masks
-    * rows of, and their DV-extended replacements — a file whose every
-    * live row is now masked drops from the manifest outright.
+  /** Split `files` into (touched, masked): entries the DV file `dv`
+    * masks rows of, and their DV-extended replacements — a file whose
+    * every live row is now masked drops from the manifest outright.
     */
-  private def maskEntries(files: Seq[FileEntry], sidecar: String,
+  private def maskEntries(files: Seq[FileEntry], dv: String,
       perFile: Map[String, Long]): (Seq[FileEntry], Seq[FileEntry]) = {
     val touched = files.filter(f => perFile.contains(f.name))
     val masked = touched.flatMap { f =>
       val n = perFile(f.name)
       if (f.dvRows + n >= f.rows) None // fully deleted
-      else Some(f.copy(dv = f.dv :+ sidecar, dvRows = f.dvRows + n))
+      else Some(f.copy(dv = f.dv :+ dv, dvRows = f.dvRows + n))
     }
     (touched, masked)
   }
@@ -1030,7 +1019,7 @@ class LakeTable private (spark: SparkSession, val path: String) {
     */
   private def condScope(base: Manifest, cond: Column): FileEntry => Boolean = {
     // analysis-only: an empty frame with the manifest schema resolves
-    // the Column without touching data or sidecar footers
+    // the Column without touching data
     val probe = spark.createDataFrame(spark.sparkContext.emptyRDD[Row], base.schema)
     val bounds = LakeFileIndex.resolvedCondition(probe, cond)
       .map(e => LakeFileIndex.boundsOf(Seq(e), base.statsCols.toSet))
@@ -1199,8 +1188,8 @@ class LakeTable private (spark: SparkSession, val path: String) {
 
   /** Fraction of the current snapshot's physical rows masked by
     * deletion vectors — the table's DV debt. Control-plane only (one
-    * manifest read). Reads pay one broadcast anti-join while this is
-    * non-zero; [[purgeDeletes]] reclaims it.
+    * manifest read). While it is non-zero, reads of the masked files
+    * pay one bitmap probe per row; [[purgeDeletes]] reclaims it.
     */
   def dvDebt: Double = {
     val m = manifest(currentVersion)
@@ -1214,7 +1203,7 @@ class LakeTable private (spark: SparkSession, val path: String) {
     * and this is where the tax is repaid. Content-identical by
     * construction (the rewrite materializes exactly the live rows), one
     * atomic commit, files below the threshold keep their DVs, and the
-    * retired sidecars become unreferenced for the next vacuum. Returns
+    * retired DV files become unreferenced for the next vacuum. Returns
     * the current version when nothing crosses the threshold.
     */
   def purgeDeletes(minDebt: Double = 0.0): Int = {
@@ -1249,12 +1238,13 @@ class LakeTable private (spark: SparkSession, val path: String) {
     *  2. Files referenced by NO manifest at all. These are either
     *     crash orphans (safe to delete) or — the race this grace window
     *     exists for — a concurrent writer's staged-but-not-yet-committed
-    *     files, which [[LakeFileWriter.stage]] moves into the table root BEFORE the
-    *     manifest commit. Deleting those would corrupt the table the
-    *     moment the writer commits, so unreferenced files are reclaimed
-    *     only once older than `orphanGraceMs` (default 10 min, the
-    *     Delta-style retention discipline scaled to staging latency; a
-    *     staging pass that outlives the grace window should raise it).
+    *     files, which [[LakeFileWriter.stage]] and [[writeDv]] move into
+    *     the table root BEFORE the manifest commit. Deleting those would
+    *     corrupt the table the moment the writer commits, so unreferenced
+    *     files are reclaimed only once older than `orphanGraceMs`
+    *     (default 10 min, the Delta-style retention discipline scaled to
+    *     staging latency; a staging pass that outlives the grace window
+    *     should raise it).
     */
   def vacuum(retainVersions: Int, orphanGraceMs: Long): Seq[String] = {
     require(retainVersions >= 1, "must retain at least the current version")
@@ -1267,7 +1257,8 @@ class LakeTable private (spark: SparkSession, val path: String) {
       manifest(v).files.flatMap(f => f.name +: f.dv)
     }.toSet
     val now = System.currentTimeMillis()
-    val dataDead = Option(new File(path).list((_, n) => n.endsWith(".parquet")))
+    val dataDead = Option(new File(path).list((_, n) =>
+        n.endsWith(".parquet") || n.startsWith("dv-")))
       .getOrElse(Array.empty[String]).toSeq
       .filterNot(referenced)
       .filter { n =>
@@ -1311,7 +1302,7 @@ class LakeTable private (spark: SparkSession, val path: String) {
 
   /** SHALLOW CLONE: fork the current snapshot into a NEW table at
     * `targetPath` with ZERO data rewritten — every data file and DV
-    * sidecar is hard-linked into the target directory (same inode; a
+    * file is hard-linked into the target directory (same inode; a
     * cross-filesystem target falls back to a copy), and the clone gets
     * its own v1 manifest. Because both tables treat files as immutable
     * and vacuum by unlinking, the clone and the source age
@@ -1824,10 +1815,11 @@ private[lake] case class Manifest(operation: String, schemaJson: String,
 /** One immutable data file with optional per-column long [min,max].
   * `bytes` (0 = unrecorded, pre-upgrade manifests) feeds split planning
   * in [[LakeFileIndex]] without per-file filesystem stats. `dv` lists
-  * the deletion-vector sidecars whose recorded (file, row position)
-  * pairs mask rows of THIS file out of every read (merge-on-read
-  * deletes); `dvRows` is how many of `rows` they mask (logical rows =
-  * rows - dvRows). `rows` stays the physical parquet count.
+  * the deletion-vector files whose Roaring bitmaps for THIS file mask
+  * its row positions out of every read (merge-on-read deletes; see
+  * [[LakeTable.encodeDv]]); `dvRows` is how many of `rows` they mask
+  * (logical rows = rows - dvRows). `rows` stays the physical parquet
+  * count.
   * `strStats` carries TRUNCATED string [min,max] (Delta/Iceberg-style):
   * the min is a ≤-prefix, the max is the prefix with its last char
   * bumped (None = unbounded when no safe bump exists) — see
@@ -1887,7 +1879,7 @@ private[lake] case class FileEntry(name: String, rows: Long,
     * content (a MoR delete changes rows without changing `name`).
     * The dv list is sorted so the identity is order-insensitive — two
     * manifests carrying the same DV set must compare equal even if a
-    * future path normalizes or merges sidecar lists.
+    * future path normalizes or merges DV lists.
     */
   def signature: String = s"$name|${dv.sorted.mkString(",")}"
 
@@ -1929,13 +1921,45 @@ class CheckViolationException(name: String, exprSql: String, where: String)
 object LakeTable {
   private[lake] val LogDir = "_graft_log"
 
-  /** Fixed schema of DV sidecar files ([[writeDvSidecar]] writes exactly
-    * these two provenance columns) — supplied on read so the per-sidecar
-    * footer inference pass disappears.
+  /** A deletion-vector file: per data file name, the Roaring bitmap of
+    * its masked row positions (`_metadata.row_index`), 64-bit so no
+    * position is ever truncated. Layout: the file count, then per file
+    * its name (`writeUTF`) and its bitmap in the portable Roaring
+    * serialization.
     */
-  private[lake] val dvSidecarSchema: StructType = StructType(Seq(
-    StructField("_gf_file", StringType),
-    StructField("_gf_pos", LongType)))
+  private[lake] def encodeDv(dv: Map[String, Roaring64NavigableMap]): Array[Byte] = {
+    val bytes = new java.io.ByteArrayOutputStream()
+    val out = new java.io.DataOutputStream(bytes)
+    out.writeInt(dv.size)
+    dv.foreach { case (f, b) => b.runOptimize(); out.writeUTF(f); b.serializePortable(out) }
+    out.close()
+    bytes.toByteArray
+  }
+
+  private[lake] def decodeDv(bytes: Array[Byte]): Map[String, Roaring64NavigableMap] = {
+    val in = new java.io.DataInputStream(new java.io.ByteArrayInputStream(bytes))
+    Seq.fill(in.readInt()) {
+      val f = in.readUTF()
+      val b = new Roaring64NavigableMap()
+      b.deserializePortable(in)
+      f -> b
+    }.toMap
+  }
+
+  /** `a` ORed with `b`, in place. */
+  private def or(a: Roaring64NavigableMap, b: Roaring64NavigableMap): Roaring64NavigableMap = {
+    a.or(b)
+    a
+  }
+
+  /** A DV probe task's result: its (file name, row position) rows as
+    * one bitmap per file.
+    */
+  private[lake] def dvOfRows(rows: Iterator[InternalRow]): Map[String, Roaring64NavigableMap] = {
+    val dv = mutable.Map.empty[String, Roaring64NavigableMap]
+    rows.foreach(r => dv.getOrElseUpdate(r.getString(0), new Roaring64NavigableMap()).addLong(r.getLong(1)))
+    dv.toMap
+  }
 
   /** Default vacuum grace for never-referenced files — long enough that
     * any in-flight staging pass has committed its manifest.
@@ -1983,8 +2007,8 @@ object LakeTable {
     * physical row (FPP ≈ 1%), word-aligned with a 1024-bit floor. The
     * bitmap is stored inline in the manifest (base64) — ~1.25 bytes
     * per row per indexed column; a fleet-scale deployment would spill
-    * bitmaps above a threshold to index sidecar files the way deletion
-    * vectors already are.
+    * bitmaps above a threshold to index files the way deletion vectors
+    * already are.
     */
   private[lake] val BloomSeeds = 5
   private[lake] def bloomBits(rows: Long): Long =
@@ -2293,16 +2317,10 @@ private[lake] object Manifest {
       "operation" -> JString(m.operation),
       "schema" -> JString(m.schemaJson),
       "statsCols" -> JArray(m.statsCols.map(JString(_)).toList),
-      "txns" -> JObject(m.txns.toList.sortBy(_._1).map { case (a, b) =>
-        a -> JLong(b)
-      }),
-      "checks" -> JObject(m.checks.toList.sortBy(_._1).map { case (n, e) =>
-        n -> JString(e)
-      }),
+      "txns" -> sorted(m.txns)(JLong(_)),
+      "checks" -> sorted(m.checks)(JString(_)),
       "partitionBy" -> JArray(m.partitionBy.map(JString(_)).toList),
-      "physNames" -> JObject(m.physNames.toList.sortBy(_._1).map {
-        case (l, ph) => l -> JString(ph)
-      }),
+      "physNames" -> sorted(m.physNames)(JString(_)),
       "bucketBy" -> JArray(m.bucketBy.map(JString(_)).toList),
       "buckets" -> JLong(m.buckets.toLong))))
   }
@@ -2312,34 +2330,40 @@ private[lake] object Manifest {
         "file" -> JString(f.name),
         "rows" -> JLong(f.rows),
         "bytes" -> JLong(f.bytes),
-        "stats" -> JObject(f.stats.toList.sortBy(_._1).map { case (c, (mn, mx)) =>
-          c -> JArray(List(JLong(mn), JLong(mx)))
-        }))
-      val sstats =
-        if (f.strStats.isEmpty) Nil
-        else List("sstats" -> JObject(
-          f.strStats.toList.sortBy(_._1).map { case (c, (mn, mx)) =>
-            c -> JArray(List(JString(mn), mx.map(JString(_)).getOrElse(JNull)))
-          }))
-      val nulls =
-        if (f.nulls.isEmpty) Nil
-        else List("nulls" -> JObject(
-          f.nulls.toList.sortBy(_._1).map { case (c, n) => c -> JLong(n) }))
-      val hll =
-        if (f.hll.isEmpty) Nil
-        else List("hll" -> JObject(
-          f.hll.toList.sortBy(_._1).map { case (c, s) => c -> JString(s) }))
-      val bloom =
-        if (f.bloom.isEmpty) Nil
-        else List("bloom" -> JObject(
-          f.bloom.toList.sortBy(_._1).map { case (c, s) => c -> JString(s) }))
+        "stats" -> sorted(f.stats) { case (mn, mx) => JArray(List(JLong(mn), JLong(mx))) })
+      val sstats = nonEmpty("sstats", f.strStats) { case (mn, mx) =>
+        JArray(List(JString(mn), mx.map(JString(_)).getOrElse(JNull)))
+      }
       val dv =
         if (f.dv.isEmpty) Nil
         else List("dv" -> JArray(f.dv.map(JString(_)).toList),
           "dvRows" -> JLong(f.dvRows))
-      JsonMethods.compact(JsonMethods.render(
-        JObject(core ++ sstats ++ nulls ++ hll ++ bloom ++ dv)))
+      JsonMethods.compact(JsonMethods.render(JObject(core ++ sstats ++
+        nonEmpty("nulls", f.nulls)(JLong(_)) ++ nonEmpty("hll", f.hll)(JString(_)) ++
+        nonEmpty("bloom", f.bloom)(JString(_)) ++ dv)))
   }
+
+  /** `m` as a JSON object, keys sorted. */
+  private def sorted[V](m: Map[String, V])(v: V => JValue): JObject =
+    JObject(m.toList.sortBy(_._1).map { case (k, x) => k -> v(x) })
+
+  /** The field `key -> m` for a non-empty `m`; none for an empty one. */
+  private def nonEmpty[V](key: String, m: Map[String, V])(v: V => JValue): List[JField] =
+    if (m.isEmpty) Nil else List(key -> sorted(m)(v))
+
+  /** The object under `key` as a map (empty when absent). */
+  private def mapOf[V](j: JValue, key: String)(v: JValue => V): Map[String, V] =
+    j \ key match {
+      case JObject(fields) => fields.map { case (k, x) => k -> v(x) }.toMap
+      case _ => Map.empty
+    }
+
+  /** The string array under `key` (empty when absent). */
+  private def stringsOf(j: JValue, key: String): List[String] =
+    j \ key match {
+      case JArray(vs) => vs.map(_.extract[String])
+      case _ => Nil
+    }
 
   def parse(text: String): Manifest = {
     val lines = text.split('\n').filter(_.nonEmpty)
@@ -2355,18 +2379,11 @@ private[lake] object Manifest {
         }.toMap
         case _ => Map.empty[String, (Long, Long)]
       }
-      val bytes = (j \ "bytes") match {
-        case JNothing => 0L
-        case b => b.extract[Long]
-      }
-      val dv = (j \ "dv") match {
-        case JArray(vs) => vs.map(_.extract[String])
-        case _ => Nil
-      }
-      val dvRows = (j \ "dvRows") match {
-        case JNothing => 0L
-        case n => n.extract[Long]
-      }
+      val dv = stringsOf(j, "dv")
+      dv.find(_.endsWith(".parquet")).foreach(n => throw new IllegalArgumentException(
+        s"manifest entry ${(j \ "file").extract[String]} names the parquet " +
+          s"deletion-vector sidecar $n, a legacy format this version no longer reads " +
+          "(deletion vectors are Roaring bitmap dv-*.bin files)"))
       val strStats = (j \ "sstats") match {
         case JObject(fields) => fields.collect {
           case (c, JArray(List(JString(mn), mx))) =>
@@ -2377,23 +2394,10 @@ private[lake] object Manifest {
         }.toMap
         case _ => Map.empty[String, (String, Option[String])]
       }
-      val nulls = (j \ "nulls") match {
-        case JObject(fields) =>
-          fields.map { case (c, n) => c -> n.extract[Long] }.toMap
-        case _ => Map.empty[String, Long]
-      }
-      val hll = (j \ "hll") match {
-        case JObject(fields) =>
-          fields.map { case (c, s) => c -> s.extract[String] }.toMap
-        case _ => Map.empty[String, String]
-      }
-      val bloom = (j \ "bloom") match {
-        case JObject(fields) =>
-          fields.map { case (c, s) => c -> s.extract[String] }.toMap
-        case _ => Map.empty[String, String]
-      }
       FileEntry((j \ "file").extract[String], (j \ "rows").extract[Long],
-        stats, bytes, dv, dvRows, strStats, nulls, hll, bloom)
+        stats, (j \ "bytes").extractOpt[Long].getOrElse(0L), dv,
+        (j \ "dvRows").extractOpt[Long].getOrElse(0L), strStats, mapOf(j, "nulls")(_.extract[Long]),
+        mapOf(j, "hll")(_.extract[String]), mapOf(j, "bloom")(_.extract[String]))
   }
 
   /** Parse the metadata head line into a files-less Manifest. */
@@ -2411,31 +2415,11 @@ private[lake] object Manifest {
           if (v >= 0L) Map("_legacy" -> v) else Map.empty[String, Long]
       }
     }
-    val checks = (head \ "checks") match {
-      case JObject(fields) =>
-        fields.map { case (n, e) => n -> e.extract[String] }.toMap
-      case _ => Map.empty[String, String]
-    }
-    val partitionBy = (head \ "partitionBy") match {
-      case JArray(vs) => vs.map(_.extract[String])
-      case _ => Nil
-    }
-    val physNames = (head \ "physNames") match {
-      case JObject(fields) =>
-        fields.map { case (l, ph) => l -> ph.extract[String] }.toMap
-      case _ => Map.empty[String, String]
-    }
-    val bucketBy = (head \ "bucketBy") match {
-      case JArray(vs) => vs.map(_.extract[String])
-      case _ => Nil
-    }
-    val buckets = (head \ "buckets") match {
-      case JNothing => 0
-      case n => n.extract[Long].toInt
-    }
     Manifest((head \ "operation").extract[String],
       (head \ "schema").extract[String],
-      (head \ "statsCols").extract[List[String]], Nil, txns, checks,
-      partitionBy, physNames, bucketBy, buckets)
+      (head \ "statsCols").extract[List[String]], Nil, txns,
+      mapOf(head, "checks")(_.extract[String]), stringsOf(head, "partitionBy"),
+      mapOf(head, "physNames")(_.extract[String]), stringsOf(head, "bucketBy"),
+      (head \ "buckets").extractOpt[Long].getOrElse(0L).toInt)
   }
 }

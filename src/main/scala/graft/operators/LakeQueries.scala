@@ -32,7 +32,7 @@ object LakeQueries {
   private[operators] def opened(df: DataFrame): Long =
     df.select(input_file_name()).distinct().count()
 
-  /** How many deletion-vector sidecars sit in the table directory. */
+  /** How many deletion-vector files sit in the table directory. */
   private def dvFiles(t: LakeTable): Int =
     Option(new java.io.File(t.path).list((_, n) => n.startsWith("dv-")))
       .map(_.length).getOrElse(0)
@@ -497,12 +497,12 @@ object LakeQueries {
 
     // merge-on-read DELETE via deletion vectors: the same predicate as
     // lake_delete, but NO data file is rewritten — the matching row
-    // positions land in one small sidecar and every read path masks
-    // them (here the Catalyst scan() path, DV anti-join on top of the
-    // index). no_files_rewritten pins that the post-delete manifest
+    // positions land in one small DV file of per-file Roaring bitmaps
+    // and every read path masks them (here the Catalyst scan() path, a
+    // per-row bitmap filter on top of the index). no_files_rewritten pins that the post-delete manifest
     // references only pre-delete data files; at 100 TB this turns a
     // point delete from rewriting N GB-scale files into writing one
-    // KB-scale sidecar, reclaimed at the next compaction.
+    // KB-scale DV file, reclaimed at the next compaction.
     "lake_delete_dv" -> ((s, dir) => {
       val (t, half) = twoFileTable(s, dir, "lake_delete_dv")
       val namesBefore = t.fileNames(2).toSet
@@ -519,7 +519,7 @@ object LakeQueries {
 
     // PURGE the deletion-vector debt: after a MoR delete, purgeDeletes
     // rewrites ONLY the indebted file to its live rows (the clean hi
-    // file is carried by reference), retiring its sidecar; vacuum then
+    // file is carried by reference), retiring its DV file; vacuum then
     // physically reclaims the unreferenced DV — the full
     // cheap-write/taxed-read/repay lifecycle in one declared op. At
     // 100 TB this is the background maintenance job that keeps scan
@@ -549,9 +549,9 @@ object LakeQueries {
     // (no_files_rewritten pins that every pre-update file is still
     // referenced; delta_appended pins that the only new files are the
     // update delta). At 100 TB a point UPDATE costs one KB-scale
-    // sidecar + a delta the size of the touched rows instead of
+    // DV file + a delta the size of the touched rows instead of
     // rewriting each touched GB-scale file; purgeDeletes repays the
-    // read-side anti-join tax later.
+    // read-side mask tax later.
     "lake_update_dv" -> ((s, dir) => {
       val (t, half) = twoFileTable(s, dir, "lake_update_dv")
       val namesBefore = t.fileNames(2).toSet

@@ -47,10 +47,16 @@ object LakeWriteBridge {
   }
 
   /** Driver-side: prepare a parquet write of `schema` with the
-    * session's hadoop/SQL configuration.
+    * session's hadoop/SQL configuration. The factory's own copy of that
+    * configuration opens files through `graft.streaming.NioLocalFs`,
+    * uncached: without libhadoop the stock local filesystem forks a
+    * `chmod` for every file it creates. The session and the JVM-wide
+    * `FileSystem` cache are left as they are.
     */
   def prepare(spark: SparkSession, schema: StructType): Factory = {
     val job = Job.getInstance(spark.sessionState.newHadoopConf())
+    job.getConfiguration.set("fs.file.impl", classOf[graft.streaming.NioLocalFs].getName)
+    job.getConfiguration.setBoolean("fs.file.impl.disable.cache", true)
     val factory = new ParquetFileFormat()
       .prepareWrite(spark, job, Map.empty, schema)
     new Factory(factory, new SerializableConfiguration(job.getConfiguration),

@@ -40,9 +40,9 @@ object DmlGate {
 }
 
 /** Round-9 lake surface: merge-on-read DELETE via deletion-vector
-  * sidecars (no data file rewritten; every read path masks the
-  * recorded positions), RESTORE to a retained version, and CHECK
-  * constraints validated per write delta.
+  * files of per-file Roaring bitmaps (no data file rewritten; every
+  * read path masks the recorded positions), RESTORE to a retained
+  * version, and CHECK constraints validated per write delta.
   */
 class LakeDvSpec extends AnyFunSuite {
   private val spark = SparkFixture.spark
@@ -544,27 +544,99 @@ class LakeDvSpec extends AnyFunSuite {
     pf.lift(p).toSeq ++ kids.flatMap(collectPlan(_)(pf))
   }
 
-  test("DV mask is pinned to a BroadcastHashJoin LeftAnti in scan()") {
+  /** The Spark jobs `op` runs: a listener collects the tag of every
+    * job started under a local-property tag, and a marker job run after
+    * `op` shows that all of its events were delivered.
+    */
+  private def jobsOf(op: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.SpanSugar._
+    val sc = spark.sparkContext
+    val key = "graft.test.jobs"
+    val tag = java.util.UUID.randomUUID().toString
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(key))).foreach(seen.add)
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(key, tag)
+      try op finally sc.setLocalProperty(key, null)
+      sc.setLocalProperty(key, s"$tag-marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(key, null)
+      eventually(timeout(30.seconds), interval(50.millis)) {
+        assert(seen.contains(s"$tag-marker"))
+      }
+      seen.toArray.count(_ == tag)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("the DV mask is a per-row filter in scan(): no join, exchange or broadcast") {
     val t = table("morbc")
     t.deleteWhereMoR(col("k") % 10 === 0)
     val df = t.scan()
-    df.collect() // finalize AQE
-    val antiJoins = collectPlan(df.queryExecution.executedPlan) {
-      case j: org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
-          if j.joinType == org.apache.spark.sql.catalyst.plans.LeftAnti => j
+    val rows = df.collect() // finalize AQE
+    // a join would need the fact side shuffled or a broadcast exchange
+    // built; the bitmap filter needs neither, whatever the DV size
+    val joinsOrExchanges = collectPlan(df.queryExecution.executedPlan) {
+      case j: org.apache.spark.sql.execution.joins.BaseJoinExec => j
+      case e: org.apache.spark.sql.execution.exchange.Exchange => e
     }
-    // without the explicit broadcast() pin, a sidecar past the
-    // auto-broadcast threshold would degrade this to a full shuffle of
-    // the fact on (file, pos) — the plan shape IS the contract here
-    assert(antiJoins.nonEmpty,
-      s"DV mask must plan as BroadcastHashJoin(LeftAnti); got:\n${df.queryExecution.executedPlan}")
-    val shuffleAnti = collectPlan(df.queryExecution.executedPlan) {
-      case j: org.apache.spark.sql.execution.joins.SortMergeJoinExec
-          if j.joinType == org.apache.spark.sql.catalyst.plans.LeftAnti => j
-      case j: org.apache.spark.sql.execution.joins.ShuffledHashJoinExec
-          if j.joinType == org.apache.spark.sql.catalyst.plans.LeftAnti => j
-    }
-    assert(shuffleAnti.isEmpty, "DV mask must never shuffle the fact side")
+    assert(joinsOrExchanges.isEmpty,
+      s"DV mask must plan no join or exchange; got:\n${df.queryExecution.executedPlan}")
+    assert(rows.map(_.toString).sorted.toSeq ==
+      t.read().collect().map(_.toString).sorted.toSeq)
+    assert(rows.length == 360)
+  }
+
+  test("MoR jobs: a delete runs only its probe, an update two; DVs add no read job") {
+    val t = table("morjobs")
+    val cleanRead = jobsOf(t.read().collect())
+    assert(jobsOf(t.deleteWhereMoR(col("k") % 10 === 0)) == 1)
+    assert(jobsOf(t.updateWhereMoR(col("k") % 10 === 1, Map("v" -> lit(-1L)))) == 2)
+    val maskedRead = jobsOf(t.read().collect())
+    assert(maskedRead <= cleanRead, s"a DV'd read ran $maskedRead jobs, a clean one $cleanRead")
+    assert(t.read().count() == 360 && t.read().filter(col("v") === -1L).count() == 40)
+  }
+
+  test("two MoR deletes on one file mask exactly their union; dvRows counts it") {
+    val t = LakeTable.create(spark, freshDir("union"), kv(1 to 100).coalesce(1), Seq("k"))
+    val Seq(file) = t.fileNames(t.currentVersion)
+    t.deleteWhereMoR(col("k") % 2 === 0)
+    t.deleteWhereMoR(col("k") % 3 === 0) // overlaps the first at k % 6 == 0
+    val live = (1L to 100L).filter(k => k % 2 != 0 && k % 3 != 0)
+    assert(t.read().select("k").as[Long].collect().sorted.toSeq == live)
+    assert(dvFiles(t).size == 2)
+    val v = t.currentVersion
+    // one file of 100 rows in k order: row index = k - 1
+    val masked = (1L to 100L).filterNot(live.contains).map(_ - 1L).toSet
+    assert(graft.lake.LakeTestAccess.maskedPositions(t, v) == Map(file -> masked))
+    assert(graft.lake.LakeTestAccess.dvRows(t, v) == Map(file -> masked.size.toLong))
+    // a delete of only masked rows matches nothing and commits nothing
+    t.deleteWhereMoR(col("k") % 4 === 0)
+    assert(t.currentVersion == v && dvFiles(t).size == 2)
+  }
+
+  test("a manifest naming a legacy parquet DV sidecar fails with a clear error") {
+    val t = table("legacydv")
+    val log = new File(t.path, "_graft_log")
+    val lines = Files.readString(new File(log, "v00000001.manifest").toPath)
+      .split('\n').filter(_.nonEmpty)
+    lines(1) = lines(1).stripSuffix("}") + ""","dv":["dv-0123456789ab.parquet"],"dvRows":1}"""
+    Files.writeString(new File(log, "v00000002.manifest").toPath, lines.mkString("\n"))
+    val e = intercept[IllegalArgumentException](t.read())
+    assert(e.getMessage.contains("dv-0123456789ab.parquet") && e.getMessage.contains("legacy"),
+      e.getMessage)
+  }
+
+  test("DV files keep row positions at and past 2^31 exactly") {
+    val big = Seq(0L, (1L << 31) - 1, 1L << 31, (1L << 31) + 5, 1L << 40, Long.MaxValue)
+    val dv = Map("part-a.parquet" -> big, "part-b.parquet" -> Seq(3L))
+    val back = graft.lake.LakeTestAccess.dvRoundTrip(dv)
+    // equal sets: (1 << 31) + 5 did not come back as its low 31 bits, 5
+    assert(back.map { case (f, ps) => f -> ps.toSet } == dv.map { case (f, ps) => f -> ps.toSet })
   }
 
   test("purgeDeletes repays DV debt above the threshold only") {

@@ -738,9 +738,6 @@ class LakeFileIndexSpec extends AnyFunSuite {
     def tableScans(qe: QueryExecution): Seq[FileSourceScanExec] =
       fileScans(qe.executedPlan)
         .filter(_.relation.location.rootPaths.exists(_.toUri.getPath.startsWith(path)))
-        .filterNot(_.relation.location.rootPaths.forall { p =>
-          p.getName.startsWith("dv-") || p.getParent.getName.startsWith("_staging_dv_")
-        })
     var marker = 0
     def scansOf(op: => Unit): Seq[FileSourceScanExec] = {
       seen.clear()

@@ -45,6 +45,19 @@ class SchemaCanarySpec extends AnyFunSuite {
           "Tables.normalizeEventsTs")
   }
 
+  test("Tables.events leaves the session conf as it found it on timestamp[us] data") {
+    val key = "spark.sql.legacy.parquet.nanosAsLong"
+    val saved = spark.conf.getOption(key)
+    spark.conf.unset(key)
+    try {
+      val before = spark.conf.getAll
+      val events = Tables.events(spark, sf)
+      assert(events.schema("ts").dataType == TimestampType)
+      assert(events.count() > 0)
+      assert(spark.conf.getAll == before)
+    } finally saved.foreach(spark.conf.set(key, _))
+  }
+
   test("events schema matches an encoding the adaptive loader handles") {
     assertCols("events",
       fixed = Map("event_id" -> LongType, "user_id" -> LongType,

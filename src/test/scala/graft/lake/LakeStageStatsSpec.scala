@@ -147,6 +147,36 @@ class LakeStageStatsSpec extends AnyFunSuite {
     assert(assertStatsMatch(t).size === 2)
   }
 
+  test("the writer's own filesystem leaves the session and the JVM's local one as they were") {
+    import org.apache.hadoop.fs.{FileSystem, Path}
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import scala.jdk.CollectionConverters._
+    val hadoopConf = spark.sparkContext.hadoopConfiguration
+    def localFs = FileSystem.get(new java.net.URI("file:///"), hadoopConf).getClass
+    val (confBefore, fsBefore) = (spark.conf.getAll, localFs)
+    val df = rows(0, 300).coalesce(1)
+    val t = LakeTable.create(spark, freshDir("niofs"), df, statsCols)
+    assert(spark.conf.getAll === confBefore)
+    assert(localFs === fsBefore)
+    assertStatsMatch(t)
+    assert(t.read().collect().map(_.toString).sorted.toSeq ===
+      df.collect().map(_.toString).sorted.toSeq)
+    // the footer a stock DataFrame write of the same rows gives
+    val stock = freshDir("niofs_stock")
+    df.write.parquet(stock)
+    def footer(file: String) = {
+      val r = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(file), hadoopConf))
+      try (r.getFooter.getFileMetaData.getSchema, r.getFooter.getBlocks.asScala.toSeq.map(b =>
+        (b.getRowCount, b.getColumns.asScala.toSeq.map(c =>
+          (c.getPath.toDotString, c.getValueCount, c.getStatistics.toString)))))
+      finally r.close()
+    }
+    val Seq(lakeFile) = t.fileNames(t.currentVersion)
+    val stockFile = new File(stock).list((_, n) => n.endsWith(".parquet")).head
+    assert(footer(s"${t.path}/$lakeFile") === footer(s"$stock/$stockFile"))
+  }
+
   test("a v2 dynamic overwrite records the reference stats") {
     val wh = Files.createTempDirectory("graft_stage_stats_wh").toFile
     wh.deleteOnExit()

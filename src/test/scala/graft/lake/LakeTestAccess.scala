@@ -56,11 +56,34 @@ object LakeTestAccess {
   def strPrefixUpper(s: String): Option[String] = LakeTable.prefixUpper(s)
 
   /** Per-file deletion-vector references of a version's manifest
-    * (file name -> sidecar names) — lets specs pin which entries carry
+    * (file name -> DV file names) — lets specs pin which entries carry
     * DV debt without widening the production API.
     */
   def dvEntries(t: LakeTable, version: Int): Map[String, Seq[String]] =
     t.manifest(version).files.map(f => f.name -> f.dv).toMap
+
+  /** Per-file masked-row counts of a version's manifest. */
+  def dvRows(t: LakeTable, version: Int): Map[String, Long] =
+    t.manifest(version).files.map(f => f.name -> f.dvRows).toMap
+
+  /** The row positions each file's DV files mask, read back from disk
+    * and unioned per file (files without a DV absent).
+    */
+  def maskedPositions(t: LakeTable, version: Int): Map[String, Set[Long]] =
+    t.manifest(version).files.filter(_.dv.nonEmpty).map { f =>
+      f.name -> f.dv.flatMap { d =>
+        LakeTable.decodeDv(java.nio.file.Files.readAllBytes(
+          java.nio.file.Paths.get(t.path, d)))(f.name).toArray.toSeq
+      }.toSet
+    }.toMap
+
+  /** Encode per-file positions as a DV file's bytes and decode them. */
+  def dvRoundTrip(dv: Map[String, Seq[Long]]): Map[String, Seq[Long]] =
+    LakeTable.decodeDv(LakeTable.encodeDv(dv.map { case (f, ps) =>
+      val b = new org.roaringbitmap.longlong.Roaring64NavigableMap()
+      ps.foreach(b.addLong)
+      f -> b
+    })).map { case (f, b) => f -> b.toArray.toSeq }
 
   /** boundsOf over a user-facing Column predicate, resolved against
     * `df` exactly the way deleteWhere's candidate pruning does it.
