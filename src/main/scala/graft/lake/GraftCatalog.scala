@@ -430,17 +430,27 @@ private[lake] class LakeDynamicWrite(spark: SparkSession, t: LakeTable,
 
   override def toBatch: org.apache.spark.sql.connector.write.BatchWrite = this
 
-  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-    LakeFileWriter.factory(spark, staging, writeSchema, m.statsCols, m.partitionBy)
+  // the factory's conf broadcast outlives the write job: released at
+  // commit or abort, whichever ends the write
+  private var factory: Option[LakeFileWriterFactory] = None
+
+  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
+    val f = LakeFileWriter.factory(spark, staging, writeSchema, m.statsCols, m.partitionBy)
+    factory = Some(f)
+    f
+  }
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
+    factory.foreach(_.release())
     t.commitDynamicOverwriteStaged(staging,
       messages.toSeq.collect { case w: LakeWriteMessage => w })
     ()
   }
 
-  override def abort(messages: Array[WriterCommitMessage]): Unit =
+  override def abort(messages: Array[WriterCommitMessage]): Unit = {
+    factory.foreach(_.release())
     graft.deleteRecursively(staging)
+  }
 }
 
 /** V1Scan fallback for snapshots the pure-parquet scan cannot serve

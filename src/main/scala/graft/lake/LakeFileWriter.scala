@@ -11,7 +11,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.util.CollationFactory
 import org.apache.spark.sql.connector.write.{DataWriter, DataWriterFactory, WriterCommitMessage}
-import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.graftbridge.LakeWriteBridge
 import org.apache.spark.sql.types._
@@ -57,6 +56,11 @@ private[lake] class LakeFileWriterFactory(stagingDir: String,
       throw t
     } finally w.close()
   }
+
+  /** Drop the Hadoop conf broadcast the tasks read; call once the
+    * job that writes with this factory has ended.
+    */
+  private[lake] def release(): Unit = parquet.release()
 }
 
 /** One task's writer. Rows go to a parquet file through
@@ -139,32 +143,25 @@ private[lake] class LakeFileWriter(stagingDir: String,
 
 private[lake] object LakeFileWriter {
 
-  /** One file's stats for one column, updated per row. They equal what
-    * `min`, `max`, the null count and `hll_sketch_agg(_, HllLgK)` over
-    * the file's rows give, sketch bytes included:
-    *  - integrals, dates (epoch days) and timestamps (epoch micros) are
-    *    widened to the long that [[LakeTable.statLong]] encodes, and
-    *    the sketch takes `update(long)`;
-    *  - strings compare in the column's collation order, and the sketch
-    *    skips empty strings and takes each other value's collation sort
-    *    key, as `hll_sketch_agg` does;
-    *  - the sketch is an HLL_8 sketch of lgK [[LakeTable.HllLgK]],
-    *    finished the way the aggregate's final merge finishes its one
-    *    partial buffer: a `Union` of an empty sketch and it, read out as
-    *    HLL_8 with `toUpdatableByteArray`.
+  /** One column's row count, null count and [min,max] over the rows it
+    * is updated with, as the stats record them: integrals, dates (epoch
+    * days) and timestamps (epoch micros) widened to the long that
+    * [[LakeTable.statLong]] encodes, strings in the column's collation
+    * order. Serializable: a task's partial range [[merge]]s into the
+    * driver's ([[LakeTable.keyRangeOf]]).
     */
-  private[lake] final class ColumnStats(ordinal: Int, t: DataType) {
-    private val sketch = new HllSketch(LakeTable.HllLgK, TgtHllType.HLL_8)
-    private val collation = t match {
+  private[lake] class ColumnRange(ordinal: Int, t: DataType) extends Serializable {
+    @transient protected lazy val collation = t match {
       case s: StringType => CollationFactory.fetchCollation(s.collationId)
       case _ => null
     }
-    private val asLong: InternalRow => Long = t match {
+    @transient private lazy val asLong: InternalRow => Long = t match {
       case ByteType => _.getByte(ordinal).toLong
       case ShortType => _.getShort(ordinal).toLong
       case IntegerType | DateType => _.getInt(ordinal).toLong
       case _ => _.getLong(ordinal)
     }
+    var rows = 0L
     var nulls = 0L
     var lo = Long.MaxValue
     var hi = Long.MinValue
@@ -172,20 +169,63 @@ private[lake] object LakeFileWriter {
     var strLo: UTF8String = _
     var strHi: UTF8String = _
 
-    def update(row: InternalRow): Unit =
+    def update(row: InternalRow): Unit = {
+      rows += 1
       if (row.isNullAt(ordinal)) nulls += 1
-      else if (collation == null) {
-        val v = asLong(row)
-        if (v < lo) lo = v
-        if (v > hi) hi = v
-        sketch.update(v)
-      } else {
-        val s = row.getUTF8String(ordinal)
-        if (strLo == null || collation.comparator.compare(s, strLo) < 0) strLo = s.clone()
-        if (strHi == null || collation.comparator.compare(s, strHi) > 0) strHi = s.clone()
-        if (!collation.equalsFunction.apply(s, UTF8String.EMPTY_UTF8))
-          sketch.update(collation.sortKeyFunction.apply(s))
-      }
+      else if (collation == null) addLong(asLong(row))
+      else addString(row.getUTF8String(ordinal))
+    }
+
+    protected def addLong(v: Long): Unit = {
+      if (v < lo) lo = v
+      if (v > hi) hi = v
+    }
+
+    protected def addString(s: UTF8String): Unit = {
+      if (strLo == null || collation.comparator.compare(s, strLo) < 0) strLo = s.clone()
+      if (strHi == null || collation.comparator.compare(s, strHi) > 0) strHi = s.clone()
+    }
+
+    /** This range widened by `o`'s (same column), in place. */
+    def merge(o: ColumnRange): ColumnRange = {
+      rows += o.rows
+      nulls += o.nulls
+      lo = math.min(lo, o.lo)
+      hi = math.max(hi, o.hi)
+      if (o.strLo != null) addString(o.strLo)
+      if (o.strHi != null) addString(o.strHi)
+      this
+    }
+
+    def isString: Boolean = collation != null
+  }
+
+  /** One file's stats for one column, updated per row: its
+    * [[ColumnRange]] plus an HLL sketch. They equal what `min`, `max`,
+    * the null count and `hll_sketch_agg(_, HllLgK)` over the file's
+    * rows give, sketch bytes included:
+    *  - the sketch takes `update(long)` of a long-encoded value;
+    *  - for strings it skips empty strings and takes each other value's
+    *    collation sort key, as `hll_sketch_agg` does;
+    *  - it is an HLL_8 sketch of lgK [[LakeTable.HllLgK]], finished the
+    *    way the aggregate's final merge finishes its one partial buffer:
+    *    a `Union` of an empty sketch and it, read out as HLL_8 with
+    *    `toUpdatableByteArray`.
+    */
+  private[lake] final class ColumnStats(ordinal: Int, t: DataType)
+      extends ColumnRange(ordinal, t) {
+    private val sketch = new HllSketch(LakeTable.HllLgK, TgtHllType.HLL_8)
+
+    override protected def addLong(v: Long): Unit = {
+      super.addLong(v)
+      sketch.update(v)
+    }
+
+    override protected def addString(s: UTF8String): Unit = {
+      super.addString(s)
+      if (!collation.equalsFunction.apply(s, UTF8String.EMPTY_UTF8))
+        sketch.update(collation.sortKeyFunction.apply(s))
+    }
 
     def hllBytes: Array[Byte] = {
       val u = new Union(LakeTable.HllLgK)
@@ -193,8 +233,6 @@ private[lake] object LakeFileWriter {
       u.update(sketch)
       u.getResult(TgtHllType.HLL_8).toUpdatableByteArray
     }
-
-    def isString: Boolean = collation != null
   }
 
   /** The manifest entry of a file of `rows` (> 0) rows: [min,max] for
@@ -258,14 +296,9 @@ private[lake] object LakeFileWriter {
     val staging = Paths.get(path, s"_staging_$job")
     try {
       val f = factory(spark, staging, laidOut.schema, statsCols, partitionBy)
-      // inside a SQL execution of the frame, as a Dataset action runs:
-      // listeners, SQL metrics and the session conf see the job
-      val qe = laidOut.queryExecution
-      val messages = SQLExecution.withNewExecutionId(qe, Some("lake write")) {
-        qe.executedPlan.execute()
-          .mapPartitionsWithIndex((i, rows) => Iterator.single(f.runTask(i, rows)))
-          .collect()
-      }
+      val messages =
+        try LakeTable.taskResults(laidOut, "lake write")(f.runTask)
+        finally f.release()
       moveIn(path, staging, job, messages.toSeq, bucketBy.nonEmpty).map(_.entry)
     } finally graft.deleteRecursively(staging)
   }

@@ -5,10 +5,11 @@ import java.nio.file.{FileAlreadyExistsException, Files, Paths, StandardCopyOpti
 import java.util.UUID
 
 import scala.collection.mutable
+import scala.reflect.ClassTag
 import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -47,7 +48,8 @@ import graft.functions.{DeletedRows, NotDeleted}
   *    rewrites ONLY files whose per-file key [min,max] — recorded in
   *    the manifest at write time — can contain updated keys; `delete`
   *    rewrites ONLY files that actually contain matching rows (probed
-  *    with one distinct over the rows' `_metadata` file). Untouched
+  *    by one job whose tasks return the `_metadata` file names of
+  *    their matching rows). Untouched
   *    files carry over by reference: at 100 TB a point-merge rewrites
   *    a handful of files, not the table.
   *  - **Time travel**: `readVersion(n)` reads any retained snapshot;
@@ -608,9 +610,7 @@ class LakeTable private (spark: SparkSession, val path: String) {
 
       // affected files: only where some arm actually fires — the
       // copy-on-write bound. File names are control plane (manifest-sized).
-      val affected = j.filter(takesAction)
-        .select(col("_gf_file")).distinct()
-        .collect().map(_.getString(0)).toSet
+      val affected = fileNamesOf(j.filter(takesAction), "lake merge affected files")
       val (consumed, _) = base.files.partition(f => affected(f.name))
 
       // replacement rows for the affected files: drop DELETE-arm rows,
@@ -716,8 +716,13 @@ class LakeTable private (spark: SparkSession, val path: String) {
     val parts = manifest(currentVersion).partitionBy
     if (parts.isEmpty) return overwrite(df)
     val data = df.cache()
+    val tuples = data.select(parts.map(col): _*)
+    val types = tuples.schema.map(_.dataType)
     try replaceWhere(partitionsCond(parts,
-      data.select(parts.map(col): _*).distinct().collect().toSeq.map(_.toSeq)), data)
+      distinctOf(tuples, "lake partition probe")(r => types.indices.map(i =>
+        if (r.isNullAt(i)) null
+        else CatalystTypeConverters.convertToScala(r.get(i, types(i)), types(i)))).toSeq),
+      data)
     finally data.unpersist(blocking = false)
   }
 
@@ -862,9 +867,10 @@ class LakeTable private (spark: SparkSession, val path: String) {
     *     [[commitMutation]]: a file outside the scope can neither hold a
     *     hit row nor invalidate the change.
     *  2. '''Locate.''' `hits` picks the hit rows out of the candidates'
-    *     live rows ([[rowsOf]]). CoW collects the names of the files
-    *     holding them; MoR's probe tasks return their positions as
-    *     per-file Roaring bitmaps, written as ONE deletion-vector file
+    *     live rows ([[rowsOf]]), in ONE job ([[LakeTable.taskResults]]).
+    *     CoW's probe tasks return the names of the files holding them
+    *     (a filter probe runs no shuffle); MoR's return their positions
+    *     as per-file Roaring bitmaps, written as ONE deletion-vector file
     *     ([[writeDv]]) whose cardinalities are the masked-row counts
     *     ([[maskEntries]]).
     *     `hits = None` touches every candidate unprobed (CoW only).
@@ -891,8 +897,7 @@ class LakeTable private (spark: SparkSession, val path: String) {
       else hits.map(_(rowsOf(base, candidates, withId = true)))
     val (touched, masked, dvFile) =
       if (!mor) {
-        val names = hitRows.fold(Set.empty[String])(
-          _.select(col("_gf_file")).distinct().collect().map(_.getString(0)).toSet)
+        val names = hitRows.fold(Set.empty[String])(fileNamesOf(_, "lake hit probe"))
         (if (hits.isEmpty) candidates else candidates.filter(f => names(f.name)),
           Nil, None)
       } else hitRows.flatMap(writeDv) match {
@@ -954,10 +959,8 @@ class LakeTable private (spark: SparkSession, val path: String) {
     * next vacuum, never a corrupt snapshot.
     */
   private def writeDv(hits: DataFrame): Option[(String, Map[String, Long])] = {
-    val qe = hits.select(col("_gf_file"), col("_gf_pos")).queryExecution
-    val union = SQLExecution.withNewExecutionId(qe, Some("lake dv probe")) {
-      qe.executedPlan.execute().mapPartitions(rows => Iterator(LakeTable.dvOfRows(rows))).collect()
-    }.flatten.groupMapReduce(_._1)(_._2)(or)
+    val union = taskResults(hits.select(col("_gf_file"), col("_gf_pos")), "lake dv probe")(
+      (_, rows) => dvOfRows(rows)).flatten.groupMapReduce(_._1)(_._2)(or)
     if (union.isEmpty) return None
     val name = s"dv-${LakeFileWriter.newJob()}.bin"
     val tmp = Paths.get(path, s"_staging_$name")
@@ -985,30 +988,24 @@ class LakeTable private (spark: SparkSession, val path: String) {
 
   /** The scope of a merge: the source key range as a manifest-stats
     * overlap predicate, in the SAME encoding the stats use (micros for
-    * timestamp keys, days for dates, truncated UTF-8 for strings — a
+    * timestamp keys, days for dates, strings in collation order — a
     * bare cast("long") would give seconds for timestamps and silently
-    * mis-prune; stats are keyed by PHYSICAL name). Validates a
+    * mis-prune; stats are keyed by PHYSICAL name). The range is ONE job
+    * whose tasks return their partial min, max, row and null counts
+    * ([[LakeTable.keyRangeOf]]), not an aggregate's two. Validates a
     * non-empty, not-all-NULL-key source up front.
     */
-  private def mergeKeyRange(updates: DataFrame, keyCol: String,
+  private[lake] def mergeKeyRange(updates: DataFrame, keyCol: String,
       base: Manifest): FileEntry => Boolean = {
-    val schema = base.schema
     val physKey = base.physOf(keyCol)
-    val keyIsString = schema(keyCol).dataType == StringType
-    val keyEnc =
-      if (keyIsString) col(keyCol)
-      else LakeTable.statLong(keyCol, schema(keyCol).dataType)
-    val range = updates.agg(min(keyEnc), max(keyEnc), count(lit(1))).head()
-    require(range.getLong(2) > 0, "merge with an empty updates frame")
-    require(!range.isNullAt(0),
+    val range = keyRangeOf(updates, keyCol)
+    require(range.rows > 0, "merge with an empty updates frame")
+    require(range.nulls < range.rows,
       s"merge updates have only NULL $keyCol keys — nothing to match on")
-    if (keyIsString) {
-      val (lo, hi) = (Some(range.getString(0)), Some(range.getString(1)))
+    if (range.isString) {
+      val (lo, hi) = (Some(range.strLo.toString), Some(range.strHi.toString))
       f => f.strOverlaps(physKey, lo, hi)
-    } else {
-      val (lo, hi) = (range.getLong(0), range.getLong(1))
-      f => f.overlaps(physKey, lo, hi)
-    }
+    } else f => f.overlaps(physKey, range.lo, range.hi)
   }
 
   /** The scope of a condition: a file can hold a row matching `cond`
@@ -1959,6 +1956,51 @@ object LakeTable {
     val dv = mutable.Map.empty[String, Roaring64NavigableMap]
     rows.foreach(r => dv.getOrElseUpdate(r.getString(0), new Roaring64NavigableMap()).addLong(r.getLong(1)))
     dv.toMap
+  }
+
+  /** Run `df`'s executed plan as ONE Spark job, inside a SQL execution
+    * named `name` as a Dataset action runs (listeners, SQL metrics and
+    * the session conf see the job), and return what `task` makes of
+    * each partition's rows, in partition order. No shuffle is added: a
+    * task result replaces the aggregate and the collect AQE would plan
+    * as two jobs.
+    */
+  private[lake] def taskResults[T: ClassTag](df: DataFrame, name: String)(
+      task: (Int, Iterator[InternalRow]) => T): Array[T] = {
+    val qe = df.queryExecution
+    SQLExecution.withNewExecutionId(qe, Some(name)) {
+      qe.executedPlan.execute()
+        .mapPartitionsWithIndex((i, rows) => Iterator.single(task(i, rows)))
+        .collect()
+    }
+  }
+
+  /** The distinct values `get` reads off `df`'s rows ([[taskResults]]:
+    * each task returns its own set, the driver unions them).
+    */
+  private[lake] def distinctOf[T](df: DataFrame, name: String)(
+      get: InternalRow => T): Set[T] =
+    taskResults(df, name)((_, rows) => rows.map(get).toSet).foldLeft(Set.empty[T])(_ ++ _)
+
+  /** The distinct `_gf_file` names of a DML probe's rows. */
+  private def fileNamesOf(rows: DataFrame, name: String): Set[String] =
+    distinctOf(rows.select(col("_gf_file")), name)(_.getString(0))
+
+  /** The null count and [min,max] of `keyCol` over `updates` ([[taskResults]]:
+    * each task returns its partial [[LakeFileWriter.ColumnRange]], the
+    * driver merges them), in the manifest stats encoding. A key type
+    * that carries no stats contributes only its counts.
+    */
+  private[lake] def keyRangeOf(updates: DataFrame, keyCol: String): LakeFileWriter.ColumnRange = {
+    val t = updates.schema(keyCol).dataType
+    val key = if (isStatsType(t)) col(keyCol) else when(col(keyCol).isNotNull, lit(0L))
+    val keys = updates.select(key)
+    val keyType = keys.schema.head.dataType
+    taskResults(keys, "lake merge key range") { (_, rows) =>
+      val r = new LakeFileWriter.ColumnRange(0, keyType)
+      rows.foreach(r.update)
+      r
+    }.foldLeft(new LakeFileWriter.ColumnRange(0, keyType))(_ merge _)
   }
 
   /** Default vacuum grace for never-referenced files — long enough that

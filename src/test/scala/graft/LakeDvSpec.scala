@@ -601,6 +601,45 @@ class LakeDvSpec extends AnyFunSuite {
     assert(t.read().count() == 360 && t.read().filter(col("v") === -1L).count() == 40)
   }
 
+  test("DML jobs: a CoW delete or update probes in one job; a merge's key range is one job") {
+    val t = table("dmljobs")
+    assert(jobsOf(t.deleteWhere(col("k") % 10 === 0)) == 2)
+    assert(jobsOf(t.updateWhere(col("k") % 10 === 1, Map("v" -> lit(-1L)))) == 2)
+    // a source the optimizer cannot fold into a local relation, so its
+    // key range and its match probe each run in a job
+    def upserts(from: Long) =
+      spark.range(from, from + 20).select(col("id").as("k"), lit(-2L).as("v"))
+    val merge = jobsOf(t.merge(upserts(390), "k"))
+    assert(merge <= 3, s"merge ran $merge jobs")
+    val mergeMoR = jobsOf(t.mergeMoR(upserts(10), "k"))
+    assert(mergeMoR <= 4, s"mergeMoR ran $mergeMoR jobs")
+    // 360 survivors, keys 390, 400, 10, 20 and 401..409 inserted
+    assert(t.read().count() == 373 && t.read().filter(col("v") === -2L).count() == 40)
+    assert(t.read().filter(col("v") === -1L).count() == 37)
+  }
+
+  test("a general merge's affected files and a dynamic overwrite's partitions are one job each") {
+    val t = table("genjobs")
+    val general = jobsOf(t.mergeGeneral(
+      spark.range(395, 405).select(col("id").as("_src_k"), lit(9L).as("_src_w")),
+      col("k") === col("_src_k"),
+      Seq(None -> graft.lake.MergeArm.Update(Map("v" -> col("_src_w")))),
+      Seq(None -> Map("k" -> col("_src_k"), "v" -> col("_src_w"))), Nil))
+    assert(general == 10, s"mergeGeneral ran $general jobs")
+    assert(t.read().count() == 404 && t.read().filter(col("v") === 9L).count() == 10)
+
+    val p = LakeTable.create(spark, freshDir("dynjobs"),
+      kv(1 to 400).withColumn("p", (col("k") % 4).cast("int")).repartition(2),
+      Seq("k"), Seq("p"))
+    val dynamic = jobsOf(p.overwritePartitionsDynamic(
+      spark.range(1000, 1100).select(col("id").as("k"), lit(0L).as("v"),
+        (col("id") % 2).cast("int").as("p"))))
+    // the partition tuples, the hit probe and the write
+    assert(dynamic == 3, s"overwritePartitionsDynamic ran $dynamic jobs")
+    // partitions 0 and 1 replaced by the 100 new rows, 2 and 3 kept
+    assert(p.read().count() == 300 && p.read().filter(col("k") >= 1000L).count() == 100)
+  }
+
   test("two MoR deletes on one file mask exactly their union; dvRows counts it") {
     val t = LakeTable.create(spark, freshDir("union"), kv(1 to 100).coalesce(1), Seq("k"))
     val Seq(file) = t.fileNames(t.currentVersion)

@@ -177,6 +177,49 @@ class LakeStageStatsSpec extends AnyFunSuite {
     assert(footer(s"${t.path}/$lakeFile") === footer(s"$stock/$stockFile"))
   }
 
+  test("the writer ships no Hadoop conf in its tasks; no conf broadcast outlives a write") {
+    import org.apache.spark.SparkEnv
+    import org.apache.spark.sql.graftbridge.WriterConfBlocks
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.SpanSugar._
+    // a destroyed broadcast leaves the block manager asynchronously
+    def settlesAt(ids: Set[Long]): Unit =
+      eventually(timeout(30.seconds), interval(50.millis)) { assert(WriterConfBlocks.ids() === ids) }
+    val before = WriterConfBlocks.ids()
+    val data = rows(0, 300)
+    val f = LakeFileWriter.factory(spark, Files.createTempDirectory("graft_stage_conf"),
+      data.schema, statsCols, Seq("p"))
+    try {
+      val closure = SparkEnv.get.closureSerializer.newInstance().serialize(f).limit()
+      assert(closure < 16 * 1024, s"a writer task closure is $closure bytes")
+      assert((WriterConfBlocks.ids() -- before).size === 1, "the conf ships as one broadcast")
+    } finally f.release()
+    settlesAt(before)
+
+    val t = LakeTable.create(spark, freshDir("conf"), data.repartition(2), statsCols, Seq("p"))
+    t.append(rows(300, 200).repartition(3))
+    settlesAt(before)
+
+    val wh = Files.createTempDirectory("graft_stage_conf_wh").toFile
+    wh.deleteOnExit()
+    spark.conf.set("spark.sql.catalog.graft_conf", "graft.lake.GraftCatalog")
+    spark.conf.set("spark.sql.catalog.graft_conf.warehouse", wh.getAbsolutePath)
+    val dyn = LakeTable.create(spark, s"${wh.getAbsolutePath}/dyn", data.repartition(2),
+      statsCols, Seq("p"))
+    rows(5000, 400).writeTo("graft_conf.dyn").overwritePartitions()
+    assert(dyn.history().last.operation === "overwrite-dynamic")
+    settlesAt(before)
+    val v = dyn.currentVersion
+    // a failing writer task aborts the write
+    intercept[Exception] {
+      rows(6000, 400).withColumn("k",
+        when(col("k") === 6100L, raise_error(lit("boom"))).otherwise(col("k")))
+        .writeTo("graft_conf.dyn").overwritePartitions()
+    }
+    assert(dyn.currentVersion === v)
+    settlesAt(before)
+  }
+
   test("a v2 dynamic overwrite records the reference stats") {
     val wh = Files.createTempDirectory("graft_stage_stats_wh").toFile
     wh.deleteOnExit()
